@@ -62,7 +62,7 @@ from pdf_knowledge_extractor_spark.plans.pipeline import (
     PipelineConfig,
     run_pipeline,
 )
-from pdf_knowledge_extractor_spark.session import get_spark
+from pdf_knowledge_extractor_spark.session import default_cpus, get_spark
 
 # headline per-operator queries (similar_pairs excluded here: the
 # driver documents table has a 24-word vocabulary, making all-pairs
@@ -114,7 +114,7 @@ CORPUS_ROWS_ORDER = (
 
 def _env():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
     corpus_rows = int(
         os.environ.get("PKE_BENCH_CORPUS_ROWS", str(int(500_000 * sf)))

@@ -3,16 +3,19 @@
 All four standard flavors, DataFrame-first:
 
 - exact: md5 fingerprint of normalized text (groupBy — one shuffle)
-- n-gram Jaccard (exact): word-shingle posting-list self-join
-- MinHash + LSH banding: shingle -> K minhashes -> bands -> bucket
-  join -> candidate pairs -> exact Jaccard verify. All column
-  expressions (xxhash64 with per-function salts); no UDFs, no ML fit.
+- n-gram Jaccard (exact): word-shingle posting-list self-join, or
+  prefix-pair candidates on large posting lists
+- MinHash + LSH banding: shingle -> K minhashes -> bands -> one
+  aggregate per (band, band_hash) bucket that emits the candidate
+  pairs -> exact Jaccard verify. All column expressions (xxhash64
+  with per-function salts); no UDFs, no ML fit.
 - SimHash: 64-bit signature from per-token hash bits weighted by tf;
   hamming-ball candidates via band equality.
 
-Scale design: every join is an equi-join on a hash/bucket key;
-banding keys are (band_id, band_hash) so hot buckets can be salted or
-capped; the verify step touches only candidates. MinHash signatures
+Scale design: candidates come from equi-joins or aggregates on a
+hash/bucket key; a MinHash bucket over the cap emits a star or
+nothing; the verify step (``_verify_jaccard``, shared by MinHash and
+the n-gram prefix path) touches only candidates. MinHash signatures
 use the standard min-over-permutations estimator (Broder '97).
 """
 
@@ -241,15 +244,74 @@ def ngram_jaccard_pairs(
             .filter(F.col("doc1_id") < F.col("doc2_id"))
             .select("doc1_id", "doc2_id")
         )
-    candidates = candidates.repartition(F.col("doc1_id")).dropDuplicates(
-        ["doc1_id", "doc2_id"]
+    # cached: the verify reads the candidates three times (the pairs
+    # and the doc ids that bound each side's shingle arrays)
+    candidates = (
+        candidates.repartition(F.col("doc1_id"))
+        .dropDuplicates(["doc1_id", "doc2_id"])
+        .persist()
     )
-    # exact verify on the candidates: sorted shingle-string arrays,
-    # intersection size via array_intersect — no count aggregation
-    # over the pair fan-out, and sz falls out of the array length
-    sets = posts.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list("shingle")).alias("_sh")
+    return _finalize(
+        _verify_jaccard(candidates, threshold, posts=posts), candidates
     )
+
+
+def _bucket_pairs(banded: DataFrame, max_bucket_size: int | None,
+                  hot_bucket_mode: str) -> DataFrame:
+    """Candidate (doc1_id, doc2_id) pairs, duplicates included, from
+    banded (doc_id, band, band_hash) rows.
+
+    One aggregate gathers each bucket's sorted member list, and the
+    pairs are generated from it in place: member i pairs with every
+    later member (``slice``). A bucket over ``max_bucket_size`` emits
+    only its first member's row — the star on the bucket minimum — in
+    "star" mode and nothing in "drop" mode, so the cap decision needs
+    no separate census or join back to the banded rows."""
+    buckets = (
+        banded.groupBy("band", "band_hash")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("_m"))
+        .filter(F.size("_m") > 1)
+    )
+    members = buckets.select("_m", F.posexplode("_m").alias("_i", "doc1_id"))
+    if max_bucket_size is not None:
+        under = F.size("_m") <= max_bucket_size
+        members = members.filter(
+            under if hot_bucket_mode == "drop" else under | (F.col("_i") == 0)
+        )
+    later = F.slice("_m", F.col("_i") + 2, F.size("_m") - F.col("_i") - 1)
+    return (
+        members.select("doc1_id", F.explode(later).alias("doc2_id"))
+        # equal ids (a doc id repeated in the input) pair with nothing
+        .filter(F.col("doc1_id") < F.col("doc2_id"))
+    )
+
+
+def _verify_jaccard(candidates: DataFrame, threshold: float, *,
+                    sets: DataFrame | None = None,
+                    posts: DataFrame | None = None) -> DataFrame:
+    """Exact Jaccard of distinct candidate pairs: (doc1_id, doc2_id,
+    inter, sz1, sz2, jaccard) with jaccard >= ``threshold``.
+
+    The shingles come either as ``sets`` — (doc_id, _sh), each doc's
+    distinct shingles as an array — or as distinct (doc_id, shingle)
+    ``posts``. Postings are first cut to the candidates' docs with a
+    left-semi join and only then collected into sorted arrays, so the
+    collect is bounded by the candidate docs, not the corpus; the
+    semi join reads the candidates again, so the caller caches them.
+    ``sets`` are joined whole: on the 600-row dedup benchmark (4 vCPUs)
+    a semi join there added 8 Spark jobs and ~2.5 s to MinHash's 6.7 s.
+    The intersection size comes from ``array_intersect`` on the pair's
+    two arrays — no count aggregate over a pair x shingle fan-out — and
+    each size from the array length."""
+    if sets is None:
+        ids = candidates.select(
+            F.explode(F.array("doc1_id", "doc2_id")).alias("doc_id")
+        )
+        sets = (
+            posts.join(ids, "doc_id", "left_semi")
+            .groupBy("doc_id")
+            .agg(F.array_sort(F.collect_list("shingle")).alias("_sh"))
+        )
     s1 = sets.select(F.col("doc_id").alias("doc1_id"),
                      F.col("_sh").alias("_sh1"))
     s2 = sets.select(F.col("doc_id").alias("doc2_id"),
@@ -272,31 +334,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    posts: DataFrame, num_hashes: int = 64
-) -> DataFrame:
-    """(doc_id, sig: array<long>) — k minhashes per doc via
-    min(xxhash64(shingle, seed_k)).
-
-    One groupBy(doc) gathers the shingle set; the K signatures are
-    array expressions over it (sig[k] = array_min(xxhash64(s, k))) —
-    no K-fold explode, so the shuffle moves each shingle ONCE instead
-    of K times (the 64x row blowup was the dominant cost of the old
-    two-groupBy plan; same fix as similarity.minhash_blocked_cosine_
-    pairs). Output is bit-identical to the exploded version: the same
-    xxhash64(shingle, k) values feed the same min."""
-    shingle_sets = posts.groupBy("doc_id").agg(
-        F.collect_list("shingle").alias("_sh")
-    )
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda k: F.array_min(
-            F.transform(F.col("_sh"), lambda s: F.xxhash64(s, k))
-        ),
-    )
-    return shingle_sets.select("doc_id", sig.alias("sig"))
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
@@ -314,16 +351,18 @@ def minhash_lsh_pairs(
     sets. Precision exact; recall = 1-(1-t^r)^b (t=0.8, r=4, b=16:
     0.9997).
 
-    Shuffle budget: the per-doc shingle SET stays an array column —
-    signatures and band hashes are narrow array expressions over it
-    (the K-minhash signature is materialized behind a single-element
-    explode barrier first: interpreted HOF eval has no common-
-    subexpression elimination, so the 16 band hashes would otherwise
-    each recompute all 64 minhashes). Shuffles: the banding equi-join
-    on (band, band_hash) carrying ids only, then the exact-Jaccard
-    posting verify restricted to DOCS THAT SURVIVED BANDING — on a
-    mostly-unique corpus that is a tiny fraction of the posting list
-    the old plan exploded for the whole corpus.
+    Plan: the per-doc shingle SET stays an array column and is
+    persisted — signatures and band hashes are narrow array
+    expressions over it (the K-minhash signature is materialized
+    behind a single-element explode barrier first: interpreted HOF
+    eval has no common-subexpression elimination, so the 16 band
+    hashes would otherwise each recompute all 64 minhashes). Then ONE
+    aggregate on (band, band_hash) gathers each bucket's members and
+    emits the candidate pairs (``_bucket_pairs``), one exchange on
+    doc1_id dedups them, and each pair joins the shingle arrays of its
+    two docs for the exact verify (``_verify_jaccard``). The cap needs
+    no census, broadcast or join of its own: each bucket sees its own
+    size.
 
     ``max_bucket_size``: the quadratic failure mode of banding is a
     DEGENERATE bucket — a band hash shared by thousands of docs
@@ -347,8 +386,13 @@ def minhash_lsh_pairs(
       fragments true dup families whose texts differ (mutated
       boilerplate), leaving only exact-fingerprint recovery.
 
+    A hot bucket's member list is still gathered whole, so the cap
+    bounds the pairs, not that list.
+
     None (default cap) keeps full banding recall for the oracle gate;
     set a few hundred at 100-TB scale."""
+    if max_bucket_size is not None and hot_bucket_mode not in ("star", "drop"):
+        raise ValueError(f"unknown hot_bucket_mode: {hot_bucket_mode!r}")
     rows_per_band = num_hashes // bands
     sets = _spread_input(docs).select(
         F.col(id_col).alias("doc_id"),
@@ -382,97 +426,19 @@ def minhash_lsh_pairs(
         .withColumnRenamed("pos", "band")
         .withColumnRenamed("col", "band_hash")
     )
-    star_parts = []
-    released = []
-    if max_bucket_size is not None:
-        if hot_bucket_mode not in ("star", "drop"):
-            raise ValueError(f"unknown hot_bucket_mode: {hot_bucket_mode!r}")
-        # cache the narrow banded rows: census, anti-join and (in star
-        # mode) the representative join all read them
-        banded = banded.persist()
-        released.append(banded)
-        hot_buckets = (
-            banded.groupBy("band", "band_hash")
-            .count()
-            .filter(F.col("count") > max_bucket_size)
-            .select("band", "band_hash")
-        )
-        if hot_bucket_mode == "star":
-            hot_members = banded.join(
-                F.broadcast(hot_buckets), ["band", "band_hash"], "left_semi"
-            )
-            reps = hot_members.groupBy("band", "band_hash").agg(
-                F.min("doc_id").alias("_rep")
-            )
-            star_parts.append(
-                hot_members.join(F.broadcast(reps), ["band", "band_hash"])
-                .filter(F.col("doc_id") != F.col("_rep"))
-                .select(
-                    F.least("doc_id", "_rep").alias("doc1_id"),
-                    F.greatest("doc_id", "_rep").alias("doc2_id"),
-                )
-            )
-        banded = banded.join(
-            F.broadcast(hot_buckets), ["band", "band_hash"], "left_anti"
-        )
-    b1 = banded.select(F.col("doc_id").alias("doc1_id"), "band", "band_hash")
-    b2 = banded.select(F.col("doc_id").alias("doc2_id"), "band", "band_hash")
-    # shuffle-hash the band self-join (build = narrow banded rows per
-    # partition) and dedup via ONE exchange on doc1_id — partitioning
-    # on a subset of the pair key co-locates every copy of a pair and
-    # pre-positions the pairs for the doc1-keyed verify join below;
-    # distinct() + join would exchange (and sort-merge SORT) the raw
-    # pair stream twice. Same fix as similarity._dedup_pairs, where
-    # the 1.2M octave profile measured the sorts as 15-17 GB of disk
-    # spill that serialized on the shared disk.
+    # ONE exchange on doc1_id dedups the pairs (every copy of a pair
+    # lands in one partition) and pre-positions them for the
+    # doc1-keyed verify join
     candidates = (
-        b1.join(b2.transform(hinted), ["band", "band_hash"])
-        .filter(F.col("doc1_id") < F.col("doc2_id"))
-        .select("doc1_id", "doc2_id")
-    )
-    for part in star_parts:
-        candidates = candidates.unionByName(part)
-    candidates = (
-        candidates.repartition(F.col("doc1_id"))
+        _bucket_pairs(banded, max_bucket_size, hot_bucket_mode)
+        .repartition(F.col("doc1_id"))
         .dropDuplicates(["doc1_id", "doc2_id"])
-        .persist()
     )
-    # exact verify on candidates only: posting join over the shingle
-    # lists of candidate docs (map-side count agg bounds the shuffle
-    # by shared shingles, never full arrays per pair)
-    cand_docs = (
-        candidates.select(F.col("doc1_id").alias("doc_id"))
-        .unionByName(candidates.select(F.col("doc2_id").alias("doc_id")))
-        .distinct()
-    )
-    cand_sets = sets.join(cand_docs, "doc_id")
-    posts = cand_sets.select("doc_id", F.explode("_sh").alias("shingle"))
-    sizes = cand_sets.select("doc_id", F.size("_sh").alias("sz"))
-    a = posts.select(F.col("doc_id").alias("doc1_id"), "shingle")
-    b = posts.select(F.col("doc_id").alias("doc2_id"), "shingle")
-    # stream the wide pair x shingle intermediate through hash joins
-    # (build = the bounded candidate-doc posting slices) instead of
-    # sorting it for a merge join
-    inter = (
-        candidates.join(a.transform(hinted), "doc1_id")
-        .join(b.transform(hinted), ["doc2_id", "shingle"])
-        .groupBy("doc1_id", "doc2_id")
-        .agg(F.count("*").alias("inter"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("doc1_id"), F.col("sz").alias("sz1"))
-    s2 = sizes.select(F.col("doc_id").alias("doc2_id"), F.col("sz").alias("sz2"))
     return _finalize(
-        inter.join(s1.transform(hinted), "doc1_id")
-        .join(s2.transform(hinted), "doc2_id")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz1") + F.col("sz2") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc1_id", "doc2_id", "jaccard"),
+        _verify_jaccard(candidates, threshold, sets=sets).select(
+            "doc1_id", "doc2_id", "jaccard"
+        ),
         sets,
-        candidates,
-        *released,
     )
 
 
@@ -595,7 +561,9 @@ def simhash_near_dup_pairs(
     blocks give 128-256 values per block, measured 5.6x fewer
     candidate pairs at the 50k-doc driver table (4.32e9 -> 0.77e9)
     for the identical output. Pass a smaller ``bands`` to trade
-    recall for fewer candidates at scale.
+    recall for fewer candidates at scale. With ``bands`` left to its
+    default, ``max_hamming >= 64`` raises ValueError: 64 one-bit
+    blocks cannot hold the pigeonhole for it.
 
     Scale note: candidates per block scale with sum over bucket values
     of n_v^2 — wider blocks spread docs over more values. At 100-TB
@@ -604,7 +572,14 @@ def simhash_near_dup_pairs(
     degenerate buckets (boilerplate clusters belong to the
     exact-fingerprint path)."""
     if bands is None:
-        bands = min(max_hamming + 1, 64)
+        if max_hamming >= 64:
+            # the pigeonhole needs max_hamming + 1 blocks of >= 1 bit;
+            # 64 blocks would silently miss pairs at distance 64
+            raise ValueError(
+                f"max_hamming={max_hamming} needs more than 64 blocks; "
+                "use max_hamming <= 63 or pass bands explicitly"
+            )
+        bands = max_hamming + 1
     sigs = simhash_signatures(docs, id_col, text_col, hash_fn).persist()
     blk_vals = F.array(
         *[_block_value(s, w) for s, w in _block_layout(bands)]

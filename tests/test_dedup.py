@@ -4,6 +4,7 @@ Jaccard, SimHash near-dup detection."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from pdf_knowledge_extractor_spark.operators.dedup import (
     exact_duplicates,
@@ -84,6 +85,24 @@ def test_simhash_finds_near_dups(spark, small_corpus):
     assert found >= 0.9, f"simhash found only {found:.2f} of strong near-dups"
 
 
+# 20 identical boilerplate docs (one degenerate bucket per band) + 2
+# distinct near-dup docs
+HOT_BUCKET_ROWS = [
+    (i, "alpha beta gamma delta epsilon zeta eta theta") for i in range(20)
+] + [
+    (100, "red green blue cyan magenta yellow black white"),
+    (101, "red green blue cyan magenta yellow black gray"),
+]
+
+
+def _hot_bucket_docs(spark):
+    return spark.createDataFrame(HOT_BUCKET_ROWS, "doc_id long, text string")
+
+
+def _pairs(df):
+    return {(r["doc1_id"], r["doc2_id"]) for r in df.collect()}
+
+
 def test_minhash_bucket_cap(spark):
     """max_bucket_size bounds degenerate band buckets (the |bucket|^2
     candidate blowup guard) without touching normal pairs. Default
@@ -97,14 +116,7 @@ def test_minhash_bucket_cap(spark):
         minhash_lsh_pairs,
     )
 
-    # 20 identical boilerplate docs (one degenerate bucket) + 2
-    # distinct near-dup docs
-    rows = [(i, "alpha beta gamma delta epsilon zeta eta theta") for i in range(20)]
-    rows += [
-        (100, "red green blue cyan magenta yellow black white"),
-        (101, "red green blue cyan magenta yellow black gray"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = _hot_bucket_docs(spark)
 
     uncapped = minhash_lsh_pairs(docs, threshold=0.5)
     n_unc = uncapped.count()
@@ -159,3 +171,45 @@ def test_ngram_prefix_path_matches_direct(spark, small_corpus, monkeypatch):
         assert prefix == direct, (
             f"prefix path diverged from direct at t={t}"
         )
+
+
+def test_minhash_hot_bucket_modes_exact(spark):
+    """Over-cap buckets: star mode emits exactly the star on the bucket
+    minimum, drop mode exactly nothing, and under-cap buckets their
+    full pair list in both."""
+    docs = _hot_bucket_docs(spark)
+    star = minhash_lsh_pairs(docs, threshold=0.5, max_bucket_size=10)
+    assert _pairs(star) == {(0, i) for i in range(1, 20)} | {(100, 101)}
+    drop = minhash_lsh_pairs(
+        docs, threshold=0.5, max_bucket_size=10, hot_bucket_mode="drop"
+    )
+    assert _pairs(drop) == {(100, 101)}
+
+
+def test_minhash_jaccard_is_exact(spark):
+    """Every emitted jaccard equals the 3-word-shingle Jaccard of the
+    two docs, recomputed in Python."""
+    text = dict(HOT_BUCKET_ROWS)
+
+    def shingles(doc_id):
+        w = text[doc_id].split(" ")
+        return {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}
+
+    docs = _hot_bucket_docs(spark)
+    for cap in (None, 10):
+        rows = minhash_lsh_pairs(
+            docs, threshold=0.5, max_bucket_size=cap
+        ).collect()
+        assert rows
+        for r in rows:
+            a, b = shingles(r["doc1_id"]), shingles(r["doc2_id"])
+            assert r["jaccard"] == len(a & b) / len(a | b), r
+
+
+def test_simhash_rejects_unblockable_hamming(spark):
+    """64 one-bit blocks cannot cover a distance of 64 by pigeonhole:
+    with bands defaulted the operator refuses instead of silently
+    missing pairs."""
+    docs = _hot_bucket_docs(spark)
+    with pytest.raises(ValueError, match="max_hamming"):
+        simhash_near_dup_pairs(docs, max_hamming=64)
