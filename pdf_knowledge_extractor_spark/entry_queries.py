@@ -1249,7 +1249,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     km = keyword_mentions(d)
     t = tfidf_longform(km.select("doc_id", "text"), n_docs=d.count())
     vectors = to_ml_vectors(t, vocab_size=1 << 12)
-    assignments, _, _ = cluster_documents(vectors, k=5)
+    assignments, _, _ = cluster_documents(vectors, k=5, evaluate=False)
     return assignments.agg(
         F.countDistinct("cluster_id").cast("long").alias("n_clusters"),
         F.count("*").alias("n_assignments"),
@@ -1273,7 +1273,7 @@ def q_kmeans_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     km = keyword_mentions(d)
     t = tfidf_longform(km.select("doc_id", "text"), n_docs=d.count()).persist()
     vectors = to_ml_vectors(t, vocab_size=1 << 12)
-    assignments, _, _ = cluster_documents(vectors, k=5)
+    assignments, _, _ = cluster_documents(vectors, k=5, evaluate=False)
     return (
         cluster_summaries(assignments, t)
         .select(

@@ -73,7 +73,7 @@ def foreign_compute_procs(sample_s: float = 0.25) -> list[str]:
             continue
         low = cmd.lower()
         if any(k in low for k in ("pyspark", "pytest", "org.apache.spark",
-                                  "bench_", "duckdb", "memory_pin")):
+                                  "bench_", "duckdb")):
             suspects[pid] = cmd.strip()[:120]
     if not suspects:
         return []

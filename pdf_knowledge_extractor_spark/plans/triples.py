@@ -288,12 +288,17 @@ def cluster_triples(assignments: DataFrame) -> DataFrame:
     )
 
 
-def write_triples(triples: DataFrame, path: str, n_buckets: int = 32) -> None:
-    """Partition by pred; within a pred, repartition on subj so triple
-    files co-locate by subject (the parquet analog of
-    partitionedBy(pred, bucket(subj)) on Iceberg)."""
+def write_triples(triples: DataFrame, path: str) -> None:
+    """Write ``triples`` as parquet partitioned by pred.
+
+    Rows are hash-clustered on (pred, subj), so every (pred, subj)
+    lands in exactly one file (the parquet analog of
+    partitionedBy(pred, bucket(subj)) on Iceberg). The number of files
+    per pred is not fixed: AQE coalesces the shuffle to the data's
+    size (with AQE off, ``spark.sql.shuffle.partitions`` sets it), so
+    a small input is written as a few files per pred."""
     (
-        triples.repartition(n_buckets, "pred", "subj")
+        triples.repartition("pred", "subj")
         .write.mode("overwrite")
         .partitionBy("pred")
         .parquet(path)

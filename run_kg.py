@@ -113,16 +113,13 @@ def main() -> None:
             id_col=args.id_col, text_col=args.text_col,
             lang_col=args.lang_col,
         )
-        triples = res["triples"]
-        n = triples.count()
-        triples.write.mode("overwrite").partitionBy("pred").parquet(args.output)
     else:
         res = run_pipeline(
             spark, docs, cfg, id_col=args.id_col, text_col=args.text_col,
             lang_col=args.lang_col,
         )
-        write_triples(res["triples"], args.output)
-        n = spark.read.parquet(args.output).count()
+    write_triples(res["triples"], args.output)
+    n = spark.read.parquet(args.output).count()
     dt = time.perf_counter() - t0
     print(json.dumps({
         "triples": n,

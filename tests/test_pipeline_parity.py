@@ -130,12 +130,22 @@ def test_triples_partitioned_write_roundtrip(spark, tmp_path, pipeline_result):
     from pdf_knowledge_extractor_spark.plans.triples import write_triples
 
     out = str(tmp_path / "triples")
-    write_triples(pipeline_result["triples"], out, n_buckets=4)
+    write_triples(pipeline_result["triples"], out)
     back = spark.read.parquet(out)
     assert back.count() == pipeline_result["triples"].count()
     # partitioned by pred
     preds = {r["pred"] for r in back.select("pred").distinct().collect()}
     assert "contains" in preds and "similar_to" in preds
+    # clustered on (pred, subj): each subject of a pred sits in one file
+    files = back.select("pred", "subj", F.col("_metadata.file_path").alias("f"))
+    spread = files.groupBy("pred", "subj").agg(
+        F.countDistinct("f").alias("n")
+    )
+    assert spread.filter(F.col("n") != 1).count() == 0
+    # the file count follows the shuffle size, not a fixed bucket count
+    per_pred = files.groupBy("pred").agg(F.countDistinct("f").alias("n"))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert per_pred.agg(F.max("n")).first()[0] <= cap
 
 
 def test_snapshot_stamp_duplicate_sensitive(spark):
