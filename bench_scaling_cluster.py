@@ -31,15 +31,12 @@ MAX_BUCKET = int(os.environ.get("PKE_SCALE_MAX_BUCKET", "400")) or None
 # "drop" (round-3 behavior, the attribution-comparable setting)
 HOT_MODE = os.environ.get("PKE_SCALE_HOT_MODE", "verify")
 # banding-signature head-term treatment: "auto" (the round-6 engine
-# DEFAULT — probe-verified stop-list), an absolute df int (the r5
-# manual knob, recall-unsafe; kept for the attribution controls), or
-# 0/none = full signatures (the measurement baseline)
+# DEFAULT — probe-verified stop-list) or "none" (full signatures, the
+# measurement baseline)
 _sig_raw = os.environ.get("PKE_SCALE_SIG_MAX_DF", "auto").strip().lower()
-SIG_MAX_DF = (
-    "auto" if _sig_raw == "auto"
-    else (int(_sig_raw) or None) if _sig_raw.isdigit()
-    else None
-)
+if _sig_raw not in ("auto", "none"):
+    raise SystemExit("PKE_SCALE_SIG_MAX_DF must be 'auto' or 'none'")
+SIG_MAX_DF = "auto" if _sig_raw == "auto" else None
 EXEC_MEM_MB = int(os.environ.get("PKE_SCALE_EXEC_MEM", "8192"))
 # body-vocabulary policy for the synthetic corpus: "fixed" (legacy
 # 4,000-word vocabulary — densifies as N grows: df ∝ N, bucket

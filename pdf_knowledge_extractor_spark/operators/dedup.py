@@ -28,6 +28,11 @@ from pdf_knowledge_extractor_spark.tuning import hinted
 
 from pdf_knowledge_extractor_spark.functions.text import clean_text
 from pdf_knowledge_extractor_spark.operators.ann import _finalize
+from pdf_knowledge_extractor_spark.operators.setjoin import (
+    band_buckets,
+    bucket_pairs,
+    distinct_pairs,
+)
 
 # under-split sources serialize the shingling/signature projections
 # onto one core (profiled: 6 of minhash_dedup's 9.5s at sf0.1 were a
@@ -246,43 +251,9 @@ def ngram_jaccard_pairs(
         )
     # cached: the verify reads the candidates three times (the pairs
     # and the doc ids that bound each side's shingle arrays)
-    candidates = (
-        candidates.repartition(F.col("doc1_id"))
-        .dropDuplicates(["doc1_id", "doc2_id"])
-        .persist()
-    )
+    candidates = distinct_pairs(candidates).persist()
     return _finalize(
         _verify_jaccard(candidates, threshold, posts=posts), candidates
-    )
-
-
-def _bucket_pairs(banded: DataFrame, max_bucket_size: int | None,
-                  hot_bucket_mode: str) -> DataFrame:
-    """Candidate (doc1_id, doc2_id) pairs, duplicates included, from
-    banded (doc_id, band, band_hash) rows.
-
-    One aggregate gathers each bucket's sorted member list, and the
-    pairs are generated from it in place: member i pairs with every
-    later member (``slice``). A bucket over ``max_bucket_size`` emits
-    only its first member's row — the star on the bucket minimum — in
-    "star" mode and nothing in "drop" mode, so the cap decision needs
-    no separate census or join back to the banded rows."""
-    buckets = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("_m"))
-        .filter(F.size("_m") > 1)
-    )
-    members = buckets.select("_m", F.posexplode("_m").alias("_i", "doc1_id"))
-    if max_bucket_size is not None:
-        under = F.size("_m") <= max_bucket_size
-        members = members.filter(
-            under if hot_bucket_mode == "drop" else under | (F.col("_i") == 0)
-        )
-    later = F.slice("_m", F.col("_i") + 2, F.size("_m") - F.col("_i") - 1)
-    return (
-        members.select("doc1_id", F.explode(later).alias("doc2_id"))
-        # equal ids (a doc id repeated in the input) pair with nothing
-        .filter(F.col("doc1_id") < F.col("doc2_id"))
     )
 
 
@@ -358,8 +329,8 @@ def minhash_lsh_pairs(
     eval has no common-subexpression elimination, so the 16 band
     hashes would otherwise each recompute all 64 minhashes). Then ONE
     aggregate on (band, band_hash) gathers each bucket's members and
-    emits the candidate pairs (``_bucket_pairs``), one exchange on
-    doc1_id dedups them, and each pair joins the shingle arrays of its
+    emits the candidate pairs (``setjoin.bucket_pairs``), one exchange
+    on doc1_id dedups them, and each pair joins the shingle arrays of its
     two docs for the exact verify (``_verify_jaccard``). The cap needs
     no census, broadcast or join of its own: each bucket sees its own
     size.
@@ -385,9 +356,6 @@ def minhash_lsh_pairs(
     - "drop": drop hot buckets entirely (round-3 behavior) —
       fragments true dup families whose texts differ (mutated
       boilerplate), leaving only exact-fingerprint recovery.
-
-    A hot bucket's member list is still gathered whole, so the cap
-    bounds the pairs, not that list.
 
     None (default cap) keeps full banding recall for the oracle gate;
     set a few hundred at 100-TB scale."""
@@ -426,14 +394,11 @@ def minhash_lsh_pairs(
         .withColumnRenamed("pos", "band")
         .withColumnRenamed("col", "band_hash")
     )
-    # ONE exchange on doc1_id dedups the pairs (every copy of a pair
-    # lands in one partition) and pre-positions them for the
-    # doc1-keyed verify join
-    candidates = (
-        _bucket_pairs(banded, max_bucket_size, hot_bucket_mode)
-        .repartition(F.col("doc1_id"))
-        .dropDuplicates(["doc1_id", "doc2_id"])
-    )
+    buckets = band_buckets(banded)
+    if max_bucket_size is not None and hot_bucket_mode == "drop":
+        buckets = buckets.filter(F.size("_m") <= max_bucket_size)
+    star_over = max_bucket_size if hot_bucket_mode == "star" else None
+    candidates = distinct_pairs(bucket_pairs(buckets, star_over))
     return _finalize(
         _verify_jaccard(candidates, threshold, sets=sets).select(
             "doc1_id", "doc2_id", "jaccard"

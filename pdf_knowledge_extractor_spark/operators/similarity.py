@@ -1,4 +1,5 @@
-"""Document-similarity θ self-join (J1): exact + LSH-blocked paths.
+"""Document-similarity θ self-join (J1): exact, prefix and
+MinHash-blocked paths.
 
 Semantics reproduced from _compute_document_similarities
 (semantic_analyzer.py:255-389): all-pairs cosine over L2-normalized
@@ -13,22 +14,28 @@ Scale design:
   stop-listing) bounds the quadratic blowup of ultra-frequent terms
   exactly like the reference's stopword drop bounds its vectorizer.
   Right at small scale and for oracle checking; O(sum df^2) at 100 TB.
-- scale path: BucketedRandomProjectionLSH over the hashed TF-IDF
-  vectors. For unit vectors, cosine >= t  <=>  euclidean distance
-  <= sqrt(2 - 2t), so the LSH approxSimilarityJoin with that radius
-  blocks candidates; we then re-score candidates with the exact dot
-  product (cheap: candidate set is near-linear) so emitted scores are
-  exact, only recall is approximate (tunable via numHashTables).
+- prefix path: Bayardo prefix filtering — exact output, candidates
+  from the rare-term prefixes only.
+- scale path (default): MinHash banding over each doc's term set
+  blocks candidates (the band-bucket kernel in ``setjoin``), and the
+  candidates are re-scored with the exact dot product, so emitted
+  scores are exact and only recall is approximate.
 """
 
 from __future__ import annotations
 
 import logging
-import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_knowledge_extractor_spark.operators.ann import _finalize
+from pdf_knowledge_extractor_spark.operators.setjoin import (
+    band_buckets,
+    bucket_census,
+    bucket_pairs,
+    distinct_pairs,
+)
 from pdf_knowledge_extractor_spark.tuning import hinted
 
 DEFAULT_THRESHOLD = 0.7
@@ -74,61 +81,6 @@ def exact_cosine_pairs(
     )
 
 
-def lsh_cosine_pairs(
-    vectors: DataFrame,
-    threshold: float = DEFAULT_THRESHOLD,
-    num_hash_tables: int = 4,
-    bucket_length: float = 0.5,
-    seed: int = 42,
-    tfidf: DataFrame | None = None,
-) -> DataFrame:
-    """Scale path: LSH candidate blocking + exact rescoring.
-
-    ``vectors``: (doc_id, features: Vector), rows assumed
-    L2-normalized (hashed term space — collisions OK, they only
-    inflate the candidate set). Returns
-    (doc1_id, doc2_id, similarity_score).
-
-    When ``tfidf`` (the long-form L2-normalized table) is given,
-    candidate pairs are re-scored EXACTLY by the term-join dot product,
-    so emitted scores are collision-free and identical to the exact
-    path — only recall is approximate (validated >= 0.95 by tests at
-    the default parameters). Without it, scores derive from the hashed
-    vectors via cos = 1 - dist^2/2.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-
-    radius = math.sqrt(max(2.0 - 2.0 * threshold, 1e-12))
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        numHashTables=num_hash_tables,
-        bucketLength=bucket_length,
-        seed=seed,
-    )
-    model = lsh.fit(vectors)
-    # slack on the radius when rescoring: hash collisions can only
-    # *raise* hashed-vector similarity, never lower it, so the exact
-    # radius already over-collects; no extra slack needed for recall.
-    pairs = model.approxSimilarityJoin(
-        vectors, vectors, radius, distCol="_dist"
-    )
-    cand = pairs.filter(
-        F.col("datasetA.doc_id") < F.col("datasetB.doc_id")
-    ).select(
-        F.col("datasetA.doc_id").alias("doc1_id"),
-        F.col("datasetB.doc_id").alias("doc2_id"),
-        (1.0 - F.col("_dist") * F.col("_dist") / 2.0).alias("_approx"),
-    )
-    if tfidf is None:
-        return cand.filter(F.col("_approx") >= threshold).select(
-            "doc1_id", "doc2_id", F.col("_approx").alias("similarity_score")
-        )
-    return _rescore_candidates(
-        cand.select("doc1_id", "doc2_id"), tfidf, threshold
-    )
-
-
 def _doc_vectors(tfidf: DataFrame) -> DataFrame:
     """(doc_id, m: map<bigint,weight>) — compact per-doc vector for
     map-side rescoring.
@@ -148,26 +100,6 @@ def _doc_vectors(tfidf: DataFrame) -> DataFrame:
                          F.col("weight").alias("value"))
             )
         ).alias("m")
-    )
-
-
-def _dedup_pairs(pairs: DataFrame) -> DataFrame:
-    """Global (doc1_id, doc2_id) dedup in ONE shuffle of the raw
-    candidate stream instead of two.
-
-    ``distinct()`` exchanges the full pre-dedup pair stream on
-    (doc1_id, doc2_id), then the rescore join immediately re-exchanges
-    the deduped pairs on doc1_id — and sort-merge-joins SORT them, the
-    disk-spill hot spot the 1.2M-row octave profile pinned (the pair
-    stream is the largest shuffle in the whole pipeline; sorting it
-    spilled 15-17 GB against one shared disk and broke scaling).
-    Hash-partitioning on doc1_id alone already co-locates every copy
-    of a pair (a subset of the grouping keys satisfies the aggregate's
-    clustering requirement), and it is exactly the distribution the
-    downstream vector join on doc1_id needs — so the deduped pairs
-    flow into the rescore with no further exchange."""
-    return pairs.repartition(F.col("doc1_id")).dropDuplicates(
-        ["doc1_id", "doc2_id"]
     )
 
 
@@ -254,8 +186,8 @@ def prefix_cosine_pairs(
 ) -> DataFrame:
     """Exact threshold cosine self-join via prefix filtering
     (all-pairs similarity search, Bayardo/Ma/Srikant, WWW'07 — public
-    algorithm). The default scale path: exact results, no LSH recall
-    loss, and the candidate join touches only *prefix* posting lists.
+    algorithm): exact results, and the candidate join touches only
+    *prefix* posting lists.
 
     Terms are canonically ordered rare-first (df asc). For an
     L2-normalized doc, once the cumulative squared weight of its
@@ -294,7 +226,7 @@ def prefix_cosine_pairs(
         .filter(F.col("doc1_id") < F.col("doc2_id"))
         .select("doc1_id", "doc2_id")
     )
-    return _rescore_candidates(_dedup_pairs(candidates), tfidf, threshold)
+    return _rescore_candidates(distinct_pairs(candidates), tfidf, threshold)
 
 
 # bound on the head-term list shipped through the driver by the AUTO
@@ -318,9 +250,11 @@ def collect_signature_head_census(
     head-term census (term, df) AND each head's deterministic posting
     sample — everything `_auto_signature_stoplist` needs before its
     probe, so the operator pays no further full-corpus scans for
-    sampling. The sample selection replicates the r6 window form
-    exactly (same hash pre-filter, same (xxhash64(term, doc_id),
-    doc_id) order), so probe decisions are byte-identical.
+    sampling. The sample is the first ``sample_docs`` postings in
+    (xxhash64(term, doc_id), doc_id) order that survive a hash
+    pre-filter (hash mod df < 4·sample_docs), which keeps the
+    collected set small on a term whose posting list is up to N
+    rows.
 
     Callers that must materialize the tfidf cache anyway (the
     pipeline) use THIS action as the materialization job and pass the
@@ -371,8 +305,8 @@ def _auto_signature_stoplist(
     head_rows: list | None = None,
 ) -> DataFrame | None:
     """Probe-verified head-term stop-list for the banding SIGNATURE
-    (round-6 headline: the recall-safe, default-on form of the r5
-    opt-in ``signature_max_df``).
+    (round-6 headline: the recall-safe replacement of the r5 absolute
+    df cap).
 
     Head terms (df > max(floor, frac·N)) drive the blocker's sub-cap
     random-collision volume — the measured cause of the superlinear
@@ -381,8 +315,8 @@ def _auto_signature_stoplist(
     from signatures cut candidates ~19× with byte-identical output on
     the Zipf corpus — but a blanket df cap silently erases the banding
     signal of mutated-boilerplate families LARGER than the cap (their
-    shared base words ARE high-df; test_signature_max_df_loses_large_
-    families). This is the identical dichotomy the hot-bucket cap
+    shared base words ARE high-df; a cap of 50 lost >85% of a
+    200-member family's pairs). This is the identical dichotomy the hot-bucket cap
     already solved with its density probe (false-positive pile-ups vs
     true-dense families), so the same machinery decides per TERM:
 
@@ -439,15 +373,6 @@ def _auto_signature_stoplist(
         head_rows = collect_signature_head_census(
             tfidf, df_floor=head_df_floor, sample_docs=sample_docs
         )
-    # rows from collect_signature_head_census carry the samples; a
-    # caller passing a bare (term, df) census falls back to the
-    # distributed window sampler below (identical selection)
-    samples_by_term = None
-    if head_rows and "sampled" in head_rows[0].__fields__:
-        samples_by_term = {
-            str(r["term"]): [s["doc_id"] for s in r["sampled"]]
-            for r in head_rows
-        }
     cap = max(head_df_floor, int(head_df_frac * n_docs))
     heads = [
         (str(r["term"]), int(r["df"]))
@@ -495,55 +420,18 @@ def _auto_signature_stoplist(
         )
         return None
 
-    doc_id_type = tfidf.schema["doc_id"].dataType
-    sample_persisted = False
-    if samples_by_term is not None:
-        # the fused census already drew the samples — ship them back
-        # as a LOCAL relation (no job, broadcasts for free below)
-        from pyspark.sql import types as T
+    # the fused census already drew the samples — ship them back as a
+    # LOCAL relation (no job, broadcasts for free below)
+    from pyspark.sql import types as T
 
-        sample = spark.createDataFrame(
-            [(t, d) for t, _d in heads for d in samples_by_term[t]],
-            schema=T.StructType([
-                T.StructField("term", T.StringType()),
-                T.StructField("doc_id", doc_id_type),
-            ]),
-        )
-    else:
-        from pyspark.sql import Window
-
-        head_df = F.broadcast(
-            spark.createDataFrame(heads, schema="term string, df bigint")
-            .select("term")
-        )
-        postings = tfidf.join(head_df, "term", "left_semi").select(
-            "term", "doc_id", "df"
-        )
-        # pre-thin each posting list with a deterministic hash filter
-        # BEFORE the row_number window: a head term's posting list is
-        # up to N rows (a 30%-df term at 1.2M docs = 360k rows in ONE
-        # window partition to sort); keeping rows with hash mod df <
-        # 4·s leaves ~4·s expected survivors per term (P[< s
-        # survivors] is negligible, and a short sample only shrinks
-        # the probe — never wrong, just less evidence), so the window
-        # sorts O(s·heads) rows total instead of Σ df
-        survivors = postings.filter(
-            F.pmod(F.xxhash64("term", "doc_id"), F.col("df"))
-            < F.least(F.lit(4 * sample_docs), F.col("df"))
-        )
-        w = Window.partitionBy("term").orderBy(
-            F.xxhash64("term", "doc_id"), "doc_id"
-        )
-        # persist the sampled postings (~4·sample_docs rows per head
-        # term): the pair join reads this subtree twice and the
-        # probe's doc-list broadcast a third time, and each un-cached
-        # read re-ran the full long-form scan + hash-filter + window
-        sample = survivors.withColumn(
-            "_rn", F.row_number().over(w)
-        ).filter(F.col("_rn") <= sample_docs).select(
-            "term", "doc_id"
-        ).persist()
-        sample_persisted = True
+    sampled = {str(r["term"]): r["sampled"] for r in head_rows}
+    sample = spark.createDataFrame(
+        [(t, x["doc_id"]) for t, _d in heads for x in sampled[t]],
+        schema=T.StructType([
+            T.StructField("term", T.StringType()),
+            T.StructField("doc_id", tfidf.schema["doc_id"].dataType),
+        ]),
+    )
     s1 = sample.select("term", F.col("doc_id").alias("doc1_id"))
     s2 = sample.select("term", F.col("doc_id").alias("doc2_id"))
     sample_pairs = s1.join(s2, "term").filter(
@@ -569,8 +457,6 @@ def _auto_signature_stoplist(
         .alias("_ok"),
     ).collect()
     probe_vec.unpersist()
-    if sample_persisted:
-        sample.unpersist()
     excluded = [
         (r["term"],)
         for r in verdicts
@@ -603,7 +489,7 @@ def minhash_blocked_cosine_pairs(
     hot_sample_docs: int = 24,
     hot_min_precision: float = 0.5,
     stats: dict | None = None,
-    signature_max_df: int | str | None = "auto",
+    signature_max_df: str | None = "auto",
     n_docs: int | None = None,
     signature_head_df_frac: float = 0.005,
     signature_head_df_floor: int = SIGNATURE_HEAD_DF_FLOOR,
@@ -635,25 +521,19 @@ def minhash_blocked_cosine_pairs(
       corpus (small corpora skip the machinery with output unchanged
       — the probe was pure overhead there; see
       :func:`_auto_signature_stoplist` ``probe_max_frac``).
-    - an ABSOLUTE int cap: the r5 manual knob — excludes every term
-      with df > cap, NO probe. Faster (no probe job) but recall-UNSAFE
-      on corpora with mutated-boilerplate families larger than the
-      cap: their shared base words have df ≈ family size and the cap
-      erases the family's entire banding signal — a silent recall
-      loss (asserted by test_signature_max_df_loses_large_families).
-      Use only where high-df sharing is known to be noise (e.g.
-      pre-deduplicated web text).
     - ``None``: band over the full term set (the oracle-parity /
       measurement-baseline setting).
 
-    Why this beats prefix filtering / cosine-LSH at 100 TB: the
-    banding collision curve 1-(1-j^r)^b is far sharper in Jaccard than
-    any hyperplane scheme is in cosine — r=5, b=12 gives ~1e-5
-    collision probability for unrelated pairs (j≈0.1) and >=0.99 for
-    near-duplicates (j>=0.85), so the candidate set stays near-linear
-    where the exact prefix join went quadratic (658M candidates at
-    100k docs on flat-weight content). Recall at the cosine threshold
-    is approximate and data-dependent (pairs with cosine>=0.7 but low
+    Anything else raises ValueError.
+
+    Why this beats prefix filtering at 100 TB: the banding collision
+    curve 1-(1-j^r)^b is far sharper in Jaccard than any hyperplane
+    scheme is in cosine — r=5, b=12 gives ~1e-5 collision probability
+    for unrelated pairs (j≈0.1) and >=0.99 for near-duplicates
+    (j>=0.85), so the candidate set stays near-linear where the exact
+    prefix join went quadratic (658M candidates at 100k docs on
+    flat-weight content). Recall at the cosine threshold is
+    approximate and data-dependent (pairs with cosine>=0.7 but low
     term-set Jaccard can be missed); tests validate recall >= 0.95 on
     the near-duplicate-structured corpus. Precision is exact (every
     emitted score is the true cosine).
@@ -702,73 +582,73 @@ def minhash_blocked_cosine_pairs(
     full-recall runs (the run_pipeline result carries this dict as
     result["similarity_stats"]).
 
-    Driver-job budget (the capped path's parallelism-independent
-    overhead): ONE census job that also collects the hot-key list
-    (shipped back as a local relation — no checkpoint, broadcasts for
-    free), ONE probe job that decides bucket density AND the
-    near-threshold histogram, then the caller's rescore job(s). The
-    probe's sampled cosines feed ``stats``: probe_sampled_pairs,
-    probe_pairs_near_threshold, probe_near_threshold_frac, and
-    ``banding_boundary_hint`` — True when >=30% of sampled in-bucket
-    pair cosines lie within ±0.1 of the threshold, the online form of
-    the offline recall-sweep finding that recall falls on the banding
-    collision curve (raise ``bands`` in that regime).
+    Plan: candidates come from the band-bucket kernel (``setjoin``).
+    The capped path persists the bucket lists and runs ONE census job,
+    then, with a bucket over the cap in "verify" mode, ONE probe job:
+    each hot bucket's sample is cut from its member list and rescored,
+    and the per-bucket verdicts stay distributed — dense buckets join
+    back on the bucket key, and the driver collects only scalar stats.
+    The probe's sampled cosines feed ``stats``: probe_sampled_pairs, probe_pairs_near_threshold,
+    probe_near_threshold_frac, and ``banding_boundary_hint`` — True
+    when >=30% of sampled in-bucket pair cosines lie within ±0.1 of
+    the threshold, the online form of the offline recall-sweep finding
+    that recall falls on the banding collision curve (raise ``bands``
+    in that regime).
 
-    Cache lifecycle: the capped path persists the banded rows for the
-    census + probe + anti-join, then eagerly materializes the (small)
-    result pair table via localCheckpoint and releases the cache
-    (`_finalize`, as in the ann/dedup siblings). The result's own
-    checkpoint blocks are registered with
-    `ann.release_checkpointed_results` — call it once the pairs have
-    been consumed, so looping sessions release even the result storage
-    (`clearCache()` cannot see checkpoint blocks).
+    Cache lifecycle: the capped path localCheckpoints the (small)
+    result and releases its caches (`_finalize`); call
+    `ann.release_checkpointed_results` once the pairs are consumed, as
+    `clearCache()` cannot see checkpoint blocks. The uncapped path
+    caches nothing and stays lazy.
     """
+    if signature_max_df not in ("auto", None):
+        raise ValueError(
+            "signature_max_df must be 'auto' or None, got "
+            f"{signature_max_df!r}"
+        )
     exclude = None
-    if signature_max_df == "auto":
-        signature_max_df = None
-        if "df" in tfidf.columns:
-            exclude = _auto_signature_stoplist(
-                tfidf, threshold, n_docs=n_docs,
-                head_df_frac=signature_head_df_frac,
-                head_df_floor=signature_head_df_floor,
-                sample_docs=signature_head_sample_docs,
-                min_precision=signature_head_min_precision,
-                probe_max_frac=signature_probe_max_frac,
-                stats=stats,
-                head_rows=signature_heads,
-            )
-    banded = _banded_rows(tfidf, num_hashes, bands,
-                          signature_max_df=signature_max_df,
-                          signature_exclude=exclude)
-    return _pairs_from_banded(banded, tfidf, threshold, max_bucket_size,
-                             hot_bucket_mode, hot_sample_docs,
-                             hot_min_precision, stats)
+    if signature_max_df == "auto" and "df" in tfidf.columns:
+        exclude = _auto_signature_stoplist(
+            tfidf, threshold, n_docs=n_docs,
+            head_df_frac=signature_head_df_frac,
+            head_df_floor=signature_head_df_floor,
+            sample_docs=signature_head_sample_docs,
+            min_precision=signature_head_min_precision,
+            probe_max_frac=signature_probe_max_frac,
+            stats=stats,
+            head_rows=signature_heads,
+        )
+    buckets = band_buckets(
+        _banded_rows(tfidf, num_hashes, bands, signature_exclude=exclude)
+    )
+    if max_bucket_size is None:
+        return _rescore_candidates(
+            distinct_pairs(bucket_pairs(buckets)), tfidf, threshold
+        )
+    return _capped_pairs(buckets, tfidf, threshold, max_bucket_size,
+                         hot_bucket_mode, hot_sample_docs,
+                         hot_min_precision, stats)
 
 
 def _banded_rows(
     tfidf: DataFrame,
     num_hashes: int,
     bands: int,
-    signature_max_df: int | None = None,
     signature_exclude: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, band, band_hash) MinHash-banding rows for a tfidf
     long form — the blocker shared by the pair join and the
     standalone census.
 
-    ``signature_max_df``: band over the df-filtered term set, FALLING
-    BACK to the full set for docs whose every term is over the cap —
-    an all-head-word doc would otherwise have an empty signature and
-    silently fall out of the blocker entirely (measured: ~1 doc in
-    24k on the 1.2M Zipf corpus, 40 lost triples). The fallback docs
-    band among themselves, where the ordinary cap+probe machinery
+    ``signature_exclude``: a (small) term table to exclude from
+    signatures — the probe-verified AUTO stop-list
+    (_auto_signature_stoplist), broadcast-joined onto the long form.
+    A doc whose every term is excluded FALLS BACK to its full term
+    set: an all-head-word doc would otherwise have an empty signature
+    and silently fall out of the blocker entirely (measured: ~1 doc
+    in 24k on the 1.2M Zipf corpus, 40 lost triples). The fallback
+    docs band among themselves, where the ordinary cap+probe machinery
     applies. Same single groupBy either way.
-
-    ``signature_exclude``: an explicit (small) term table to exclude
-    from signatures instead of a df cap — the probe-verified AUTO
-    stop-list path (_auto_signature_stoplist). Broadcast-joined onto
-    the long form; the same empty-signature full-set fallback
-    applies. Mutually exclusive with ``signature_max_df``.
 
     Physical shape (round 7): ONE groupBy(doc) computing the K
     minhashes as K flat ``min(xxhash64(term, k))`` aggregate columns —
@@ -783,16 +663,12 @@ def _banded_rows(
     has every kept-min non-null; an all-head doc falls back to the
     full-set signature for every k)."""
     rows_per_band = num_hashes // bands
-    if signature_max_df and signature_exclude is not None:
-        raise ValueError(
-            "signature_max_df and signature_exclude are mutually "
-            "exclusive"
-        )
-    kept = None
     t = tfidf
-    if signature_max_df:
-        kept = F.col("df") <= signature_max_df
-    elif signature_exclude is not None:
+
+    def h(k: int):
+        return F.xxhash64(F.col("term"), F.lit(k))
+
+    if signature_exclude is not None:
         t = tfidf.join(
             F.broadcast(
                 signature_exclude.select("term")
@@ -802,11 +678,6 @@ def _banded_rows(
             "left",
         )
         kept = F.col("_x").isNull()
-
-    def h(k: int):
-        return F.xxhash64(F.col("term"), F.lit(k))
-
-    if kept is not None:
         aggs = []
         for k in range(num_hashes):
             aggs.append(F.min(F.when(kept, h(k))).alias(f"_mk{k}"))
@@ -853,319 +724,58 @@ def banding_census(
     by tools/census_scale.py to attribute data-size scaling.
     ``signature_exclude`` censuses the df-stop-listed blocker (pass
     _auto_signature_stoplist's result to measure the AUTO default)."""
-    census = (
+    buckets = band_buckets(
         _banded_rows(tfidf, num_hashes, bands,
                      signature_exclude=signature_exclude)
-        .groupBy("band", "band_hash")
-        .agg(F.count("*").alias("_n"))
     )
-    agg = census.agg(
-        F.count("*").alias("total"),
-        F.coalesce(
-            F.sum((F.col("_n") > max_bucket_size).cast("long")), F.lit(0)
-        ).alias("over"),
-        F.coalesce(
-            F.sum(
-                F.when(F.col("_n") > max_bucket_size, F.col("_n")).otherwise(0)
-            ),
-            F.lit(0),
-        ).alias("hot_rows"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("_n") <= max_bucket_size,
-                    F.col("_n").cast("long") * (F.col("_n") - 1) / 2,
-                ).otherwise(0.0)
-            ).cast("long"),
-            F.lit(0),
-        ).alias("subcap_pairs"),
-    ).first()
-    return {
-        "cap": max_bucket_size,
-        "buckets_total": int(agg["total"]),
-        "buckets_over_cap": int(agg["over"]),
-        "banded_rows_in_hot_buckets": int(agg["hot_rows"]),
-        "candidate_pairs_subcap": int(agg["subcap_pairs"]),
-    }
+    return {"cap": max_bucket_size,
+            **bucket_census(buckets, max_bucket_size)}
 
 
-# above this many hot (over-cap) buckets, the capped path stops
-# shipping the hot-key / dense-key lists through the driver as local
-# relations (the one-job fold) and keeps them distributed: ~100k
-# (band, band_hash) structs is a few MB on the driver — safe; an
-# adversarial corpus with millions of hot buckets is not
-_HOT_KEYS_LOCAL_MAX = 100_000
-
-
-def _pairs_from_banded(banded, tfidf, threshold, max_bucket_size,
-                      hot_bucket_mode, hot_sample_docs,
-                      hot_min_precision, stats):
-    def _self_join(rows: DataFrame) -> DataFrame:
-        b1 = rows.select(F.col("doc_id").alias("doc1_id"), "band", "band_hash")
-        b2 = rows.select(F.col("doc_id").alias("doc2_id"), "band", "band_hash")
-        # shuffle-hash: build a per-partition map of one banded side
-        # (narrow rows, |banded|/P per partition) and stream the
-        # other — sort-merge would sort both sides of the largest
-        # fan-out join in the operator for no benefit
-        return (
-            b1.join(b2.transform(hinted), ["band", "band_hash"])
-            .filter(F.col("doc1_id") < F.col("doc2_id"))
-            .select("doc1_id", "doc2_id")
-        )
-
-    if max_bucket_size is None:
-        return _rescore_candidates(
-            _dedup_pairs(_self_join(banded)), tfidf, threshold
-        )
-
+def _capped_pairs(buckets, tfidf, threshold, max_bucket_size,
+                  hot_bucket_mode, hot_sample_docs, hot_min_precision,
+                  stats):
     if hot_bucket_mode not in ("verify", "drop"):
         raise ValueError(f"unknown hot_bucket_mode: {hot_bucket_mode!r}")
-    import os as _os
-    import time as _time
-
-    from pyspark.sql import Window
-
-    from pdf_knowledge_extractor_spark.operators.ann import _finalize
-
-    _dbg = _os.environ.get("PKE_SIM_DEBUG_TIMING")
-    _t0 = _time.perf_counter()
-
-    def _mark(label: str):
-        if _dbg:
-            _LOG.warning(
-                "SIM-TIMING %s %.1fs", label, _time.perf_counter() - _t0
-            )
-
-    # persist the banded rows (3 narrow columns): the census, the
-    # density probe and the anti-join all read them; recomputing the
-    # signature HOFs — the expensive subtree — per consumer would
-    # multiply the operator's cost. Released via _finalize below.
-    banded = banded.persist()
-    census = banded.groupBy("band", "band_hash").agg(
-        F.count("*").alias("_n")
-    )
-    # ONE eager job materializes the banded cache AND returns both the
-    # census scalars and the full hot-key list (collect_list skips the
-    # NULLs of sub-cap buckets; the list is bounded by rows/cap, tens
-    # of thousands at worst — driver-safe). The cap must never be
-    # silent — see the docstring. Folding the hot-key materialization
-    # into the census action (instead of a second job + an eager
-    # localCheckpoint) removes two driver-serialized jobs and the
-    # checkpoint blocks that round 4 measured as parallelism-
-    # independent overhead (VERDICT r4 item 3).
-    agg = census.agg(
-        F.count("*").alias("total"),
-        F.coalesce(
-            F.sum((F.col("_n") > max_bucket_size).cast("long")), F.lit(0)
-        ).alias("over"),
-        F.coalesce(
-            F.sum(
-                F.when(F.col("_n") > max_bucket_size, F.col("_n")).otherwise(0)
-            ),
-            F.lit(0),
-        ).alias("hot_rows"),
-        # sub-cap candidate volume Σ n·(n−1)/2 — the direct driver of
-        # rescore cost, recorded so data-size scaling runs can
-        # attribute superlinear wall growth to blocking-key
-        # densification from the artifact instead of inferring it
-        # from the hot tail (BENCH/BASELINE.md 1.2M→2.4M analysis)
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("_n") <= max_bucket_size,
-                    F.col("_n").cast("long") * (F.col("_n") - 1) / 2,
-                ).otherwise(0.0)
-            ).cast("long"),
-            F.lit(0),
-        ).alias("subcap_pairs"),
-        # BOUNDED at the aggregation (slice caps the array the driver
-        # receives): n_over is bounded by banded_rows/cap in theory but
-        # an adversarial corpus can push it to millions — the exact
-        # `over` count above decides below whether the local-relation
-        # fast path is safe or the distributed hot-key join must run
-        F.slice(
-            F.collect_list(
-                F.when(
-                    F.col("_n") > max_bucket_size,
-                    F.struct("band", "band_hash"),
-                )
-            ),
-            1,
-            _HOT_KEYS_LOCAL_MAX + 1,
-        ).alias("hot"),
-    ).first()
-    hot_list = list(agg["hot"])
-    n_over, n_hot_rows = int(agg["over"]), int(agg["hot_rows"])
+    # persisted: the census, the probe and the pair emission all read
+    # the bucket lists; recomputing the signature aggregate per
+    # consumer would multiply the operator's cost. Released via
+    # _finalize below.
+    buckets = buckets.persist()
+    caches = [buckets]
+    # ONE eager job materializes the bucket cache and returns the
+    # census scalars — the cap must never be silent (see the docstring)
+    census = bucket_census(buckets, max_bucket_size)
+    n_over = census["buckets_over_cap"]
     info = {
         "cap": max_bucket_size,
         "mode": hot_bucket_mode,
-        "buckets_total": int(agg["total"]),
-        "buckets_over_cap": n_over,
-        "banded_rows_in_hot_buckets": n_hot_rows,
-        "candidate_pairs_subcap": int(agg["subcap_pairs"]),
+        **census,
         "dense_buckets_kept": 0,
         "buckets_dropped": n_over,
     }
-
-    if n_over == 0:
-        # no bucket over the cap: the anti-join, hot-key checkpoint
-        # and probe would all be no-ops — skip their jobs entirely
-        # (the common case on healthy corpora)
-        if stats is not None:
-            stats.update(info)
-        _LOG.info(
-            "similarity banding cap %d (mode=%s): no bucket over cap "
-            "(%d buckets)", max_bucket_size, hot_bucket_mode,
-            info["buckets_total"],
-        )
-        out = _rescore_candidates(
-            _dedup_pairs(_self_join(banded)), tfidf, threshold
-        )
-        return _finalize(out, banded)
-
-    # the hot-key list arrived with the census collect — ship it back
-    # as a LOCAL relation (no job, no checkpoint blocks; broadcasts
-    # for free in the anti-/semi-joins below). Pathological corpora
-    # (more hot keys than the slice bound) keep the keys DISTRIBUTED
-    # instead: the filtered census recomputes from the persisted
-    # banded cache per consumer — an extra cheap job each, paid only
-    # when a driver collect would be the real scale risk.
-    spark = tfidf.sparkSession
-    extra_caches = []
-    if n_over <= _HOT_KEYS_LOCAL_MAX:
-        hot_keys = F.broadcast(spark.createDataFrame(
-            [(int(r["band"]), int(r["band_hash"])) for r in hot_list],
-            schema="band int, band_hash bigint",
-        ))
-    else:
-        _LOG.warning(
-            "similarity banding cap: %d hot buckets exceeds the "
-            "local-relation bound (%d) — using distributed hot-key "
-            "joins", n_over, _HOT_KEYS_LOCAL_MAX,
-        )
-        hot_keys = census.filter(
-            F.col("_n") > max_bucket_size
-        ).select("band", "band_hash").persist()
-        extra_caches.append(hot_keys)
-    cold = banded.join(hot_keys, ["band", "band_hash"], "left_anti")
-    candidates = _self_join(cold)
-
-    _mark("census+hotkeys done")
+    size = F.size("_m")
+    kept = buckets.filter(size <= max_bucket_size)
     if hot_bucket_mode == "verify" and n_over > 0:
-        hot_members = banded.join(
-            hot_keys, ["band", "band_hash"], "left_semi"
+        hot = buckets.filter(size > max_bucket_size)
+        verdicts, n_dense, n_sampled, n_near = _density_probe(
+            hot, tfidf, threshold, hot_sample_docs, hot_min_precision
         )
-        w = Window.partitionBy("band", "band_hash").orderBy(
-            F.xxhash64("doc_id"), "doc_id"
-        )
-        # persisted for the same three-consumer reason as the
-        # stop-list sample (pair join sides + doc-list broadcast)
-        sample = hot_members.withColumn(
-            "_rn", F.row_number().over(w)
-        ).filter(F.col("_rn") <= hot_sample_docs).persist()
-        extra_caches.append(sample)
-        s1 = sample.select(
-            "band", "band_hash", F.col("doc_id").alias("doc1_id")
-        )
-        s2 = sample.select(
-            "band", "band_hash", F.col("doc_id").alias("doc2_id")
-        )
-        sample_pairs = s1.join(s2, ["band", "band_hash"]).filter(
-            F.col("doc1_id") < F.col("doc2_id")
-        )
-        # restrict the probe rescore's doc-vector build to the SAMPLED
-        # docs (<= hot_sample_docs * n_hot rows, broadcastable):
-        # building maps for the whole corpus to score a few thousand
-        # sample pairs was another parallelism-independent fixed cost
-        probe_tfidf = tfidf.join(
-            F.broadcast(sample.select("doc_id").distinct()),
-            "doc_id",
-            "left_semi",
-        )
-        # one materialized vector build for both broadcast sides
-        # (same fix as the stop-list probe)
-        probe_vec = _doc_vectors(probe_tfidf).persist()
-        extra_caches.append(probe_vec)
-        # threshold 0.0 keeps EVERY sampled pair's exact cosine
-        # (tf-idf weights are non-negative): the same scores decide
-        # bucket density AND measure how close the corpus's in-bucket
-        # similarity mass sits to the threshold — the banding-boundary
-        # signal the offline recall sweep found (recall falls on the
-        # 1-(1-j^r)^b collision curve, not the cap)
-        scored = _rescore_candidates(
-            sample_pairs, probe_tfidf, 0.0,
-            keep_cols=("band", "band_hash"),
-            # the probe's vector table is <= hot_sample_docs * n_hot
-            # rows by construction — broadcast, don't shuffle
-            vec_join="broadcast",
-            vec=probe_vec,
-        )
-        # ONE probe job: per-bucket density verdict + near-threshold
-        # histogram, collected together (was: eager dense checkpoint
-        # + dense.count() — two more driver-serialized jobs)
-        s = F.col("similarity_score")
-        bucket_stats = scored.groupBy("band", "band_hash").agg(
-            F.count("*").alias("_tot"),
-            F.sum((s >= threshold).cast("long")).alias("_ok"),
-            F.sum(
-                ((s >= threshold - 0.1) & (s < threshold)).cast("long")
-            ).alias("_near_lo"),
-            F.sum(
-                ((s >= threshold) & (s < threshold + 0.1)).cast("long")
-            ).alias("_near_hi"),
-        )
-        is_dense = F.col("_ok") >= F.lit(hot_min_precision) * F.col("_tot")
-        dense = None
-        if n_over <= _HOT_KEYS_LOCAL_MAX:
-            probe_rows = bucket_stats.collect()
-            _mark("density probe done")
-            dense_list = [
-                (int(r["band"]), int(r["band_hash"]))
-                for r in probe_rows
-                if r["_ok"] >= hot_min_precision * r["_tot"]
-            ]
-            n_dense = len(dense_list)
-            n_sampled = sum(r["_tot"] for r in probe_rows)
-            n_near = sum(
-                r["_near_lo"] + r["_near_hi"] for r in probe_rows
-            )
-            if n_dense > 0:
-                dense = F.broadcast(spark.createDataFrame(
-                    dense_list, schema="band int, band_hash bigint"
-                ))
-        else:
-            # pathological hot-bucket count: keep the per-bucket stats
-            # DISTRIBUTED — one persisted aggregate, one scalar job,
-            # dense keys as a filtered view (shuffle-joined below; a
-            # multi-million-row "broadcast" would be its own failure)
-            bucket_stats = bucket_stats.persist()
-            extra_caches.append(bucket_stats)
-            g = bucket_stats.agg(
-                F.coalesce(F.sum(is_dense.cast("long")), F.lit(0)),
-                F.coalesce(F.sum("_tot"), F.lit(0)),
-                F.coalesce(
-                    F.sum(F.col("_near_lo") + F.col("_near_hi")), F.lit(0)
-                ),
-            ).first()
-            _mark("density probe done (distributed)")
-            n_dense, n_sampled, n_near = (int(x) for x in g)
-            if n_dense > 0:
-                dense = bucket_stats.filter(is_dense).select(
-                    "band", "band_hash"
-                )
-        info["dense_buckets_kept"] = n_dense
-        info["buckets_dropped"] = n_over - n_dense
-        info["probe_sampled_pairs"] = n_sampled
-        info["probe_pairs_near_threshold"] = n_near
+        caches.append(verdicts)
         near_frac = n_near / n_sampled if n_sampled else 0.0
-        info["probe_near_threshold_frac"] = round(near_frac, 4)
-        # the recall sweep (BENCH/BASELINE.md) pinned recall loss to
-        # the banding collision curve as family similarity approaches
-        # the threshold; when >=30% of sampled in-bucket mass sits
-        # within ±0.1 of it, the same loss is likely happening OUTSIDE
-        # hot buckets too — surface the tuning hint online
-        info["banding_boundary_hint"] = bool(
-            n_sampled and near_frac >= 0.30
+        info.update(
+            dense_buckets_kept=n_dense,
+            buckets_dropped=n_over - n_dense,
+            probe_sampled_pairs=n_sampled,
+            probe_pairs_near_threshold=n_near,
+            probe_near_threshold_frac=round(near_frac, 4),
+            # the recall sweep (BENCH/BASELINE.md) pinned recall loss
+            # to the banding collision curve as family similarity
+            # approaches the threshold; when >=30% of sampled
+            # in-bucket mass sits within ±0.1 of it, the same loss is
+            # likely happening OUTSIDE hot buckets too — surface the
+            # tuning hint online
+            banding_boundary_hint=bool(n_sampled and near_frac >= 0.30),
         )
         if info["banding_boundary_hint"]:
             _LOG.warning(
@@ -1176,11 +786,11 @@ def _pairs_from_banded(banded, tfidf, threshold, max_bucket_size,
                 "64 hashes / 16 bands) for fuller recall",
                 100 * near_frac, threshold,
             )
-        if dense is not None:
-            dense_members = banded.join(
-                dense, ["band", "band_hash"], "left_semi"
+        if n_dense > 0:
+            dense = verdicts.filter("_dense").select("band", "band_hash")
+            kept = kept.unionByName(
+                hot.join(dense, ["band", "band_hash"], "left_semi")
             )
-            candidates = candidates.unionByName(_self_join(dense_members))
 
     log = _LOG.warning if info["buckets_dropped"] > 0 else _LOG.info
     log(
@@ -1190,16 +800,84 @@ def _pairs_from_banded(banded, tfidf, threshold, max_bucket_size,
         hot_bucket_mode,
         n_over,
         info["buckets_total"],
-        n_hot_rows,
+        info["banded_rows_in_hot_buckets"],
         info["dense_buckets_kept"],
         info["buckets_dropped"],
     )
     if stats is not None:
         stats.update(info)
-    out = _rescore_candidates(_dedup_pairs(candidates), tfidf, threshold)
-    out = _finalize(out, banded, *extra_caches)
-    _mark("rescore+finalize done")
-    return out
+    out = _rescore_candidates(
+        distinct_pairs(bucket_pairs(kept)), tfidf, threshold
+    )
+    return _finalize(out, *caches)
+
+
+def _density_probe(hot, tfidf, threshold, sample_docs, min_precision):
+    """ONE job deciding each hot bucket's density from the exact
+    cosines of its sampled member pairs. Returns the persisted
+    per-bucket verdicts (band, band_hash, _tot, _near, _dense) — they
+    stay distributed, only the scalars reach the driver — and the
+    scalars n_dense, n_sampled (pairs scored) and n_near (pairs within
+    ±0.1 of the threshold).
+
+    The sample is the first ``sample_docs`` members in
+    (xxhash64(doc_id), doc_id) order, cut straight from the bucket's
+    member list."""
+    by_hash = F.array_sort(F.transform(
+        "_m", lambda d: F.struct(F.xxhash64(d).alias("h"), d.alias("d"))
+    ))
+    sample = hot.select(
+        "band", "band_hash",
+        # back in id order, which the pair emitter expects
+        F.array_sort(F.transform(
+            F.slice(by_hash, 1, sample_docs), lambda x: x["d"]
+        )).alias("_m"),
+    )
+    # restrict the probe rescore's doc-vector build to the SAMPLED
+    # docs (<= sample_docs * n_hot rows, broadcastable): building maps
+    # for the whole corpus to score a few thousand sample pairs was a
+    # parallelism-independent fixed cost
+    probe_tfidf = tfidf.join(
+        F.broadcast(
+            sample.select(F.explode("_m").alias("doc_id")).distinct()
+        ),
+        "doc_id",
+        "left_semi",
+    )
+    # one materialized vector build for both broadcast sides (the
+    # same fix as the stop-list probe)
+    probe_vec = _doc_vectors(probe_tfidf).persist()
+    # threshold 0.0 keeps EVERY sampled pair's exact cosine (tf-idf
+    # weights are non-negative): the same scores decide bucket density
+    # AND measure how close the corpus's in-bucket similarity mass
+    # sits to the threshold
+    scored = _rescore_candidates(
+        bucket_pairs(sample, carry=("band", "band_hash")), probe_tfidf,
+        0.0, keep_cols=("band", "band_hash"), vec_join="broadcast",
+        vec=probe_vec,
+    )
+    s = F.col("similarity_score")
+    verdicts = scored.groupBy("band", "band_hash").agg(
+        F.count("*").alias("_tot"),
+        F.sum((s >= threshold).cast("long")).alias("_ok"),
+        F.sum(
+            ((s >= threshold - 0.1) & (s < threshold + 0.1)).cast("long")
+        ).alias("_near"),
+    ).select(
+        "band", "band_hash", "_tot", "_near",
+        (F.col("_ok") >= F.lit(min_precision) * F.col("_tot"))
+        .alias("_dense"),
+    ).persist()
+    n_dense, n_sampled, n_near = (
+        int(v or 0)
+        for v in verdicts.agg(
+            F.sum(F.col("_dense").cast("long")),
+            F.sum("_tot"),
+            F.sum("_near"),
+        ).first()
+    )
+    probe_vec.unpersist()
+    return verdicts, n_dense, n_sampled, n_near
 
 
 def with_similarity_metadata(pairs: DataFrame) -> DataFrame:

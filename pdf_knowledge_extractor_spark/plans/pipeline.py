@@ -47,7 +47,6 @@ from pdf_knowledge_extractor_spark.operators.related import (
 )
 from pdf_knowledge_extractor_spark.operators.similarity import (
     exact_cosine_pairs,
-    lsh_cosine_pairs,
     minhash_blocked_cosine_pairs,
     prefix_cosine_pairs,
     with_similarity_metadata,
@@ -80,7 +79,6 @@ class PipelineConfig:
     #  "minhash" — MinHash-Jaccard banding blocker + exact cosine
     #              rescore (default scale path: near-linear candidates,
     #              recall approximate but >= 0.95 on near-dup corpora)
-    #  "lsh"     — BucketedRandomProjection blocking + exact rescore
     similarity_strategy: str = "minhash"
     # degenerate-bucket cap for the minhash blocker: a (band, band_hash)
     # bucket larger than this holds |bucket|² candidate pairs — the
@@ -101,11 +99,10 @@ class PipelineConfig:
     # probe-verifies each head term's posting list and stop-lists only
     # verified Zipf-head NOISE — boilerplate-family base words keep
     # their signal (recall-safe; the probe is the same machinery as
-    # the hot-bucket density verify). An int is the r5 manual ABSOLUTE
-    # df cap: faster (no probe) but silently erases families larger
-    # than the cap. None disables (full-signature banding — the
-    # measurement baseline). See minhash_blocked_cosine_pairs.
-    similarity_signature_max_df: int | str | None = "auto"
+    # the hot-bucket density verify). None disables (full-signature
+    # banding — the measurement baseline). See
+    # minhash_blocked_cosine_pairs.
+    similarity_signature_max_df: str | None = "auto"
     # probe ENGAGEMENT gate for the "auto" stop-list: skip the probe
     # entirely when sampling the head terms would touch more than
     # this fraction of the corpus (small-N regime — there the probe
@@ -124,10 +121,6 @@ class PipelineConfig:
     # (e.g. 64/16 -> r=4) at the cost of more candidate collisions
     similarity_num_hashes: int = 60
     similarity_bands: int = 12
-    lsh_hash_tables: int = 4
-    lsh_dims: int = 1 << 12         # hashed term space for blocking only
-                                    # (rescoring is exact; raise to 2^16+
-                                    # for vocabularies >> 100k terms)
     with_clusters: bool = False     # KMeans adds driver-side loop; opt-in
     # pin k to skip the silhouette search loop (one distributed fit
     # instead of up to 9 — what a production run at known k does);
@@ -347,6 +340,10 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Run the full KG-construction DAG; returns every relation."""
     cfg = cfg or PipelineConfig()
+    if cfg.similarity_strategy not in ("exact", "prefix", "minhash"):
+        raise ValueError(
+            f"unknown similarity_strategy: {cfg.similarity_strategy!r}"
+        )
 
     # §2.9 custom hooks (config.yaml.example:176-181 analog): named
     # preprocessors rewrite the text column before enrichment; named
@@ -465,15 +462,7 @@ def run_pipeline(
         ).localCheckpoint(eager=True)
     sc.setJobDescription(None)
 
-    if cfg.similarity_strategy == "lsh":
-        vectors = to_ml_vectors(tfidf, vocab_size=cfg.lsh_dims).persist()
-        pairs = lsh_cosine_pairs(
-            vectors,
-            threshold=cfg.similarity_threshold,
-            num_hash_tables=cfg.lsh_hash_tables,
-            tfidf=tfidf,
-        )
-    elif cfg.similarity_strategy == "prefix":
+    if cfg.similarity_strategy == "prefix":
         pairs = prefix_cosine_pairs(tfidf, threshold=cfg.similarity_threshold)
     elif cfg.similarity_strategy == "minhash":
         sim_stats: dict = {}

@@ -37,21 +37,21 @@ def test_no_row_python_in_pipeline(spark, small_corpus):
 
 
 def test_no_row_python_lsh_and_clusters(spark, small_corpus):
-    """The lsh strategy and the clustering path route through
-    to_ml_vectors — audit that its UDF stays Arrow-batched
-    (ArrowEvalPython), never BatchEvalPython, across EVERY similarity
-    strategy the pipeline offers."""
-    for strategy in ("lsh", "minhash", "exact"):
+    """The clustering path routes through to_ml_vectors — audit that
+    its UDF stays Arrow-batched (ArrowEvalPython), never
+    BatchEvalPython, across the banded and exact similarity
+    strategies."""
+    for strategy in ("minhash", "exact"):
         res = run_pipeline(
             spark, small_corpus,
             PipelineConfig(
                 similarity_strategy=strategy,
-                with_clusters=(strategy == "lsh"),
+                with_clusters=(strategy == "minhash"),
             ),
             id_col="doc_id", text_col="content", lang_col="lang",
         )
         names = ["similarities", "triples"]
-        if strategy == "lsh":
+        if strategy == "minhash":
             names.append("clusters")
         for name in names:
             plan = _plan(res[name])

@@ -1,5 +1,5 @@
 """Similarity join: exact vs numpy golden; prefix-filtered == exact;
-LSH recall >= 0.95 (SURVEY.md §7.2 item 5)."""
+MinHash-blocked caps, density probe and signature stop-list."""
 
 from __future__ import annotations
 
@@ -8,13 +8,9 @@ import pyspark.sql.functions as F
 from pdf_knowledge_extractor_spark.operators.mentions import keyword_mentions
 from pdf_knowledge_extractor_spark.operators.similarity import (
     exact_cosine_pairs,
-    lsh_cosine_pairs,
     prefix_cosine_pairs,
 )
-from pdf_knowledge_extractor_spark.operators.tfidf import (
-    tfidf_longform,
-    to_ml_vectors,
-)
+from pdf_knowledge_extractor_spark.operators.tfidf import tfidf_longform
 from tests.golden_reference import golden_similarities
 
 
@@ -97,16 +93,9 @@ def test_minhash_bucket_cap_drop_mode(spark):
     assert stats["dense_buckets_kept"] == 0
 
 
-def test_minhash_bucket_cap_verify_mode(spark):
-    """"verify" (default) mode density-probes hot buckets: a TRUE-dense
-    family (identical texts => every pair passes the exact rescore) is
-    kept in full despite exceeding the cap, while a FALSE-positive hot
-    bucket (same term SET => same minhash signature, but skewed tf
-    weights => cosine below threshold) is dropped."""
-    from pdf_knowledge_extractor_spark.operators.similarity import (
-        minhash_blocked_cosine_pairs,
-    )
-
+def _dense_and_pileup_docs(spark):
+    """20 identical docs (a true-dense family), a 20-doc false-positive
+    pile-up and 30 filler docs."""
     base = ("kernel scheduler preempts threads across cores under "
             "contention with fairness guarantees")
     rows = [(f"d{i:02d}", base) for i in range(20)]  # true-dense family
@@ -121,8 +110,20 @@ def test_minhash_bucket_cap_verify_mode(spark):
     for i in range(30):
         rows.append((f"z{i:02d}", f"unrelated filler number{i} payload "
                                   f"words entropy{i} salt{i} random{i}"))
-    docs = spark.createDataFrame(rows, "doc_id string, content string")
-    tfidf = _tfidf(docs)
+    return spark.createDataFrame(rows, "doc_id string, content string")
+
+
+def test_minhash_bucket_cap_verify_mode(spark):
+    """"verify" (default) mode density-probes hot buckets: a TRUE-dense
+    family (identical texts => every pair passes the exact rescore) is
+    kept in full despite exceeding the cap, while a FALSE-positive hot
+    bucket (same term SET => same minhash signature, but skewed tf
+    weights => cosine below threshold) is dropped."""
+    from pdf_knowledge_extractor_spark.operators.similarity import (
+        minhash_blocked_cosine_pairs,
+    )
+
+    tfidf = _tfidf(_dense_and_pileup_docs(spark))
 
     stats: dict = {}
     got = _pairs_dict(
@@ -138,6 +139,91 @@ def test_minhash_bucket_cap_verify_mode(spark):
     assert not fp_pairs, "false-positive hot bucket must be dropped"
     assert stats["dense_buckets_kept"] > 0
     assert stats["buckets_dropped"] > 0
+
+
+def test_minhash_hot_bucket_stats_exact(spark):
+    """Every value of the capped path's stats dict, and its pair set,
+    equals a pure-Python recomputation from the collected banded rows
+    and exact cosines: bucket census, the density probe over the first
+    ``hot_sample_docs`` members of each over-cap bucket in
+    (xxhash64(doc_id), doc_id) order, and pairs from every bucket under
+    the cap or verified dense."""
+    import math
+    from collections import defaultdict
+    from itertools import combinations
+
+    from pdf_knowledge_extractor_spark.operators.similarity import (
+        _banded_rows,
+        minhash_blocked_cosine_pairs,
+    )
+
+    cap, sample_docs, t, min_precision = 10, 8, 0.85, 0.5
+    tfidf = _tfidf(_dense_and_pileup_docs(spark))
+    stats: dict = {}
+    got = _pairs_dict(
+        minhash_blocked_cosine_pairs(
+            tfidf, t, max_bucket_size=cap, hot_sample_docs=sample_docs,
+            hot_min_precision=min_precision, stats=stats,
+            signature_max_df=None,
+        )
+    )
+
+    buckets = defaultdict(list)
+    for r in _banded_rows(tfidf, 60, 12).collect():
+        buckets[(r["band"], r["band_hash"])].append(r["doc_id"])
+    vec = defaultdict(dict)
+    for r in tfidf.collect():
+        vec[r["doc_id"]][r["term"]] = r["weight"]
+    h = {r["doc_id"]: r["h"] for r in tfidf.select(
+        "doc_id", F.xxhash64("doc_id").alias("h")).distinct().collect()}
+
+    def cos(a, b):
+        return math.fsum(w * vec[b].get(k, 0.0) for k, w in vec[a].items())
+
+    def pairs(members):
+        return set(combinations(sorted(members), 2))
+
+    hot = {k: m for k, m in buckets.items() if len(m) > cap}
+    n_dense = n_sampled = n_near = 0
+    emitting = [m for m in buckets.values() if len(m) <= cap]
+    for members in hot.values():
+        sample = sorted(members, key=lambda d: (h[d], d))[:sample_docs]
+        scores = [cos(a, b) for a, b in pairs(sample)]
+        # no sampled cosine sits on a boundary the probe compares with
+        assert all(min(abs(s - x) for x in (t - 0.1, t, t + 0.1)) > 1e-6
+                   for s in scores)
+        n_sampled += len(scores)
+        n_near += sum(t - 0.1 <= s < t + 0.1 for s in scores)
+        if sum(s >= t for s in scores) >= min_precision * len(scores):
+            n_dense += 1
+            emitting.append(members)
+    near_frac = n_near / n_sampled
+    assert stats == {
+        "cap": cap,
+        "mode": "verify",
+        "buckets_total": len(buckets),
+        "buckets_over_cap": len(hot),
+        "banded_rows_in_hot_buckets": sum(len(m) for m in hot.values()),
+        "candidate_pairs_subcap": sum(
+            len(m) * (len(m) - 1) // 2
+            for m in buckets.values() if len(m) <= cap
+        ),
+        "dense_buckets_kept": n_dense,
+        "buckets_dropped": len(hot) - n_dense,
+        "probe_sampled_pairs": n_sampled,
+        "probe_pairs_near_threshold": n_near,
+        "probe_near_threshold_frac": round(near_frac, 4),
+        "banding_boundary_hint": near_frac >= 0.30,
+    }
+    # the fixture exercises both verdicts
+    assert 0 < n_dense < len(hot)
+    candidates = set().union(*(pairs(m) for m in emitting))
+    scored = {p: cos(*p) for p in candidates}
+    assert all(abs(s - t) > 1e-6 for s in scored.values())
+    assert set(got) == {p for p, s in scored.items() if s >= t}
+    for p, s in got.items():
+        assert abs(s - scored[p]) < 1e-9
+    tfidf.unpersist()
 
 
 def test_family_pairs_survive_dropped_mixed_bucket_via_other_bands(spark):
@@ -182,56 +268,6 @@ def test_family_pairs_survive_dropped_mixed_bucket_via_other_bands(spark):
     assert len(fam_pairs) == 4 * 3 // 2, (
         f"family pairs lost with the mixed bucket: {sorted(got)}"
     )
-    tfidf.unpersist()
-
-
-def test_hot_keys_distributed_fallback_parity(spark, monkeypatch):
-    """Above _HOT_KEYS_LOCAL_MAX hot buckets, the capped path must stop
-    collecting hot/dense key lists to the driver and switch to
-    distributed joins (the 100-TB guard against an adversarial corpus
-    with millions of over-cap buckets). Forcing the bound to 0 must
-    produce BYTE-IDENTICAL pairs and census stats in both modes."""
-    from pdf_knowledge_extractor_spark.operators import similarity as sim
-
-    base = ("kernel scheduler preempts threads across cores under "
-            "contention with fairness guarantees")
-    rows = [(f"d{i:02d}", base) for i in range(20)]
-    fp_words = ["alpha", "bravo", "charlie", "delta", "echofox", "golfy",
-                "hotelz", "indiaq"]
-    for i in range(20):
-        hot = fp_words[i % len(fp_words)]
-        rows.append((f"f{i:02d}", " ".join(fp_words) + (" " + hot) * 12))
-    for i in range(30):
-        rows.append((f"z{i:02d}", f"unrelated filler number{i} payload "
-                                  f"words entropy{i} salt{i} random{i}"))
-    docs = spark.createDataFrame(rows, "doc_id string, content string")
-    tfidf = _tfidf(docs)
-
-    out = {}
-    for mode in ("verify", "drop"):
-        for bound in (100_000, 0):
-            monkeypatch.setattr(sim, "_HOT_KEYS_LOCAL_MAX", bound)
-            stats: dict = {}
-            pairs = _pairs_dict(
-                sim.minhash_blocked_cosine_pairs(
-                    tfidf, 0.9, max_bucket_size=10,
-                    hot_bucket_mode=mode, stats=stats,
-                )
-            )
-            out[(mode, bound)] = (pairs, stats)
-    for mode in ("verify", "drop"):
-        (p_local, s_local), (p_dist, s_dist) = (
-            out[(mode, 100_000)], out[(mode, 0)]
-        )
-        assert p_local == p_dist, f"{mode}: pair sets diverge"
-        for key in ("buckets_over_cap", "dense_buckets_kept",
-                    "buckets_dropped", "probe_sampled_pairs",
-                    "probe_pairs_near_threshold"):
-            if key in s_local or key in s_dist:
-                assert s_local.get(key) == s_dist.get(key), (
-                    f"{mode}/{key}: {s_local.get(key)} != {s_dist.get(key)}"
-                )
-    assert out[("verify", 0)][1]["dense_buckets_kept"] > 0
     tfidf.unpersist()
 
 
@@ -356,79 +392,6 @@ def test_pipeline_concepts_carry_context(spark, small_corpus):
     assert any('"description":' in r["jsonld"] for r in jl)
 
 
-def test_lsh_recall(spark, small_corpus):
-    tfidf = _tfidf(small_corpus)
-    exact = _pairs_dict(exact_cosine_pairs(tfidf, 0.7))
-    vectors = to_ml_vectors(tfidf, vocab_size=1 << 12)
-    lsh = _pairs_dict(lsh_cosine_pairs(vectors, 0.7, tfidf=tfidf))
-    # precision is exact by construction (rescoring); recall >= 0.95
-    assert set(lsh) <= set(exact) or all(
-        abs(lsh[k] - exact.get(k, -1)) < 1e-9 for k in lsh
-    )
-    recall = len(set(lsh) & set(exact)) / max(len(exact), 1)
-    assert recall >= 0.95, f"LSH recall {recall}"
-
-
-def test_signature_max_df_byte_identical_on_zipf_corpus(spark, small_corpus):
-    """Opt-in banding-signature df stop-list: on the standard Zipf
-    corpus the high-df head terms produce only random band collisions
-    that the exact rescore rejects, so filtering them from the
-    SIGNATURE (the rescore still dots full vectors) must leave the
-    emitted pair set byte-identical — the ~19x candidate cut measured
-    at 1.2M (BENCH/census_scale_r5.json) is pure waste removal there."""
-    from pdf_knowledge_extractor_spark.operators.similarity import (
-        minhash_blocked_cosine_pairs,
-    )
-
-    tfidf = _tfidf(small_corpus)
-    base = _pairs_dict(minhash_blocked_cosine_pairs(tfidf, 0.7))
-    # cap at 20% of the 200-doc corpus: excludes the hot CommonUtil
-    # head and the Zipf top ranks, keeps body tails and the engineered
-    # near-dup signal
-    stopped = _pairs_dict(
-        minhash_blocked_cosine_pairs(tfidf, 0.7, signature_max_df=40)
-    )
-    assert stopped == base
-    assert len(base) > 0
-
-
-def test_signature_max_df_loses_large_families(spark):
-    """The documented counter-case (why the knob is NOT a default):
-    a mutated-boilerplate family LARGER than the df cap has df ≈
-    family size on every shared base word, so the stop-list erases
-    the banding signal of every MUTATED member (their kept set is
-    their handful of member-specific words, pairwise disjoint). Only
-    the unmutated core survives: those members' kept sets are empty,
-    the empty-signature fallback bands them over their FULL term
-    sets, and the density probe keeps that (genuinely dense) bucket.
-    The verify-mode cap without the knob keeps the whole family."""
-    from pdf_knowledge_extractor_spark.operators.similarity import (
-        minhash_blocked_cosine_pairs,
-    )
-    from pdf_knowledge_extractor_spark.corpus import generate_corpus
-
-    docs = generate_corpus(
-        spark, 800, boilerplate_fraction=0.25, boilerplate_families=1
-    ).select("doc_id", "content")
-    tfidf = _tfidf(docs)
-
-    kept = minhash_blocked_cosine_pairs(
-        tfidf, 0.7, max_bucket_size=50, hot_bucket_mode="verify"
-    ).count()
-    lost = minhash_blocked_cosine_pairs(
-        tfidf, 0.7, max_bucket_size=50, hot_bucket_mode="verify",
-        signature_max_df=50,
-    ).count()
-    # ~200 family members; with base words df≈200 > 50 stopped out,
-    # the mutated majority of the family is lost (>85%), while the
-    # unmutated core (~0.97^40 ≈ 30% of members share an identical
-    # body -> empty kept set -> full-set fallback -> dense bucket the
-    # probe keeps) must survive — proving both the loss AND the
-    # empty-signature fallback
-    assert kept > 1000
-    assert 0 < lost < kept * 0.15
-
-
 def test_auto_stoplist_byte_identical_on_zipf_corpus(spark, small_corpus):
     """Round-6 headline: signature_max_df='auto' (the DEFAULT) probes
     each head term's posting list and excludes only verified Zipf-head
@@ -536,8 +499,7 @@ def test_auto_stoplist_recall_safe_on_large_families(spark):
     signatures, and lose nothing — measured against the EXACT pair
     set, since banding is probabilistic and excluding noise heads
     legitimately perturbs which borderline pairs collide (here it
-    IMPROVES recall: fewer wasted collisions). The manual cap on the
-    same corpus collapses to <10% recall."""
+    IMPROVES recall: fewer wasted collisions)."""
     from pdf_knowledge_extractor_spark.corpus import generate_corpus
     from pdf_knowledge_extractor_spark.operators.similarity import (
         exact_cosine_pairs,
@@ -564,11 +526,6 @@ def test_auto_stoplist_recall_safe_on_large_families(spark):
             stats=stats, **kw
         )
     ))
-    manual = set(_pairs_dict(
-        minhash_blocked_cosine_pairs(
-            tfidf, 0.7, signature_max_df=50, **kw
-        )
-    ))
     # the probe recognized family base words as signal
     assert stats["signature_heads_kept_family"] > 0
     assert stats["signature_heads_excluded"] > 0
@@ -580,6 +537,4 @@ def test_auto_stoplist_recall_safe_on_large_families(spark):
         f"auto {auto_recall} < baseline {base_recall}"
     )
     assert auto_recall > 0.999
-    # the manual cap's documented silent collapse, for contrast
-    assert len(manual) < 0.15 * len(exact)
     tfidf.unpersist()
