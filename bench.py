@@ -32,8 +32,8 @@ a bench log), not contamination.
 
 FRESH-SESSION MODE (round 6, VERDICT r5 item 7): --fresh-session-per-row
 (or PKE_BENCH_FRESH_SESSION=1) runs every row in its own subprocess
-JVM — the reusable form of tools/attrib_regression.py's fresh-session
-arm, separating per-row regressions from session-accumulated state
+JVM — the reusable form of the round-5 fresh-session attribution arm
+(BENCH/attrib_regression_r5.json), separating per-row regressions from session-accumulated state
 (storage leaks, GC pressure, codegen cache) in one command. Rows that
 need the pipeline's tfidf rebuild it untimed in their own JVM, so
 fresh-mode rows are directly comparable to the same row's shared-mode

@@ -97,7 +97,7 @@ def main() -> None:
 ## Scaling run — {stamp}
 
 Same job (full KG pipeline: enrich -> mentions -> tfidf -> salted
-concepts + canonicalize -> MinHash-blocked similarity join -> related
+concepts + canonicalize -> MinHash-blocked similarity join
 -> graph -> triples; similarity strategy minhash) on the identical deterministic {ROWS:,}-row
 source-code corpus, separate JVM per parallelism level, warm-started.
 

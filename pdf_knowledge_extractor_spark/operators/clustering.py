@@ -30,10 +30,10 @@ def cluster_documents(
     """vectors(doc_id, features) -> (assignments(doc_id, cluster_id),
     chosen_k, silhouette). ``k=None`` runs the silhouette search.
 
-    ``unpersist_input=False`` keeps the internal vectors cache alive
-    for the RETURNED (lazy) assignments' first action — the returned
-    transform re-reads vectors, and releasing the cache before the
-    caller materializes assignments forces one more full
+    ``unpersist_input=False`` keeps the internal vectors cache alive,
+    on every path, for the RETURNED (lazy) assignments' first action —
+    the returned transform re-reads vectors, and releasing the cache
+    before the caller materializes assignments forces one more full
     to_ml_vectors recompute (the caller then owns the release via
     ``vectors.unpersist()``)."""
     from pyspark.ml.clustering import KMeans
@@ -50,7 +50,8 @@ def cluster_documents(
     n = vectors.count()
     sc0.setJobDescription(None)
     if n < 4:
-        vectors.unpersist()
+        if unpersist_input:
+            vectors.unpersist()
         return (
             vectors.select("doc_id", F.lit(0).alias("cluster_id")),
             1,
@@ -67,9 +68,9 @@ def cluster_documents(
             k=kk, seed=seed, featuresCol="features", predictionCol="cluster_id"
         )
         # job-description markers so per-job wall time is attributable
-        # post-hoc from the status store (tools/attrib_clustered_
-        # variance.py) — the KMeans fit and the silhouette evaluation
-        # are the two driver-blocking ML actions in the clustered path
+        # post-hoc from the status store — the KMeans fit and the
+        # silhouette evaluation are the two driver-blocking ML actions
+        # in the clustered path
         sc.setJobDescription(f"pke: kmeans fit k={kk}")
         model = km.fit(vectors)
         preds = model.transform(vectors)
@@ -101,7 +102,8 @@ def cluster_documents(
             continue
         if best is None or score > best[2]:
             best = (preds, kk, score)
-    vectors.unpersist()
+    if unpersist_input:
+        vectors.unpersist()
     if best is None:
         return (
             vectors.select("doc_id", F.lit(0).alias("cluster_id")), 1, 0.0

@@ -61,28 +61,20 @@ def aggregate_concepts(
     concepts(text, concept_type, frequency, importance, document_ids,
     n_documents).
     """
-    has_context = "context" in mentions.columns
     base = mentions.select(
         F.lower(F.col("text")).alias("text"),
         "concept_type",
         "importance",
         "doc_id",
-        *(["context"] if has_context else []),
     )
     # Stage 1 — per-(concept, doc) reduction. This is the ONLY
     # operator that consumes the full mention stream, and it is a
     # codegen HashAggregate with fixed-width buffers (count/sum):
     # spillable under memory pressure, unlike an object-hash collect
     # whose per-key list buffers grow with input multiplicity and whose
-    # sort-based fallback re-spills the full context payload (the OOM /
-    # shared-disk-spill mode the 1.2M octave hit). context is one
-    # deterministic sentence per (doc, mention text) by construction
-    # (_context_expr takes the FIRST containing sentence), so adding it
-    # to the grouping key does not multiply groups.
-    doc_keys = ["text", "concept_type", "doc_id"] + (
-        ["context"] if has_context else []
-    )
-    per_doc = base.groupBy(*doc_keys).agg(
+    # sort-based fallback re-spills the full payload (the OOM /
+    # shared-disk-spill mode the 1.2M octave hit).
+    per_doc = base.groupBy("text", "concept_type", "doc_id").agg(
         F.count("*").alias("_cnt"),
         F.sum("importance").alias("_imp_sum"),
     )
@@ -122,34 +114,19 @@ def aggregate_concepts(
     salted = salted.repartition(
         F.col("text"), F.col("concept_type"), F.col("_salt")
     )
-    partial_aggs = [
+    partial = salted.groupBy("text", "concept_type", "_salt").agg(
         F.sum("_cnt").alias("_cnt"),
         F.sum("_imp_sum").alias("_imp_sum"),
         # distinct docs per (concept, salt): the stage-1 input is
-        # deduped per (concept, doc[, context]) and context is one
-        # deterministic sentence per (doc, mention text) by
-        # construction, so count(*) IS the per-salt distinct-doc
-        # count; summing it across salts gives the global distinct
-        # count exactly (each doc lives in exactly one salt)
+        # deduped per (concept, doc), so count(*) IS the per-salt
+        # distinct-doc count; summing it across salts gives the global
+        # distinct count exactly (each doc lives in exactly one salt)
         F.count("*").alias("_docs_n"),
         F.slice(
             F.array_sort(F.collect_set("doc_id")), 1, doc_id_cap
         ).alias("_docs"),
-    ]
-    if has_context:
-        # 5-per-concept cap per reference (semantic_analyzer.py:442),
-        # taken as the 5 smallest distinct sentences — deterministic
-        # under any partitioning, where the reference's single-process
-        # "first 5 encountered" depends on scan order
-        partial_aggs.append(
-            F.slice(F.array_sort(F.collect_set("context")), 1, 5).alias(
-                "_ctx"
-            )
-        )
-    partial = salted.groupBy("text", "concept_type", "_salt").agg(
-        *partial_aggs
     )
-    merge_aggs = [
+    merged = partial.groupBy("text", "concept_type").agg(
         F.sum("_cnt").alias("frequency"),
         (F.sum("_imp_sum") / F.sum("_cnt")).alias("importance"),
         F.sum("_docs_n").alias("_n_docs_total"),
@@ -158,18 +135,7 @@ def aggregate_concepts(
             1,
             doc_id_cap,
         ).alias("document_ids"),
-    ]
-    if has_context:
-        merge_aggs.append(
-            F.slice(
-                F.array_distinct(
-                    F.array_sort(F.flatten(F.collect_list("_ctx")))
-                ),
-                1,
-                5,
-            ).alias("context_sentences")
-        )
-    merged = partial.groupBy("text", "concept_type").agg(*merge_aggs)
+    )
     # n_documents from the count aggregates, NOT size(document_ids):
     # equal by the smallest-K composition (the merged capped list has
     # min(total_distinct, cap) elements), and — the point — it frees
@@ -230,14 +196,14 @@ def aggregate_concepts_canonical(
        (frequency, importance) ranking that picks the winners. The
        heavy mention stream crosses ONE exchange carrying
        (text, type, count, sum) — no doc ids, no object aggs.
-    2. LIST pass — ``document_ids`` (and ``context_sentences`` when
-       present) are collected ONLY for the winners' alias variants: a
-       broadcast semi-join filters the mention stream to those
-       (~max_concepts · alias-fanout) texts, and the exact salted
-       slice/merge machinery of :func:`aggregate_concepts` runs on
-       that sliver, reproducing the capped lists byte-for-byte (the
-       per-salt smallest-K caps compose to the global smallest-K, as
-       before).
+    2. LIST pass — ``document_ids`` are collected ONLY for the
+       winners' alias variants: a broadcast semi-join filters the
+       mention stream to those (~max_concepts · alias-fanout) texts,
+       and the exact salted slice/merge machinery of
+       :func:`aggregate_concepts` runs on that sliver, reproducing the
+       capped lists byte-for-byte (the per-salt smallest-K caps
+       compose to the global smallest-K, as before)
+       (``test_canonical_aggregate_equals_composition``).
 
     Value notes: frequency merges are integer-exact. importance is
     Σimportance/Σcount per canonical — the same value the composition
@@ -246,13 +212,11 @@ def aggregate_concepts_canonical(
     the last ulp: ranking rounds to 9 dp, the relationship threshold
     compares means of cross-type constants far from the cut, and the
     parity suite rounds to 6 dp)."""
-    has_context = "context" in mentions.columns
     base = mentions.select(
         F.lower(F.col("text")).alias("text"),
         "concept_type",
         "importance",
         "doc_id",
-        *(["context"] if has_context else []),
     )
     # ---- pass 1: stats, canonical, winners --------------------------
     stats = base.groupBy("text", "concept_type").agg(
@@ -288,9 +252,7 @@ def aggregate_concepts_canonical(
         ["canonical", "concept_type"],
         "left_semi",
     ).select("text", "concept_type", "canonical")
-    doc_keys = ["text", "concept_type", "doc_id"] + (
-        ["context"] if has_context else []
-    )
+    doc_keys = ["text", "concept_type", "doc_id"]
     per_doc = (
         base.join(
             F.broadcast(variants.select("text", "concept_type")),
@@ -303,69 +265,33 @@ def aggregate_concepts_canonical(
     salted = per_doc.withColumn(
         "_salt", F.pmod(F.hash("doc_id"), F.lit(n_salts))
     )
-    partial_aggs = [
+    partial = salted.groupBy("text", "concept_type", "_salt").agg(
         F.slice(
             F.array_sort(F.collect_set("doc_id")), 1, doc_id_cap
         ).alias("_docs"),
-    ]
-    if has_context:
-        partial_aggs.append(
-            F.slice(F.array_sort(F.collect_set("context")), 1, 5).alias(
-                "_ctx"
-            )
-        )
-    partial = salted.groupBy("text", "concept_type", "_salt").agg(
-        *partial_aggs
     )
-    variant_aggs = [
+    variant_lists = partial.groupBy("text", "concept_type").agg(
         F.slice(
             F.array_sort(F.array_distinct(F.flatten(F.collect_list("_docs")))),
             1,
             doc_id_cap,
         ).alias("document_ids"),
-    ]
-    if has_context:
-        variant_aggs.append(
-            F.slice(
-                F.array_distinct(
-                    F.array_sort(F.flatten(F.collect_list("_ctx")))
-                ),
-                1,
-                5,
-            ).alias("_vctx")
-        )
-    variant_lists = partial.groupBy("text", "concept_type").agg(
-        *variant_aggs
     )
-    merge_aggs = [
-        F.array_sort(
-            F.array_distinct(F.flatten(F.collect_list("document_ids")))
-        ).alias("document_ids"),
-    ]
-    if has_context:
-        merge_aggs.append(
-            F.slice(
-                F.array_distinct(
-                    F.array_sort(F.flatten(F.collect_list("_vctx")))
-                ),
-                1,
-                5,
-            ).alias("context_sentences")
-        )
     lists = (
         variant_lists.join(
             F.broadcast(variants), ["text", "concept_type"]
         )
         .groupBy(F.col("canonical").alias("text"), "concept_type")
-        .agg(*merge_aggs)
+        .agg(
+            F.array_sort(
+                F.array_distinct(F.flatten(F.collect_list("document_ids")))
+            ).alias("document_ids"),
+        )
     )
-    out_cols = ["text", "concept_type", "frequency", "importance",
-                "document_ids"]
-    if has_context:
-        out_cols.append("context_sentences")
     out = (
         winners.join(lists, ["text", "concept_type"], "left")
-        .select(*out_cols)
+        .select("text", "concept_type", "frequency", "importance",
+                "document_ids")
         .withColumn("n_documents", F.size("document_ids"))
     )
     if materialize:
@@ -422,32 +348,19 @@ def canonical_merge(
         with_canon = concepts.withColumn(
             "canonical", F.min("text").over(w)
         )
-    merge_aggs = [
-        F.sum("frequency").alias("frequency"),
-        (
-            F.sum(F.col("importance") * F.col("frequency"))
-            / F.sum("frequency")
-        ).alias("importance"),
-        F.array_sort(
-            F.array_distinct(F.flatten(F.collect_list("document_ids")))
-        ).alias("document_ids"),
-    ]
-    if "context_sentences" in concepts.columns:
-        # keep the reference's 5-per-concept cap across merged variants
-        # (semantic_analyzer.py:442)
-        merge_aggs.append(
-            F.slice(
-                F.array_distinct(
-                    F.array_sort(F.flatten(F.collect_list("context_sentences")))
-                ),
-                1,
-                5,
-            ).alias("context_sentences")
-        )
     merged = (
         with_canon
         .groupBy(F.col("canonical").alias("text"), "concept_type")
-        .agg(*merge_aggs)
+        .agg(
+            F.sum("frequency").alias("frequency"),
+            (
+                F.sum(F.col("importance") * F.col("frequency"))
+                / F.sum("frequency")
+            ).alias("importance"),
+            F.array_sort(
+                F.array_distinct(F.flatten(F.collect_list("document_ids")))
+            ).alias("document_ids"),
+        )
         .withColumn("n_documents", F.size("document_ids"))
     )
     if min_frequency and min_frequency > 1:
@@ -471,7 +384,7 @@ def with_concept_contexts(
 ) -> DataFrame:
     """Attach ``context_sentences`` (<= n_sentences, reference cap at
     semantic_analyzer.py:442) to an aggregated concepts table — the
-    SCALE path for concept contexts.
+    one place a concept's context sentences are decided.
 
     Why post-aggregation: carrying a context string on every mention
     row multiplies the mention shuffle by the sentence length — and on
@@ -483,9 +396,16 @@ def with_concept_contexts(
     kept sorted) and extracts the first containing sentence per doc —
     a broadcast join of <= max_concepts * n_docs rows against a
     two-column doc scan, the same deterministic min-doc pattern as
-    triples.concept_definition_triples. The per-mention variant
-    remains available via keyword_mentions(with_context=True) ->
-    aggregate_concepts for prose-shaped corpora."""
+    triples.concept_definition_triples.
+
+    Each context is the first sentence (split on ``[.!?]\\s+``: RE2-safe
+    for the DuckDB oracle, so terminal punctuation is dropped) whose
+    lowercase form contains the concept text; a concept with no such
+    sentence in its first ``n_docs`` documents gets an empty list (the
+    reference stores nothing then, semantic_analyzer.py:427-428). The
+    list is the ``n_sentences`` smallest distinct sentences —
+    deterministic under any partitioning, where the reference's
+    "first 5 encountered" depends on scan order."""
     tgt = concepts.select(
         "text",
         "concept_type",

@@ -314,7 +314,6 @@ def minhash_lsh_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_bucket_size: int | None = None,
-    hot_bucket_mode: str = "star",
 ) -> DataFrame:
     """MinHash banding dedup: K=num_hashes minhashes split into
     ``bands`` bands of K/bands rows; docs sharing any band hash become
@@ -338,29 +337,21 @@ def minhash_lsh_pairs(
     ``max_bucket_size``: the quadratic failure mode of banding is a
     DEGENERATE bucket — a band hash shared by thousands of docs
     (boilerplate shingles, tiny vocabularies) contributes |bucket|²
-    candidate pairs. ``hot_bucket_mode`` picks the treatment of a
-    bucket over the cap:
-
-    - "star" (default): each hot-bucket member pairs with the bucket's
-      MINIMUM doc id only — O(|bucket|) candidates instead of
-      |bucket|². Dedup consumes these pairs as CONNECTIVITY (the
-      duplicate-group step is a connected-components pass over them),
-      and a star on the representative preserves exactly that: a true
-      near-dup family stays one component; a false-positive pile-up
-      costs |bucket| exact-Jaccard verifications that then fail —
-      linear waste, not quadratic. What star mode gives up is only the
-      non-representative PAIR list inside hot buckets, which dedup
-      never needed. (The similarity θ-join, whose contract IS the pair
-      list, uses the density-probe "verify" mode instead — see
-      similarity.minhash_blocked_cosine_pairs.)
-    - "drop": drop hot buckets entirely (round-3 behavior) —
-      fragments true dup families whose texts differ (mutated
-      boilerplate), leaving only exact-fingerprint recovery.
+    candidate pairs. Each member of a bucket over the cap pairs with
+    the bucket's MINIMUM doc id only (a star) — O(|bucket|) candidates
+    instead of |bucket|². Dedup consumes these pairs as CONNECTIVITY
+    (the duplicate-group step is a connected-components pass over
+    them), and a star on the representative preserves exactly that: a
+    true near-dup family stays one component; a false-positive pile-up
+    costs |bucket| exact-Jaccard verifications that then fail — linear
+    waste, not quadratic. What the star gives up is only the
+    non-representative PAIR list inside hot buckets, which dedup never
+    needed. (The similarity θ-join, whose contract IS the pair list,
+    density-probes hot buckets instead — see
+    similarity.minhash_blocked_cosine_pairs.)
 
     None (default cap) keeps full banding recall for the oracle gate;
     set a few hundred at 100-TB scale."""
-    if max_bucket_size is not None and hot_bucket_mode not in ("star", "drop"):
-        raise ValueError(f"unknown hot_bucket_mode: {hot_bucket_mode!r}")
     rows_per_band = num_hashes // bands
     sets = _spread_input(docs).select(
         F.col(id_col).alias("doc_id"),
@@ -394,11 +385,9 @@ def minhash_lsh_pairs(
         .withColumnRenamed("pos", "band")
         .withColumnRenamed("col", "band_hash")
     )
-    buckets = band_buckets(banded)
-    if max_bucket_size is not None and hot_bucket_mode == "drop":
-        buckets = buckets.filter(F.size("_m") <= max_bucket_size)
-    star_over = max_bucket_size if hot_bucket_mode == "star" else None
-    candidates = distinct_pairs(bucket_pairs(buckets, star_over))
+    candidates = distinct_pairs(
+        bucket_pairs(band_buckets(banded), star_over=max_bucket_size)
+    )
     return _finalize(
         _verify_jaccard(candidates, threshold, sets=sets).select(
             "doc1_id", "doc2_id", "jaccard"

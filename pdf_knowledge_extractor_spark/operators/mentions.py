@@ -104,82 +104,28 @@ def _code_entities(content: pd.Series, lang: pd.Series) -> pd.Series:
 
 
 def keyword_mentions(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     with_context: bool = False) -> DataFrame:
+                     text_col: str = "text") -> DataFrame:
     """Per-doc keyword mention stream: (doc_id, text, concept_type,
-    importance[, context]). importance = 0.5 flat pre-TFIDF (re-scored
-    by the concept aggregation / tfidf stage).
-
-    ``with_context`` adds the first sentence containing the mention
-    (reference _extract_context, semantic_analyzer.py:703-711) as
-    a pure column expression: sentence split + array filter. The split
-    regex is ``[.!?]\\s+`` (delimiter consumed, terminal punctuation
-    dropped) rather than the lookbehind form — RE2 engines (DuckDB's
-    regexp_split_to_array, used by the oracle) cannot express
-    lookbehind, and mention tokens never contain punctuation so the
-    containment test is unaffected. The sentence split runs in the
-    projection BELOW the token explode (once per document), so per
-    mention only the array-filter containment test runs — never a
-    re-split of the full text per mention row.
-    """
-    pre_cols = [
-        F.col(id_col).alias("doc_id"),
-        F.explode(keyword_tokens_nostop(F.col(text_col))).alias("text"),
-    ]
-    if with_context:
-        pre_cols.insert(
-            1, F.split(F.col(text_col), r"[.!?]\s+").alias("_sents")
-        )
-    out = (
+    importance). importance = 0.5 flat pre-TFIDF (re-scored by the
+    concept aggregation / tfidf stage). Context sentences are attached
+    after aggregation, per concept (concepts.with_concept_contexts)."""
+    return (
         # NOT spread here: tokenization is light enough that a
         # round-robin text shuffle costs more than it parallelizes
         # (measured at sf0.1); heavy projections (shingling, enrich)
         # spread at their own entry points instead
-        docs.select(*pre_cols)
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.explode(keyword_tokens_nostop(F.col(text_col))).alias("text"),
+        )
         .withColumn("concept_type", F.lit("keyword"))
         .withColumn("importance", F.lit(0.5))
-    )
-    if with_context:
-        # every keyword token comes from the same text the sentences
-        # partition and contains no punctuation/whitespace, so the
-        # filter is never empty (element_at(…, 1) is ANSI-safe here)
-        ctx = F.element_at(
-            F.filter(
-                F.col("_sents"),
-                lambda s: F.contains(F.lower(s), F.col("text")),
-            ),
-            1,
-        )
-        out = out.withColumn("context", ctx).drop("_sents")
-    return out
-
-
-def _context_expr(sents_col: str, mention_col: str):
-    """First sentence whose lowercase form contains the (lowercased)
-    mention text — _extract_context, semantic_analyzer.py:703-711.
-    try_element_at: legitimately null when the mention never appears
-    contiguously in the raw text (e.g. a bigram whose tokens were
-    adjacent only after stopword removal) — the reference stores no
-    context in that case either (`if context:` guard,
-    semantic_analyzer.py:427-428)."""
-    return F.try_element_at(
-        F.filter(
-            F.col(sents_col),
-            lambda s: F.contains(F.lower(s), F.lower(F.col(mention_col))),
-        ),
-        F.lit(1),
     )
 
 
 def phrase_mentions(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    with_context: bool = False) -> DataFrame:
-    """Consecutive-token bigram phrases; importance = 0.4 + 0.1*2.
-    ``with_context`` attaches the first containing sentence (the
-    reference extracts context for EVERY concept type,
-    semantic_analyzer.py:426); null when the bigram is not contiguous
-    in the raw text. The sentence split runs once per doc below the
-    explode, like keyword_mentions."""
+                    text_col: str = "text") -> DataFrame:
+    """Consecutive-token bigram phrases; importance = 0.4 + 0.1*2."""
     toks = keyword_tokens_nostop(F.col(text_col))
     n = F.size(toks)
     pairs = F.zip_with(
@@ -187,83 +133,30 @@ def phrase_mentions(docs: DataFrame, id_col: str = "doc_id",
         F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
         lambda a, b: F.concat_ws(" ", a, b),
     )
-    pre_cols = [
-        F.col(id_col).alias("doc_id"),
-        F.explode(pairs).alias("text"),
-    ]
-    if with_context:
-        pre_cols.insert(
-            1, F.split(F.col(text_col), r"[.!?]\s+").alias("_sents")
-        )
-    out = (
-        docs.select(*pre_cols)
+    return (
+        docs.select(F.col(id_col).alias("doc_id"), F.explode(pairs).alias("text"))
         .withColumn("concept_type", F.lit("phrase"))
         .withColumn("importance", F.lit(0.4 + 0.1 * 2))
     )
-    if with_context:
-        out = out.withColumn(
-            "context", _context_expr("_sents", "text")
-        ).drop("_sents")
-    return out
 
 
 def entity_mentions(docs: DataFrame, id_col: str = "doc_id",
                     text_col: str = "content",
-                    lang_col: str = "lang",
-                    with_context: bool = False) -> DataFrame:
-    """Code entity mention stream via the Arrow-batched detector.
-    ``with_context`` attaches the first sentence containing the entity
-    (case-insensitive, matching _extract_context) — computed as a
-    column expression AFTER the UDF explode, so the Python side stays
-    detection-only."""
-    pre_cols = [
+                    lang_col: str = "lang") -> DataFrame:
+    """Code entity mention stream via the Arrow-batched detector."""
+    return docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(_code_entities(F.col(text_col), F.col(lang_col))).alias("m"),
-    ]
-    if with_context:
-        pre_cols.insert(
-            1, F.split(F.col(text_col), r"[.!?]\s+").alias("_sents")
-        )
-    out = docs.select(*pre_cols).select(
-        "doc_id", "m.text", "m.concept_type", "m.importance",
-        *(["_sents"] if with_context else []),
-    )
-    if with_context:
-        out = out.withColumn(
-            "context", _context_expr("_sents", "text")
-        ).drop("_sents")
-    return out
+    ).select("doc_id", "m.text", "m.concept_type", "m.importance")
 
 
 def all_mentions(docs: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text",
-                 lang_col: str | None = None,
-                 with_context: bool = False) -> DataFrame:
-    """Union of the mention streams (semantic_analyzer.py:399-406).
-
-    ``with_context`` carries a context sentence on EVERY stream —
-    keywords, phrases, and code entities — matching the reference,
-    which calls _extract_context for every concept type
-    (semantic_analyzer.py:426); individual mentions whose text never
-    appears contiguously in a sentence carry null, like the
-    reference's `if context:` guard storing nothing."""
-    parts = [
-        keyword_mentions(docs, id_col, text_col, with_context=with_context),
-        phrase_mentions(docs, id_col, text_col, with_context=with_context),
-    ]
+                 lang_col: str | None = None) -> DataFrame:
+    """Union of the mention streams (semantic_analyzer.py:399-406)."""
+    out = keyword_mentions(docs, id_col, text_col).unionByName(
+        phrase_mentions(docs, id_col, text_col)
+    )
     if lang_col is not None and lang_col in docs.columns:
-        parts.append(
-            entity_mentions(
-                docs, id_col, text_col, lang_col, with_context=with_context
-            )
-        )
-    if with_context:
-        parts = [
-            p if "context" in p.columns
-            else p.withColumn("context", F.lit(None).cast("string"))
-            for p in parts
-        ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+        out = out.unionByName(entity_mentions(docs, id_col, text_col, lang_col))
     return out

@@ -121,10 +121,11 @@ def jsonld_concept_objects(concepts: DataFrame) -> DataFrame:
         ).alias("pdf:appearsIn"),
     ]
     if has_ctx:
-        # try_element_at: phrase/entity concepts legitimately carry an
-        # empty context list (only keyword mentions extract context);
-        # the null description is then dropped by to_json, mirroring
-        # the reference's conditional add (data_analysis.py:943-944)
+        # try_element_at: a concept whose text is in no sentence of
+        # its first documents legitimately carries an empty context
+        # list; the null description is then dropped by to_json,
+        # mirroring the reference's conditional add
+        # (data_analysis.py:943-944)
         fields.insert(
             8,
             F.substring(

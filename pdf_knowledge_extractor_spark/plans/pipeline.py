@@ -5,23 +5,26 @@ semantic_analyzer.py:134-191, re-planned as one Spark lineage DAG):
 docs -> enrich (stats/quality/sentiment/type)
      -> mentions (keywords + phrases [+ code entities])
      -> tfidf (long form)
-     -> {concepts (salted agg), similarity pairs (exact or LSH)}
-     -> related docs, [clusters]
+     -> {concepts (salted agg), similarity pairs (exact, prefix or
+        MinHash-blocked)}
+     -> [clusters]
      -> nodes/edges -> triples
 
 Shuffle budget (what actually moves at 100 TB): one shuffle into
 groupBy(doc_id, term) for TF (map-side combined), one into
 groupBy(term) for DF, one for the similarity join on hash(term) (or
-the LSH bucket join), one for the salted concept agg, one for the
-related-docs posting join, and the final repartition for the triple
-write. Every doc-level enrichment is a narrow map over the scan.
+the MinHash bucket aggregate), one for the salted concept agg, and
+the final repartition for the triple write. Every doc-level
+enrichment is a narrow map over the scan. Related documents
+(operators.related.related_documents) feed no triple and are not
+built here.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_knowledge_extractor_spark.functions.doctype import doc_type
@@ -34,7 +37,8 @@ from pdf_knowledge_extractor_spark.functions.text import (
     word_count,
 )
 from pdf_knowledge_extractor_spark.operators.concepts import (
-    aggregate_concepts,
+    aggregate_concepts_canonical,
+    with_concept_contexts,
 )
 from pdf_knowledge_extractor_spark.operators.graph import build_graph
 from pdf_knowledge_extractor_spark.operators.mentions import (
@@ -43,7 +47,6 @@ from pdf_knowledge_extractor_spark.operators.mentions import (
 )
 from pdf_knowledge_extractor_spark.operators.related import (
     entity_relationships,
-    related_documents,
 )
 from pdf_knowledge_extractor_spark.operators.similarity import (
     exact_cosine_pairs,
@@ -67,6 +70,8 @@ class PipelineConfig:
     min_concept_frequency: int = 2
     max_concepts: int = 100
     num_similar: int = 5
+    # related_documents' parameters, for callers that build that
+    # relation themselves (run_pipeline does not: no triple reads it)
     min_shared_keywords: int = 3
     related_top_k: int = 10
     related_max_df: int = 500       # posting-list hard cap (join is Σ df²)
@@ -151,7 +156,6 @@ class PipelineConfig:
     #               approximation (documented deviation)
     coherence_mode: str = "exact"
     with_entities: bool = True      # code-entity detectors if lang col
-    canonicalize: bool = True       # alias canonicalization before cuts
     n_salts: int = 16
     # skos:definition triples from mention context sentences
     # (exporters/data_analysis.py:1159-1164)
@@ -159,10 +163,8 @@ class PipelineConfig:
     # populate concept.context_sentences (<=5 per concept, reference
     # semantic_analyzer.py:442) via the post-aggregation min-doc
     # lookup (concepts.with_concept_contexts) — a broadcast join of
-    # <= max_concepts*5 rows, NOT per-mention context (which multiplies
-    # the mention shuffle by sentence length; on punctuation-less code
-    # the "sentence" is the whole document). Feeds the concepts
-    # relation + the JSON-LD description field.
+    # <= max_concepts*5 rows. Feeds the concepts relation + the
+    # JSON-LD description field.
     with_context: bool = True
     # dct:created timestamp. None (default) = a deterministic sentinel
     # derived from the input snapshot (triples.snapshot_created_at), so
@@ -411,46 +413,25 @@ def run_pipeline(
         sc.setJobDescription("pke: materialize tfidf")
         tfidf.count()
 
-    if cfg.canonicalize:
-        # fused two-phase form of canonical_merge(aggregate_concepts(
-        # mentions, 1, None)): byte-identical winners, but the capped
-        # document_ids lists are collected ONLY for the winners'
-        # variants — the composition built them for every phrase
-        # variant in the corpus (40% of pipeline wall at 500k rows,
-        # BENCH/r07/profile_pipeline_500k.log)
-        from pdf_knowledge_extractor_spark.operators.concepts import (
-            aggregate_concepts_canonical,
-        )
-
-        sc.setJobDescription("pke: materialize concepts")
-        # materialize=True persists+counts the winners inside the
-        # operator and releases its internal variant-stats cache
-        # right away (millions of rows — holding it for the session
-        # regressed everything running after the concepts phase)
-        concepts = aggregate_concepts_canonical(
-            mentions,
-            min_frequency=cfg.min_concept_frequency,
-            max_concepts=cfg.max_concepts,
-            n_salts=cfg.n_salts,
-            materialize=True,
-        )
-    else:
-        concepts = aggregate_concepts(
-            mentions,
-            min_frequency=cfg.min_concept_frequency,
-            max_concepts=cfg.max_concepts,
-            n_salts=cfg.n_salts,
-        )
-        # materialize the aggregation ONCE before anything fans out
-        # over it (the context join reads it twice)
-        concepts = concepts.persist()
-        sc.setJobDescription("pke: materialize concepts")
-        concepts.count()
+    # alias canonicalization before the cuts, in the fused two-phase
+    # form of canonical_merge(aggregate_concepts(mentions, 1, None)):
+    # byte-identical winners, but the capped document_ids lists are
+    # collected ONLY for the winners' variants — the composition built
+    # them for every phrase variant in the corpus (40% of pipeline wall
+    # at 500k rows, BENCH/r07/profile_pipeline_500k.log)
+    sc.setJobDescription("pke: materialize concepts")
+    # materialize=True persists+counts the winners inside the operator
+    # and releases its internal variant-stats cache right away
+    # (millions of rows — holding it for the session regressed
+    # everything running after the concepts phase)
+    concepts = aggregate_concepts_canonical(
+        mentions,
+        min_frequency=cfg.min_concept_frequency,
+        max_concepts=cfg.max_concepts,
+        n_salts=cfg.n_salts,
+        materialize=True,
+    )
     if cfg.with_context:
-        from pdf_knowledge_extractor_spark.operators.concepts import (
-            with_concept_contexts,
-        )
-
         sc.setJobDescription("pke: concept contexts (min-doc join)")
         # eager checkpoint, not persist+count: tiny (<= max_concepts
         # rows), and truncating the lineage here keeps the many
@@ -491,23 +472,6 @@ def run_pipeline(
     similarities = with_similarity_metadata(pairs).persist()
     sc.setJobDescription("pke: graph + triples plan (snapshot stamp)")
 
-    # per-doc top keywords straight off the persisted tfidf long form
-    # (its tf column IS the per-doc keyword count — no recompute)
-    kw_window = Window.partitionBy("doc_id").orderBy(
-        F.desc("tf"), F.asc("term")
-    )
-    doc_kw = (
-        tfidf.withColumn("_r", F.row_number().over(kw_window))
-        .filter(F.col("_r") <= cfg.per_doc_keywords)
-        .select("doc_id", F.col("term").alias("text"))
-    )
-    related = related_documents(
-        doc_kw,
-        min_shared=cfg.min_shared_keywords,
-        top_k=cfg.related_top_k,
-        max_df_abs=cfg.related_max_df,
-    )
-
     nodes, edges = build_graph(enriched, concepts, similarities, id_col=id_col)
     rel = entity_relationships(concepts)
     rel_edges = rel.select(
@@ -524,7 +488,6 @@ def run_pipeline(
         "tfidf": tfidf,
         "concepts": concepts,
         "similarities": similarities,
-        "related": related,
         "nodes": nodes,
         "edges": edges,
     }
@@ -562,10 +525,11 @@ def run_pipeline(
             vectors = to_ml_vectors(tfidf, vocab_size=cfg.cluster_dims)
             assignments, _k, _sil = cluster_documents(
                 vectors, k=cfg.cluster_k,
-                unpersist_input=cfg.cluster_k is None,
+                unpersist_input=False,
                 # the pipeline discards the silhouette; at pinned k the
-                # evaluation is a pure extra corpus sweep
-                evaluate=cfg.cluster_k is None,
+                # evaluation is a pure extra corpus sweep (the k-search
+                # always scores: the score picks k)
+                evaluate=False,
             )
             # materialize ONCE, labeled (VERDICT r6 item 3): the
             # summaries, the coherence aggregate and the in_cluster
@@ -581,11 +545,10 @@ def run_pipeline(
             )
             assignments.count()
             sc.setJobDescription(None)
-            if cfg.cluster_k is not None:
-                # the pinned-k path kept the kmeans input cache alive
-                # for the transform above; assignments are materialized
-                # now, so release it
-                vectors.unpersist()
+            # cluster_documents kept the kmeans input cache alive for
+            # the transform above; assignments are materialized now,
+            # so release it
+            vectors.unpersist()
         # coherence = mean of all positive intra-cluster pairwise
         # cosines, singletons 1.0 (reference :755-771); see
         # PipelineConfig.coherence_mode for the exact/centroid/pairs

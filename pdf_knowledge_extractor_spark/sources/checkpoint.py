@@ -216,7 +216,7 @@ def run_pipeline_checkpointed(
         lang_col=lang_col,
     )
     out: dict[str, DataFrame] = {"source": src}
-    for name in ("documents", "concepts", "similarities", "related", "edges"):
+    for name in ("documents", "concepts", "similarities", "edges"):
         out[name] = cp.stage(name, fp, lambda n=name: res[n])
     out["triples"] = cp.stage("triples", fp, lambda: res["triples"],
                               partition_by=["pred"])

@@ -34,7 +34,7 @@ def test_checkpoint_resume_identical(spark, small_corpus, tmp_path):
     import os
 
     for d in os.listdir(ckpt):
-        if d.split("__")[0] in ("similarities", "related", "edges", "triples"):
+        if d.split("__")[0] in ("similarities", "edges", "triples"):
             shutil.rmtree(os.path.join(ckpt, d))
 
     res2 = run_pipeline_checkpointed(

@@ -165,3 +165,18 @@ def test_cluster_coherence_matches_reference_semantics(spark):
     assert 0.0 < got[1] < 0.7, (
         "sub-threshold cluster must report its true positive mean"
     )
+
+
+def test_k_search_keeps_input_cache_when_asked(spark, clustered):
+    """unpersist_input=False holds on the k-search path too: the
+    returned assignments are a lazy transform over the vectors, so a
+    released cache would make their first action recompute
+    to_ml_vectors."""
+    _, tfidf, _, _, _ = clustered
+    vectors = to_ml_vectors(tfidf, vocab_size=1 << 10)
+    assignments, _, _ = cluster_documents(
+        vectors, k_min=2, k_max=3, unpersist_input=False
+    )
+    assert vectors.is_cached
+    assert assignments.count() == 90
+    vectors.unpersist()

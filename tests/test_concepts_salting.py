@@ -7,6 +7,7 @@ import pyspark.sql.functions as F
 
 from pdf_knowledge_extractor_spark.operators.concepts import (
     aggregate_concepts,
+    aggregate_concepts_canonical,
     canonical_merge,
 )
 from pdf_knowledge_extractor_spark.operators.mentions import all_mentions
@@ -78,6 +79,14 @@ def test_canonical_merge_collapses_aliases(spark, small_corpus):
 
 
 def test_context_sentences_collected(spark):
+    """Concept contexts come from one place, after aggregation: the
+    first containing sentence of each of the concept's first 5
+    documents, the 5 smallest distinct kept. The split regex is
+    [.!?]\\s+ (RE2-safe, delimiter consumed), so terminal punctuation
+    is dropped — a documented divergence."""
+    from pdf_knowledge_extractor_spark.operators.concepts import (
+        with_concept_contexts,
+    )
     from pdf_knowledge_extractor_spark.operators.mentions import (
         keyword_mentions,
     )
@@ -89,13 +98,30 @@ def test_context_sentences_collected(spark):
         ],
         "doc_id long, text string",
     )
-    m = keyword_mentions(docs, with_context=True)
-    row = m.filter(F.col("text") == "shuffles").first()
-    # split regex is [.!?]\\s+ (RE2-safe, delimiter consumed) so
-    # the terminal punctuation is dropped — documented divergence
-    assert row["context"] == "Spark shuffles data"
-    c = aggregate_concepts(m, min_frequency=1, max_concepts=None)
-    shuffle = c.filter(F.col("text") == "shuffle").first()
-    assert shuffle is not None
-    assert 1 <= len(shuffle["context_sentences"]) <= 5
-    assert all("shuffle" in s.lower() for s in shuffle["context_sentences"])
+    c = with_concept_contexts(
+        aggregate_concepts(keyword_mentions(docs), 1, None), docs
+    )
+    ctx = {r["text"]: r["context_sentences"] for r in c.collect()}
+    # "shuffle" is a substring of doc 1's first sentence, which wins
+    # over its second
+    assert ctx["shuffle"] == [
+        "Another document about shuffle behavior",
+        "Spark shuffles data",
+    ]
+    assert ctx["shuffles"] == ["Spark shuffles data"]
+
+
+def test_canonical_aggregate_equals_composition(spark, small_corpus):
+    """aggregate_concepts_canonical is the fused form of
+    canonical_merge(aggregate_concepts(m, 1, None), f, k): same rows,
+    importance equal to 9 places (summation order differs)."""
+    mentions = all_mentions(
+        small_corpus, id_col="doc_id", text_col="content", lang_col="lang"
+    ).persist()
+    raw = aggregate_concepts(mentions, min_frequency=1, max_concepts=None)
+    for f, k, n_rows in ((2, 100, 100), (1, None, 8264), (2, 10, 10)):
+        fused = _norm(aggregate_concepts_canonical(mentions, f, k))
+        composed = _norm(canonical_merge(raw, f, k))
+        assert len(fused) == n_rows, (f, k, len(fused))
+        assert fused == composed, (f, k)
+    mentions.unpersist()

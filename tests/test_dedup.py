@@ -105,11 +105,10 @@ def _pairs(df):
 
 def test_minhash_bucket_cap(spark):
     """max_bucket_size bounds degenerate band buckets (the |bucket|^2
-    candidate blowup guard) without touching normal pairs. Default
-    "star" mode keeps each hot-bucket member connected to the bucket's
-    min-id representative (dedup grouping via connected components
-    stays intact, O(|bucket|) candidates); "drop" mode removes the
-    bucket entirely (round-3 behavior)."""
+    candidate blowup guard) without touching normal pairs: each
+    hot-bucket member stays connected to the bucket's min-id
+    representative (dedup grouping via connected components stays
+    intact, O(|bucket|) candidates)."""
     import pyspark.sql.functions as F
 
     from pdf_knowledge_extractor_spark.operators.dedup import (
@@ -121,15 +120,6 @@ def test_minhash_bucket_cap(spark):
     uncapped = minhash_lsh_pairs(docs, threshold=0.5)
     n_unc = uncapped.count()
     assert n_unc >= 20 * 19 // 2 + 1  # boilerplate clique + the dup pair
-
-    dropped = minhash_lsh_pairs(
-        docs, threshold=0.5, max_bucket_size=10, hot_bucket_mode="drop"
-    )
-    got = {(r["doc1_id"], r["doc2_id"]) for r in dropped.collect()}
-    # the boilerplate clique's buckets (20 members) were dropped;
-    # the small near-dup pair survives
-    assert (100, 101) in got
-    assert all(a >= 100 for a, _ in got), got
 
     starred = minhash_lsh_pairs(docs, threshold=0.5, max_bucket_size=10)
     got = {(r["doc1_id"], r["doc2_id"]) for r in starred.collect()}
@@ -174,16 +164,11 @@ def test_ngram_prefix_path_matches_direct(spark, small_corpus, monkeypatch):
 
 
 def test_minhash_hot_bucket_modes_exact(spark):
-    """Over-cap buckets: star mode emits exactly the star on the bucket
-    minimum, drop mode exactly nothing, and under-cap buckets their
-    full pair list in both."""
+    """Over-cap buckets emit exactly the star on the bucket minimum,
+    and under-cap buckets their full pair list."""
     docs = _hot_bucket_docs(spark)
     star = minhash_lsh_pairs(docs, threshold=0.5, max_bucket_size=10)
     assert _pairs(star) == {(0, i) for i in range(1, 20)} | {(100, 101)}
-    drop = minhash_lsh_pairs(
-        docs, threshold=0.5, max_bucket_size=10, hot_bucket_mode="drop"
-    )
-    assert _pairs(drop) == {(100, 101)}
 
 
 def test_minhash_jaccard_is_exact(spark):

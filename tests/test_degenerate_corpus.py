@@ -13,6 +13,10 @@ import json
 import pyspark.sql.functions as F
 import pytest
 
+from pdf_knowledge_extractor_spark.operators.concepts import (
+    per_doc_top_keywords,
+)
+from pdf_knowledge_extractor_spark.operators.related import related_documents
 from pdf_knowledge_extractor_spark.plans.pipeline import (
     PipelineConfig,
     run_pipeline,
@@ -20,7 +24,7 @@ from pdf_knowledge_extractor_spark.plans.pipeline import (
 
 RELATIONS = (
     "documents", "mentions", "tfidf", "concepts", "similarities",
-    "related", "nodes", "edges", "triples",
+    "nodes", "edges", "triples",
 )
 
 
@@ -47,14 +51,27 @@ def test_pipeline_on_tiny_corpus(spark, tmp_path, n_rows):
                "gamma alpha beta gamma delta", "python"),
     ][:n_rows]
     docs = _docs(spark, rows)
+    cfg = _cfg()
     res = run_pipeline(
-        spark, docs, _cfg(), id_col="doc_id", text_col="content",
+        spark, docs, cfg, id_col="doc_id", text_col="content",
         lang_col="lang",
     )
     for name in RELATIONS:
         df = res[name]
         assert df.columns, f"{name} lost its schema"
         df.count()  # must evaluate without raising
+
+    # related documents are built by their callers, not the pipeline:
+    # on 0 or 1 documents the relation is empty but schemaed
+    related = related_documents(
+        per_doc_top_keywords(res["mentions"], k=cfg.per_doc_keywords)
+        .select("doc_id", "text"),
+        min_shared=cfg.min_shared_keywords,
+        top_k=cfg.related_top_k,
+        max_df_abs=cfg.related_max_df,
+    )
+    assert related.columns
+    assert related.count() == 0
 
     triples = res["triples"]
     if n_rows == 0:
@@ -69,7 +86,6 @@ def test_pipeline_on_tiny_corpus(spark, tmp_path, n_rows):
         assert {"dc:title", "dct:created", "pdf:wordCount"} <= preds
         assert "similar_to" not in preds
         assert res["similarities"].count() == 0
-        assert res["related"].count() == 0
         # a single doc has idf = ln(1/1) = 0 everywhere -> empty
         # vectorizable universe -> no clusters, matching the
         # reference's n < 2 refusal (semantic_analyzer.py:141-146)

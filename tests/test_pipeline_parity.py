@@ -31,9 +31,7 @@ CREATED_AT = "2026-01-01T00:00:00"
 
 @pytest.fixture(scope="module")
 def pipeline_result(spark, small_corpus):
-    cfg = PipelineConfig(
-        similarity_strategy="exact", canonicalize=True, created_at=CREATED_AT
-    )
+    cfg = PipelineConfig(similarity_strategy="exact", created_at=CREATED_AT)
     return run_pipeline(
         spark, small_corpus, cfg, id_col="doc_id", text_col="content",
         lang_col="lang",

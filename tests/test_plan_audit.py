@@ -143,6 +143,8 @@ def test_concepts_agg_bounded_memory_shape(spark, small_corpus):
     partial aggregate held every mention's context string in per-key
     object-agg list buffers — memory proportional to mention
     multiplicity, invisible to the key-count fallback threshold.
+    Mention rows carry no context now (concepts take theirs after
+    aggregation, concepts.with_concept_contexts).
     Guard the bounded shape: the raw mention stream must be consumed
     by a codegen HashAggregate keyed per (concept, doc) BEFORE any
     object-hash collect, the tf-idf df/norm lookups must hash-join,
@@ -156,7 +158,6 @@ def test_concepts_agg_bounded_memory_shape(spark, small_corpus):
     enriched = enrich_documents(small_corpus, "doc_id", "content")
     mentions = all_mentions(
         enriched, id_col="doc_id", text_col="content", lang_col="lang",
-        with_context=True,
     )
     c = aggregate_concepts(mentions, min_frequency=2, max_concepts=None)
     plan = _plan(c)
