@@ -198,8 +198,7 @@ def cluster_coherence(
     analog of the exact θ-join; a pair with a shared term always has
     dot > 0 (tf-idf weights are positive), so the inner join IS the
     positive-pair filter. ``max_df`` stop-lists ultra-common terms
-    from the pair join (the same bound as exact_cosine_pairs) for
-    corpora whose clusters are huge; ``round_dp`` rounds each pair
+    from the pair join for corpora whose clusters are huge; ``round_dp`` rounds each pair
     cosine before averaging (the cross-engine oracle convention).
     A hot term inside a large cluster makes this join quadratic — at
     scale use ``cluster_coherence_centroid`` (O(nnz), equal to this

@@ -243,10 +243,13 @@ def aggregate_concepts_canonical(
             F.asc("text"),
         ).limit(max_concepts)
     winners = merged
+    # the winners and their variants are small only under a cap; an
+    # unbounded relation is never broadcast
+    small = F.broadcast if max_concepts else (lambda df: df)
 
     # ---- pass 2: capped lists for the winners' variants only --------
     variants = with_canon.join(
-        F.broadcast(
+        small(
             winners.select(F.col("text").alias("canonical"), "concept_type")
         ),
         ["canonical", "concept_type"],
@@ -255,7 +258,7 @@ def aggregate_concepts_canonical(
     doc_keys = ["text", "concept_type", "doc_id"]
     per_doc = (
         base.join(
-            F.broadcast(variants.select("text", "concept_type")),
+            small(variants.select("text", "concept_type")),
             ["text", "concept_type"],
             "left_semi",
         )
@@ -279,7 +282,7 @@ def aggregate_concepts_canonical(
     )
     lists = (
         variant_lists.join(
-            F.broadcast(variants), ["text", "concept_type"]
+            small(variants), ["text", "concept_type"]
         )
         .groupBy(F.col("canonical").alias("text"), "concept_type")
         .agg(

@@ -4,17 +4,16 @@ All four standard flavors, DataFrame-first:
 
 - exact: md5 fingerprint of normalized text (groupBy — one shuffle)
 - n-gram Jaccard (exact): word-shingle posting-list self-join, or
-  prefix-pair candidates on large posting lists
-- MinHash + LSH banding: shingle -> K minhashes -> bands -> one
-  aggregate per (band, band_hash) bucket that emits the candidate
-  pairs -> exact Jaccard verify. All column expressions (xxhash64
-  with per-function salts); no UDFs, no ML fit.
+  ``setjoin.prefix_pairs`` candidates on large posting lists
+- MinHash + LSH banding: shingle set -> K minhashes -> ``setjoin``
+  band rows and bucket pairs -> exact Jaccard verify. All column
+  expressions (xxhash64 with per-function salts); no UDFs, no ML fit.
 - SimHash: 64-bit signature from per-token hash bits weighted by tf;
-  hamming-ball candidates via band equality.
+  hamming-ball candidates via block equality.
 
-Scale design: candidates come from equi-joins or aggregates on a
-hash/bucket key; a MinHash bucket over the cap emits a star or
-nothing; the verify step (``_verify_jaccard``, shared by MinHash and
+Scale design: each join is a front end and an exact verify around the
+shared set-join kernel (``setjoin``); a MinHash bucket over the cap
+emits a star; the verify (``_verify_jaccard``, shared by MinHash and
 the n-gram prefix path) touches only candidates. MinHash signatures
 use the standard min-over-permutations estimator (Broder '97).
 """
@@ -30,8 +29,10 @@ from pdf_knowledge_extractor_spark.functions.text import clean_text
 from pdf_knowledge_extractor_spark.operators.ann import _finalize
 from pdf_knowledge_extractor_spark.operators.setjoin import (
     band_buckets,
+    band_rows,
     bucket_pairs,
     distinct_pairs,
+    prefix_pairs,
 )
 
 # under-split sources serialize the shingling/signature projections
@@ -100,6 +101,63 @@ def shingle_posting(docs: DataFrame, id_col: str = "doc_id",
 # the prefix path always engages.
 _PREFIX_PATH_MIN_POSTS = 1_000_000
 
+# a doc emits 2-subset prefix keys while its prefix has at most this
+# many elements — C(256, 2) = 32,640 key rows; past it, its prefix
+# elements become single keys, linear in the prefix length
+_SUBSET_PREFIX_MAX = 256
+
+
+def _jaccard_prefix(posts: DataFrame, threshold: float) -> DataFrame:
+    """(doc_id, key, rank, _single, _subset) prefix rows of distinct
+    (doc_id, shingle) postings for ``setjoin.prefix_pairs``: each doc's
+    first |X| - ceil(t·|X|) + 2 shingles in the global order (df asc,
+    shingle asc), key = xxhash64(shingle), and the key shapes it emits.
+
+    Completeness: a pair with J >= t shares I >= ceil(t·|X|) elements,
+    so the q-th smallest shared element sits at position
+    <= |X| - ceil(t·|X|) + q in each doc X, and the two sizes lie
+    within a factor t of each other.
+
+    - I >= 2: the TWO smallest shared elements lie in both prefixes
+      and form a shared 2-subset key. A doc emits these while its
+      prefix has <= _SUBSET_PREFIX_MAX elements.
+    - a doc also emits single keys when its largest possible partner
+      (|X|/t shingles) is past that bound. If either doc of a pair is
+      past it, so is each doc's largest possible partner; both then
+      emit the smallest shared element as a single key.
+    - I = 1 qualifies only when |A| + |B| <= 1 + 1/t, so docs of
+      <= floor(1/t) shingles emit single keys too (their prefix is
+      the whole doc).
+
+    Joining on 2-subsets instead of single shingles cuts the
+    candidate join volume 33x at the 50k-doc driver table
+    (128M -> 3.9M) because two random docs almost never share TWO
+    rare shingles."""
+
+    def plen(size):
+        # ceil of t·|X| - 1e-9: float error only LENGTHENS the prefix
+        return size - F.ceil(threshold * size - 1e-9) + 2
+
+    dfs = posts.groupBy("shingle").agg(F.count("*").alias("_df"))
+    wdoc = Window.partitionBy("doc_id")
+    wrank = wdoc.orderBy(F.asc("_df"), F.asc("shingle"))
+    ranked = (
+        posts.join(dfs.transform(hinted), "shingle")
+        .withColumn("rank", F.row_number().over(wrank))
+        .withColumn("_sz", F.count("*").over(wdoc))
+    )
+    sz = F.col("_sz")
+    single = F.lit(True)
+    if threshold > 0:
+        single = (sz <= int(1.0 / threshold)) | (
+            plen(F.floor(sz / threshold + 1e-9)) > _SUBSET_PREFIX_MAX
+        )
+    return ranked.filter(F.col("rank") <= plen(sz)).select(
+        "doc_id", F.xxhash64("shingle").alias("key"), "rank",
+        single.alias("_single"),
+        (plen(sz) <= _SUBSET_PREFIX_MAX).alias("_subset"),
+    )
+
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
@@ -113,41 +171,16 @@ def ngram_jaccard_pairs(
     |A ∩ B| / |A ∪ B| >= threshold. ``max_df`` stop-lists boilerplate
     shingles.
 
-    Physical shape (round 7): prefix-pair candidate generation + exact
+    Physical shape (round 7): prefix candidates (Bayardo WWW'07 / Xiao
+    PPJoin, extended to 2-subset keys; ``_jaccard_prefix``) + exact
     set-intersection verify, replacing the full posting self-join +
-    per-pair count aggregation. The r1-r6 plan joined the complete
-    posting lists and aggregated a count per (doc1, doc2) — at the
-    50k-doc driver table that is a 128M-row join feeding a 114M-group
-    exchange, nearly all of it for pairs sharing a single boilerplate
-    shingle that the threshold then rejects.
-
-    Candidate completeness (prefix filtering, Bayardo WWW'07 /
-    Xiao PPJoin, extended to 2-subset keys):
-
-    - order shingles globally by (df asc, shingle asc); each doc's
-      PREFIX is its first p+1 shingles where p = |A| - ceil(t·|A|) + 1
-      (ceil taken on t·|A| - 1e-9 so float error can only LENGTHEN the
-      prefix — conservative).
-    - a pair with J >= t shares I >= max(2, ceil(t·|A|), ceil(t·|B|))
-      elements whenever I >= 2; the q-th smallest shared element sits
-      at position <= |X| - I + q <= |X| - ceil(t·|X|) + q in each
-      doc's order, so the TWO smallest shared elements both lie in
-      both docs' (p+1)-prefixes, and the ordered pair of them is a
-      shared 2-subset KEY. Joining on prefix 2-subsets instead of
-      single prefix shingles cuts the candidate join volume 33x at
-      the driver table (128M -> 3.9M) because two random docs almost
-      never share TWO rare shingles.
-    - pairs with I = 1 can only qualify when |A| + |B| <= 1 + 1/t
-      (J = 1/(|A|+|B|-1) >= t), so docs with |X| <= floor(1/t) also
-      join on single shingles among themselves — a tiny side channel
-      that restores exactness for near-empty docs.
-
-    Join keys are xxhash64 pairs of the two shingles — a hash
-    collision can only ADD a candidate (equal strings always collide),
-    never lose one, and the verify is collision-free: it intersects
-    the docs' actual sorted shingle-string arrays, so every emitted
-    (inter, jaccard) is exact and the output is identical to the full
-    self-join's.
+    per-pair count aggregation — at the 50k-doc driver table a
+    128M-row join feeding a 114M-group exchange, nearly all of it for
+    pairs sharing a single boilerplate shingle that the threshold then
+    rejects. Join keys are xxhash64 of the shingles — a collision can
+    only ADD a candidate, and the verify intersects the docs' actual
+    sorted shingle-string arrays, so every emitted (inter, jaccard) is
+    exact and the output is identical to the full self-join's.
 
     ADAPTIVE: below ``_PREFIX_PATH_MIN_POSTS`` posting rows the
     direct self-join runs instead — the prefix machinery is ~10 extra
@@ -193,67 +226,18 @@ def ngram_jaccard_pairs(
             .select("doc1_id", "doc2_id", "inter", "sz1", "sz2",
                     "jaccard")
         )
-    dfs = posts.groupBy("shingle").agg(F.count("*").alias("_df"))
-    wdoc = Window.partitionBy("doc_id")
-    wrank = wdoc.orderBy(F.asc("_df"), F.asc("shingle"))
-    ranked = (
-        posts.join(dfs.transform(hinted), "shingle")
-        .withColumn("_rn", F.row_number().over(wrank))
-        .withColumn("_sz", F.count("*").over(wdoc))
+    # cached: both sides of the key join read the single and the
+    # 2-subset keys, and each read would re-run the ranking window
+    prefix = _jaccard_prefix(posts, threshold).persist()
+    candidates = prefix_pairs(
+        prefix, singles=F.col("_single"), subsets=F.col("_subset")
     )
-    prefix_len = (
-        F.col("_sz")
-        - F.ceil(F.lit(threshold) * F.col("_sz") - 1e-9)
-        + 2
-    )
-    prefix = ranked.filter(F.col("_rn") <= prefix_len).select(
-        "doc_id", F.xxhash64("shingle").alias("_h"), "_rn"
-    )
-    # per-doc 2-subsets of the prefix (a doc-keyed self-join of the
-    # short prefix lists; _rn inequality both dedups and fixes the
-    # global-order orientation of the key so both docs emit the same
-    # ordered pair)
-    k1 = prefix.select("doc_id", F.col("_h").alias("_k1"),
-                       F.col("_rn").alias("_r1"))
-    k2 = prefix.select("doc_id", F.col("_h").alias("_k2"),
-                       F.col("_rn").alias("_r2"))
-    keys = (
-        k1.join(k2.transform(hinted), "doc_id")
-        .filter(F.col("_r1") < F.col("_r2"))
-        .select("doc_id", "_k1", "_k2")
-    )
-    a = keys.select(F.col("doc_id").alias("doc1_id"), "_k1", "_k2")
-    b = keys.select(F.col("doc_id").alias("doc2_id"), "_k1", "_k2")
-    candidates = (
-        a.join(b.transform(hinted), ["_k1", "_k2"])
-        .filter(F.col("doc1_id") < F.col("doc2_id"))
-        .select("doc1_id", "doc2_id")
-    )
-    # I=1 side channel: single-shingle join restricted to docs small
-    # enough that one shared shingle can reach the threshold
-    small_cap = int(1.0 / threshold) if threshold > 0 else None
-    if small_cap and small_cap >= 1:
-        small_docs = (
-            posts.groupBy("doc_id")
-            .agg(F.count("*").alias("_sz"))
-            .filter(F.col("_sz") <= small_cap)
-            .select("doc_id")
-        )
-        small = posts.join(
-            F.broadcast(small_docs), "doc_id", "left_semi"
-        ).select("doc_id", F.xxhash64("shingle").alias("_h"))
-        sa = small.select(F.col("doc_id").alias("doc1_id"), "_h")
-        sb = small.select(F.col("doc_id").alias("doc2_id"), "_h")
-        candidates = candidates.unionByName(
-            sa.join(sb, "_h")
-            .filter(F.col("doc1_id") < F.col("doc2_id"))
-            .select("doc1_id", "doc2_id")
-        )
     # cached: the verify reads the candidates three times (the pairs
     # and the doc ids that bound each side's shingle arrays)
-    candidates = distinct_pairs(candidates).persist()
+    candidates = candidates.persist()
     return _finalize(
-        _verify_jaccard(candidates, threshold, posts=posts), candidates
+        _verify_jaccard(candidates, threshold, posts=posts), candidates,
+        prefix,
     )
 
 
@@ -279,7 +263,7 @@ def _verify_jaccard(candidates: DataFrame, threshold: float, *,
             F.explode(F.array("doc1_id", "doc2_id")).alias("doc_id")
         )
         sets = (
-            posts.join(ids, "doc_id", "left_semi")
+            posts.join(ids.transform(hinted), "doc_id", "left_semi")
             .groupBy("doc_id")
             .agg(F.array_sort(F.collect_list("shingle")).alias("_sh"))
         )
@@ -322,15 +306,12 @@ def minhash_lsh_pairs(
     0.9997).
 
     Plan: the per-doc shingle SET stays an array column and is
-    persisted — signatures and band hashes are narrow array
-    expressions over it (the K-minhash signature is materialized
-    behind a single-element explode barrier first: interpreted HOF
-    eval has no common-subexpression elimination, so the 16 band
-    hashes would otherwise each recompute all 64 minhashes). Then ONE
-    aggregate on (band, band_hash) gathers each bucket's members and
-    emits the candidate pairs (``setjoin.bucket_pairs``), one exchange
-    on doc1_id dedups them, and each pair joins the shingle arrays of its
-    two docs for the exact verify (``_verify_jaccard``). The cap needs
+    persisted — signatures and band hashes are narrow expressions over
+    it (``_banded_sets``). Then ONE aggregate on (band, band_hash)
+    gathers each bucket's members and emits the candidate pairs
+    (``setjoin.bucket_pairs``), one exchange on doc1_id dedups them,
+    and each pair joins the shingle arrays of its two docs for the
+    exact verify (``_verify_jaccard``). The cap needs
     no census, broadcast or join of its own: each bucket sees its own
     size.
 
@@ -352,39 +333,11 @@ def minhash_lsh_pairs(
 
     None (default cap) keeps full banding recall for the oracle gate;
     set a few hundred at 100-TB scale."""
-    rows_per_band = num_hashes // bands
     sets = _spread_input(docs).select(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(word_shingles(F.col(text_col), n)).alias("_sh"),
     ).persist()
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda k: F.array_min(
-            F.transform(F.col("_sh"), lambda s: F.xxhash64(s, k))
-        ),
-    )
-    # Generate barrier: materialize the signature once per doc
-    # (CollapseProject cannot merge across explode)
-    with_sig = sets.filter(F.size("_sh") > 0).select(
-        "doc_id", F.explode(F.array(sig)).alias("_sig")
-    )
-    band_hashes = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(
-            F.concat_ws(
-                "_",
-                F.transform(
-                    F.slice(F.col("_sig"), b * rows_per_band + 1, rows_per_band),
-                    lambda x: x.cast("string"),
-                ),
-            )
-        ),
-    )
-    banded = (
-        with_sig.select("doc_id", F.posexplode(band_hashes))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "band_hash")
-    )
+    banded = _banded_sets(sets, num_hashes, bands)
     candidates = distinct_pairs(
         bucket_pairs(band_buckets(banded), star_over=max_bucket_size)
     )
@@ -393,6 +346,31 @@ def minhash_lsh_pairs(
             "doc1_id", "doc2_id", "jaccard"
         ),
         sets,
+    )
+
+
+def _banded_sets(sets: DataFrame, num_hashes: int,
+                 bands: int) -> DataFrame:
+    """(doc_id, band, band_hash) rows of (doc_id, _sh) shingle-set
+    arrays: the K-minhash signature min(xxhash64(s, k)) of each
+    non-empty set, banded by ``setjoin.band_rows``. The signature is
+    materialized behind a single-element explode barrier: interpreted
+    HOF eval has no common-subexpression elimination, so the band
+    hashes would otherwise each recompute all K minhashes. The rows
+    equal ``similarity._banded_rows`` over the same sets in long form,
+    but that flat-aggregate form measured +18% ``wall_s`` on the
+    600-row dedup benchmark, so both front ends stay."""
+    sig = F.transform(
+        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+        lambda k: F.array_min(
+            F.transform(F.col("_sh"), lambda s: F.xxhash64(s, k))
+        ),
+    )
+    with_sig = sets.filter(F.size("_sh") > 0).select(
+        "doc_id", F.explode(F.array(sig)).alias("_sig")
+    )
+    return band_rows(
+        with_sig, [F.col("_sig")[k] for k in range(num_hashes)], bands
     )
 
 
@@ -457,14 +435,13 @@ def simhash_signatures(
     return packed
 
 
-def _block_layout(bands: int) -> list[tuple[int, int]]:
-    """Split 64 signature bits into ``bands`` near-equal blocks:
-    (start, width) per block, widths differing by at most 1. Any
-    divisor-of-64 count reproduces the classic uniform split; other
-    counts (e.g. the pigeonhole-minimal d+1) are first-class."""
-    base, rem = divmod(64, bands)
+def _block_layout(blocks: int) -> list[tuple[int, int]]:
+    """Split 64 signature bits into ``blocks`` near-equal blocks:
+    (start, width) per block, widths differing by at most 1, so the
+    pigeonhole-minimal d+1 need not divide 64."""
+    base, rem = divmod(64, blocks)
     layout, start = [], 0
-    for b in range(bands):
+    for b in range(blocks):
         w = base + (1 if b < rem else 0)
         layout.append((start, w))
         start += w
@@ -494,63 +471,47 @@ def simhash_near_dup_pairs(
     max_hamming: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bands: int | None = None,
     hash_fn: str = "xxhash64",
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs with Hamming distance <= max_hamming via the
-    pigeonhole band trick: split 64 bits into ``bands`` blocks —
-    any pair within distance d < bands shares at least one identical
-    block; block-equality equi-join, then exact popcount verify on
+    pigeonhole trick: split 64 bits into max_hamming + 1 blocks — any
+    pair within distance d shares at least one identical block;
+    block-equality equi-join, then exact popcount verify on
     candidates only.
 
-    ``bands`` defaults to ``max_hamming + 1`` — the pigeonhole-minimal
-    block count, which maximizes block WIDTH (64/(d+1) bits) and
-    therefore the bucket key space. Recall stays EXACTLY 1.0 (the
-    output is the complete hamming ball, which is what the DuckDB
-    oracle checks) for any bands > max_hamming; blocks need not divide
-    64 evenly — widths differ by at most one bit (_block_layout). The
-    round-6 form rounded bands UP to the next divisor of 64 (d=8 ->
-    16 four-bit blocks, 16 bucket values each); d+1=9 seven/eight-bit
+    d + 1 is the pigeonhole-minimal block count, which maximizes block
+    WIDTH (64/(d+1) bits) and therefore the bucket key space. Recall
+    is EXACTLY 1.0 (the output is the complete hamming ball, which is
+    what the DuckDB oracle checks); blocks need not divide 64 evenly —
+    widths differ by at most one bit (_block_layout). The round-6
+    form rounded the count UP to the next divisor of 64 (d=8 -> 16
+    four-bit blocks, 16 bucket values each); d+1=9 seven/eight-bit
     blocks give 128-256 values per block, measured 5.6x fewer
     candidate pairs at the 50k-doc driver table (4.32e9 -> 0.77e9)
-    for the identical output. Pass a smaller ``bands`` to trade
-    recall for fewer candidates at scale. With ``bands`` left to its
-    default, ``max_hamming >= 64`` raises ValueError: 64 one-bit
-    blocks cannot hold the pigeonhole for it.
+    for the identical output. ``max_hamming >= 64`` raises
+    ValueError: 64 one-bit blocks cannot hold the pigeonhole for it.
 
     Scale note: candidates per block scale with sum over bucket values
     of n_v^2 — wider blocks spread docs over more values. At 100-TB
     scale use the production setting d<=3 with 4 sixteen-bit blocks
-    (Manku et al., WWW'07) and/or ``max_bucket_size`` to drop
-    degenerate buckets (boilerplate clusters belong to the
-    exact-fingerprint path)."""
-    if bands is None:
-        if max_hamming >= 64:
-            # the pigeonhole needs max_hamming + 1 blocks of >= 1 bit;
-            # 64 blocks would silently miss pairs at distance 64
-            raise ValueError(
-                f"max_hamming={max_hamming} needs more than 64 blocks; "
-                "use max_hamming <= 63 or pass bands explicitly"
-            )
-        bands = max_hamming + 1
+    (Manku et al., WWW'07); boilerplate clusters belong to the
+    exact-fingerprint path."""
+    if max_hamming >= 64:
+        # the pigeonhole needs max_hamming + 1 blocks of >= 1 bit;
+        # 64 blocks would silently miss pairs at distance 64
+        raise ValueError(
+            f"max_hamming={max_hamming} needs more than 64 blocks; "
+            "use max_hamming <= 63"
+        )
     sigs = simhash_signatures(docs, id_col, text_col, hash_fn).persist()
     blk_vals = F.array(
-        *[_block_value(s, w) for s, w in _block_layout(bands)]
+        *[_block_value(s, w) for s, w in _block_layout(max_hamming + 1)]
     )
     blocks = (
         sigs.select("doc_id", "sh_lo", "sh_hi", F.posexplode(blk_vals))
         .withColumnRenamed("pos", "blk")
         .withColumnRenamed("col", "blk_val")
     )
-    if max_bucket_size is not None:
-        hot = (
-            blocks.groupBy("blk", "blk_val")
-            .count()
-            .filter(F.col("count") > max_bucket_size)
-            .select("blk", "blk_val")
-        )
-        blocks = blocks.join(F.broadcast(hot), ["blk", "blk_val"], "left_anti")
     c1 = blocks.select(
         F.col("doc_id").alias("doc1_id"), "blk", "blk_val",
         F.col("sh_lo").alias("lo1"), F.col("sh_hi").alias("hi1"),
@@ -566,7 +527,7 @@ def simhash_near_dup_pairs(
     # and the popcount verify runs MAP-SIDE on the raw join output,
     # BEFORE the distinct: the filter is a pure function of the pair,
     # so distinct(filter(x)) == filter(distinct(x)), and the dedup
-    # exchange then carries only ball members x blocks (<= bands x
+    # exchange then carries only ball members x blocks (<= d+1 x
     # |output| rows) instead of the full candidate volume — at the
     # 50k-doc driver table that is 39M rows shuffled instead of 770M
     return _finalize(

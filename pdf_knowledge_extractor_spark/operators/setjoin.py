@@ -1,29 +1,50 @@
-"""Band-bucket kernel shared by the MinHash operators.
+"""Set-similarity join kernel shared by the MinHash, cosine-prefix
+and n-gram-prefix joins.
 
-Banding turns each document into (doc_id, band, band_hash) rows, and
-two documents are candidates when they share a (band, band_hash)
-bucket. Both ``dedup.minhash_lsh_pairs`` (Jaccard over word shingles)
-and ``similarity.minhash_blocked_cosine_pairs`` (cosine over tf-idf
-terms) run their candidate step here:
+Each join blocks pairs, generates candidates, then verifies exactly.
+The operators keep their input-shaped front end and their verify;
+this module owns the candidate step:
 
-- ``band_buckets``: ONE aggregate gathers each bucket's sorted member
-  list;
-- ``bucket_census``: one job over those lists gives the bucket count,
-  the over-cap tail and the sub-cap candidate volume;
-- ``bucket_pairs``: the pairs come from each member list in place —
-  member i pairs with every later member — so no join of the banded
-  rows with themselves, and every bucket sees its own size, which is
-  all a cap decision needs;
-- ``distinct_pairs``: one exchange on doc1_id dedups the pairs.
-
-A hot (over-cap) bucket's member list is still gathered whole; a cap
-bounds the pairs, not that list.
+- ``band_rows``: signature columns -> (doc_id, band, band_hash) rows;
+- ``band_buckets``: ONE aggregate gathers each (band, band_hash)
+  bucket's sorted member list; ``bucket_census``: one job over those
+  lists gives the bucket count, the over-cap tail and the sub-cap
+  candidate volume; ``bucket_pairs``: member i pairs with every later
+  member of its list in place — no self-join of the banded rows, and
+  every bucket sees its own size, which is all a cap decision needs.
+  A hot bucket's member list is still gathered whole; a cap bounds
+  the pairs, not that list;
+- ``prefix_pairs``: prefix filtering (Bayardo et al., WWW'07) — ONE
+  join of the single-element and/or 2-subset keys of ranked prefix
+  rows;
+- ``distinct_pairs``: one exchange on doc1_id dedups a pair stream.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pdf_knowledge_extractor_spark.tuning import hinted
+
+
+def band_rows(sigs: DataFrame, sig_cols: list[Column],
+              bands: int) -> DataFrame:
+    """(doc_id, band, band_hash) rows of a (doc_id, ...) signature
+    relation: band b hashes signature columns [b·r, (b+1)·r),
+    r = len(sig_cols) // bands, joined as decimal strings. The two
+    MinHash front ends (dedup's array signature, similarity's flat
+    ``min`` columns) give identical rows for the same sets."""
+    r = len(sig_cols) // bands
+    band_hashes = F.array(*[
+        F.xxhash64(F.concat_ws(
+            "_", *[c.cast("string") for c in sig_cols[b * r:(b + 1) * r]]
+        ))
+        for b in range(bands)
+    ])
+    return sigs.select(
+        "doc_id", F.posexplode(band_hashes).alias("band", "band_hash")
+    )
 
 
 def band_buckets(banded: DataFrame) -> DataFrame:
@@ -96,4 +117,55 @@ def distinct_pairs(pairs: DataFrame) -> DataFrame:
     pairs flow into it with no further exchange."""
     return pairs.repartition(F.col("doc1_id")).dropDuplicates(
         ["doc1_id", "doc2_id"]
+    )
+
+
+def _prefix_keys(prefix: DataFrame, singles: Column | bool,
+                 subsets: Column | bool) -> DataFrame:
+    """(doc_id, _k) keys of prefix rows: the key of a single element,
+    and xxhash64 of the rank-ordered keys of two prefix elements of one
+    doc for a 2-subset, so two docs sharing both elements emit the same
+    key. One long join key, so the key join probes a long-keyed hash
+    map; a hash collision, within or across the shapes, only adds a
+    candidate."""
+    def having(flag):
+        return prefix if flag is True else prefix.filter(flag)
+
+    keys = None
+    if singles is not False:
+        keys = having(singles).select("doc_id", F.col("key").alias("_k"))
+    if subsets is not False:
+        # a doc-keyed self-join of the short prefix lists; the rank
+        # inequality both dedups and orients the key
+        two = having(subsets)
+        a = two.select("doc_id", F.col("key").alias("_k1"),
+                       F.col("rank").alias("_r1"))
+        b = two.select("doc_id", F.col("key").alias("_k2"),
+                       F.col("rank").alias("_r2"))
+        pairs = (
+            a.join(b.transform(hinted), "doc_id")
+            .filter(F.col("_r1") < F.col("_r2"))
+            .select("doc_id", F.xxhash64("_k1", "_k2").alias("_k"))
+        )
+        keys = pairs if keys is None else keys.unionByName(pairs)
+    return keys
+
+
+def prefix_pairs(prefix: DataFrame, singles: Column | bool = True,
+                 subsets: Column | bool = False) -> DataFrame:
+    """Distinct (doc1_id, doc2_id) candidates, doc1 < doc2, from ONE
+    join of the keys of (doc_id, key, rank) prefix rows: each element
+    (``singles``) and/or each 2-subset (``subsets``; C(p, 2) keys for
+    a p-element prefix) of a doc's prefix. Either flag may be a
+    per-document boolean column, so a front end can bound the
+    quadratic shape per document; ``rank`` is read only for subsets.
+    Keys may be hashes: a collision only adds a candidate, and the
+    callers verify exactly."""
+    keys = _prefix_keys(prefix, singles, subsets)
+    a = keys.select(F.col("doc_id").alias("doc1_id"), "_k")
+    b = keys.select(F.col("doc_id").alias("doc2_id"), "_k")
+    return distinct_pairs(
+        a.join(b.transform(hinted), "_k")
+        .filter(F.col("doc1_id") < F.col("doc2_id"))
+        .select("doc1_id", "doc2_id")
     )

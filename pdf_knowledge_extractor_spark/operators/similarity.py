@@ -10,16 +10,14 @@ semantic_analyzer.py:353-354).
 
 Scale design:
 - exact path: long-form self-join on term — sum(w_a * w_b) per pair.
-  The join shuffles on hash(term); a per-term posting-list cap (df
-  stop-listing) bounds the quadratic blowup of ultra-frequent terms
-  exactly like the reference's stopword drop bounds its vectorizer.
   Right at small scale and for oracle checking; O(sum df^2) at 100 TB.
-- prefix path: Bayardo prefix filtering — exact output, candidates
-  from the rare-term prefixes only.
+- prefix path: Bayardo prefix filtering — exact output; the rare-term
+  prefixes are single keys of ``setjoin.prefix_pairs``.
 - scale path (default): MinHash banding over each doc's term set
-  blocks candidates (the band-bucket kernel in ``setjoin``), and the
-  candidates are re-scored with the exact dot product, so emitted
-  scores are exact and only recall is approximate.
+  (``_banded_rows``, then ``setjoin``'s band-bucket kernel).
+The prefix and banded candidates are re-scored with the exact dot
+product, so emitted scores are exact and only the banded path's
+recall is approximate.
 """
 
 from __future__ import annotations
@@ -32,11 +30,12 @@ from pyspark.sql import functions as F
 from pdf_knowledge_extractor_spark.operators.ann import _finalize
 from pdf_knowledge_extractor_spark.operators.setjoin import (
     band_buckets,
+    band_rows,
     bucket_census,
     bucket_pairs,
     distinct_pairs,
+    prefix_pairs,
 )
-from pdf_knowledge_extractor_spark.tuning import hinted
 
 DEFAULT_THRESHOLD = 0.7
 
@@ -46,29 +45,17 @@ _LOG = logging.getLogger(__name__)
 def exact_cosine_pairs(
     tfidf: DataFrame,
     threshold: float = DEFAULT_THRESHOLD,
-    max_df: int | None = None,
     round_dp: int | None = None,
 ) -> DataFrame:
-    """(doc_id, term, weight[, df]) L2-normalized -> pairs
+    """(doc_id, term, weight) L2-normalized -> pairs
     (doc1_id, doc2_id, similarity_score) with doc1 < doc2 and score >=
-    threshold. ``max_df`` stop-lists terms occurring in more docs
-    (bounds the term self-join at scale). ``round_dp`` applies the
-    threshold to round(score, dp) instead of the raw double, so
-    last-ulp summation-order noise cannot flip borderline pairs (the
-    oracle-parity convention)."""
-    t = tfidf
-    if max_df is not None and "df" in t.columns:
-        t = t.filter(F.col("df") <= max_df)
-    a = t.select(
-        F.col("doc_id").alias("doc1_id"),
-        F.col("term"),
-        F.col("weight").alias("w1"),
-    )
-    b = t.select(
-        F.col("doc_id").alias("doc2_id"),
-        F.col("term"),
-        F.col("weight").alias("w2"),
-    )
+    threshold. ``round_dp`` applies the threshold to round(score, dp)
+    instead of the raw double, so last-ulp summation-order noise
+    cannot flip borderline pairs (the oracle-parity convention)."""
+    a = tfidf.select(F.col("doc_id").alias("doc1_id"), "term",
+                     F.col("weight").alias("w1"))
+    b = tfidf.select(F.col("doc_id").alias("doc2_id"), "term",
+                     F.col("weight").alias("w2"))
     score = F.col("similarity_score")
     if round_dp is not None:
         score = F.round(score, round_dp)
@@ -195,8 +182,9 @@ def prefix_cosine_pairs(
     cannot push any pair's dot product to t — so only the rare-term
     prefix participates in the candidate join; candidates that share a
     term in BOTH prefixes are re-scored exactly over the full term
-    lists. Cost drops from Σ df² to Σ prefix_df², which removes the
-    hot common terms from the quadratic join at 100 TB scale.
+    lists (``setjoin.prefix_pairs``, single keys). Cost drops from
+    Σ df² to Σ prefix_df², which removes the hot common terms from the
+    quadratic join at 100 TB scale.
 
     Requires ``df`` column (kept by tfidf_longform) and normalized
     weights.
@@ -214,19 +202,13 @@ def prefix_cosine_pairs(
         ),
     )
     # row is in the prefix while the mass at-or-after it can still
-    # reach the threshold: 1 - cum_before >= t^2
+    # reach the threshold: 1 - cum_before >= t^2; keyed by
+    # xxhash64(term) — a collision only adds a candidate, and the
+    # rescore is exact
     prefix = with_cum.filter(
         (1.0 - F.col("_cum_before")) >= (threshold * threshold - eps)
-    ).select("doc_id", "term")
-
-    pa = prefix.select(F.col("doc_id").alias("doc1_id"), "term")
-    pb = prefix.select(F.col("doc_id").alias("doc2_id"), "term")
-    candidates = (
-        pa.join(pb.transform(hinted), "term")
-        .filter(F.col("doc1_id") < F.col("doc2_id"))
-        .select("doc1_id", "doc2_id")
-    )
-    return _rescore_candidates(distinct_pairs(candidates), tfidf, threshold)
+    ).select("doc_id", F.xxhash64("term").alias("key"))
+    return _rescore_candidates(prefix_pairs(prefix), tfidf, threshold)
 
 
 # bound on the head-term list shipped through the driver by the AUTO
@@ -240,32 +222,40 @@ _HEAD_TERMS_LOCAL_MAX = 100_000
 # head_term_census_agg so a caller-folded census uses the same floor)
 SIGNATURE_HEAD_DF_FLOOR = 256
 
+# postings sampled per head term, by the census and the stop-list's
+# probe alike — one constant, so a census the pipeline folds into its
+# tfidf job always carries the samples the probe reads
+SIGNATURE_HEAD_SAMPLE_DOCS = 16
+
+# share of a head term's sampled pairs that must be genuinely similar
+# for the term to stay in signatures (see _auto_signature_stoplist)
+_SIGNATURE_HEAD_MIN_PRECISION = 0.2
+
 
 def collect_signature_head_census(
     tfidf: DataFrame,
     df_floor: int = SIGNATURE_HEAD_DF_FLOOR,
-    sample_docs: int = 16,
 ) -> list:
     """ONE job over the tfidf long form returning the AUTO stop-list's
     head-term census (term, df) AND each head's deterministic posting
     sample — everything `_auto_signature_stoplist` needs before its
     probe, so the operator pays no further full-corpus scans for
-    sampling. The sample is the first ``sample_docs`` postings in
-    (xxhash64(term, doc_id), doc_id) order that survive a hash
-    pre-filter (hash mod df < 4·sample_docs), which keeps the
-    collected set small on a term whose posting list is up to N
-    rows.
+    sampling. The sample is the first SIGNATURE_HEAD_SAMPLE_DOCS
+    postings in (xxhash64(term, doc_id), doc_id) order that survive a
+    hash pre-filter (hash mod df < 4·that count), which keeps the
+    collected set small on a term whose posting list is up to N rows.
 
     Callers that must materialize the tfidf cache anyway (the
     pipeline) use THIS action as the materialization job and pass the
     rows to ``minhash_blocked_cosine_pairs(signature_heads=...)`` —
     zero extra stop-list jobs on that path (VERDICT r6 item 1); the
     operator runs it internally otherwise. Driver memory stays
-    bounded: <= sample_docs structs per head term survive the slice
-    and the limit caps the row count at the overflow bound."""
+    bounded: <= SIGNATURE_HEAD_SAMPLE_DOCS structs per head term
+    survive the slice and the limit caps the row count at the overflow
+    bound."""
     surv = F.pmod(
         F.xxhash64("term", "doc_id"), F.col("df")
-    ) < F.least(F.lit(4 * sample_docs), F.col("df"))
+    ) < F.least(F.lit(4 * SIGNATURE_HEAD_SAMPLE_DOCS), F.col("df"))
     return (
         tfidf.filter(F.col("df") > df_floor)
         .groupBy("term")
@@ -284,7 +274,7 @@ def collect_signature_head_census(
                     )
                 ),
                 1,
-                sample_docs,
+                SIGNATURE_HEAD_SAMPLE_DOCS,
             ).alias("sampled"),
         )
         .limit(_HEAD_TERMS_LOCAL_MAX + 1)
@@ -298,8 +288,6 @@ def _auto_signature_stoplist(
     n_docs: int | None = None,
     head_df_frac: float = 0.005,
     head_df_floor: int = 256,
-    sample_docs: int = 16,
-    min_precision: float = 0.2,
     probe_max_frac: float = 0.05,
     stats: dict | None = None,
     head_rows: list | None = None,
@@ -320,10 +308,11 @@ def _auto_signature_stoplist(
     already solved with its density probe (false-positive pile-ups vs
     true-dense families), so the same machinery decides per TERM:
 
-    - sample ``sample_docs`` docs from the term's posting list
-      (deterministic hash order), exactly rescore the ≤ C(s,2) sample
-      pairs (broadcast vectors — the sampled-doc table is tiny);
-    - if at least ``min_precision`` of the sampled pairs are genuinely
+    - sample SIGNATURE_HEAD_SAMPLE_DOCS docs from the term's posting
+      list (deterministic hash order), exactly rescore the ≤ C(s,2)
+      sample pairs (broadcast vectors — the sampled-doc table is tiny);
+    - if at least _SIGNATURE_HEAD_MIN_PRECISION of the sampled pairs
+      are genuinely
       similar (cosine ≥ threshold), the term's high df IS signal — a
       boilerplate family sharing it — so it STAYS in signatures (its
       dense buckets then flow to the hot-bucket verify path, which
@@ -331,7 +320,7 @@ def _auto_signature_stoplist(
     - otherwise its df is Zipf-head noise: random co-occurrence whose
       band collisions the rescore would reject — exclude it.
 
-    ``min_precision`` is deliberately LOW (0.2 vs the bucket probe's
+    The precision floor is deliberately LOW (0.2 vs the bucket probe's
     0.5): the asymmetry is that falsely KEEPING a noise term only
     costs wasted candidates (recall-safe), while falsely excluding a
     family term loses output — mixed posting lists (one family + Zipf-
@@ -348,7 +337,7 @@ def _auto_signature_stoplist(
     banding-collision volume, which only dominates when posting lists
     are huge RELATIVE to a fixed-size probe; when sampling the heads
     would touch more than this fraction of the corpus (estimated
-    locally from the head census as Σ min(sample_docs, df) — an upper
+    locally from the head census as Σ min(sample, df) — an upper
     bound, so the gate errs toward skipping), the collision volume
     the exclusions could prevent is the same order as the probe
     itself, and the probe becomes pure overhead: measured +11.5 s on
@@ -371,7 +360,7 @@ def _auto_signature_stoplist(
         # (round 7 — the r6 form ran the census, then a second full
         # posting scan + window job just to draw the per-term samples)
         head_rows = collect_signature_head_census(
-            tfidf, df_floor=head_df_floor, sample_docs=sample_docs
+            tfidf, df_floor=head_df_floor
         )
     cap = max(head_df_floor, int(head_df_frac * n_docs))
     heads = [
@@ -404,7 +393,8 @@ def _auto_signature_stoplist(
             stats["signature_probe_skipped_small_corpus"] = True
         return None
     probe_frac = min(
-        1.0, sum(min(sample_docs, d) for _, d in heads) / n_docs
+        1.0,
+        sum(min(SIGNATURE_HEAD_SAMPLE_DOCS, d) for _, d in heads) / n_docs,
     )
     if stats is not None:
         stats["signature_probe_frac"] = round(probe_frac, 4)
@@ -460,7 +450,7 @@ def _auto_signature_stoplist(
     excluded = [
         (r["term"],)
         for r in verdicts
-        if r["_ok"] < min_precision * r["_tot"]
+        if r["_ok"] < _SIGNATURE_HEAD_MIN_PRECISION * r["_tot"]
     ]
     kept = len(verdicts) - len(excluded)
     if stats is not None:
@@ -493,8 +483,6 @@ def minhash_blocked_cosine_pairs(
     n_docs: int | None = None,
     signature_head_df_frac: float = 0.005,
     signature_head_df_floor: int = SIGNATURE_HEAD_DF_FLOOR,
-    signature_head_sample_docs: int = 16,
-    signature_head_min_precision: float = 0.2,
     signature_probe_max_frac: float = 0.05,
     signature_heads: list | None = None,
 ) -> DataFrame:
@@ -612,8 +600,6 @@ def minhash_blocked_cosine_pairs(
             tfidf, threshold, n_docs=n_docs,
             head_df_frac=signature_head_df_frac,
             head_df_floor=signature_head_df_floor,
-            sample_docs=signature_head_sample_docs,
-            min_precision=signature_head_min_precision,
             probe_max_frac=signature_probe_max_frac,
             stats=stats,
             head_rows=signature_heads,
@@ -662,7 +648,6 @@ def _banded_rows(
     fallback semantics are preserved exactly (a doc with any kept term
     has every kept-min non-null; an all-head doc falls back to the
     full-set signature for every k)."""
-    rows_per_band = num_hashes // bands
     t = tfidf
 
     def h(k: int):
@@ -689,26 +674,7 @@ def _banded_rows(
     else:
         aggs = [F.min(h(k)).alias(f"_mk{k}") for k in range(num_hashes)]
         sig_cols = [F.col(f"_mk{k}") for k in range(num_hashes)]
-    mins = t.groupBy("doc_id").agg(*aggs)
-    band_hashes = F.array(*[
-        F.xxhash64(
-            F.concat_ws(
-                "_",
-                *[
-                    c.cast("string")
-                    for c in sig_cols[
-                        b * rows_per_band:(b + 1) * rows_per_band
-                    ]
-                ],
-            )
-        )
-        for b in range(bands)
-    ])
-    return (
-        mins.select("doc_id", F.posexplode(band_hashes))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "band_hash")
-    )
+    return band_rows(t.groupBy("doc_id").agg(*aggs), sig_cols, bands)
 
 
 def banding_census(

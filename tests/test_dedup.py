@@ -131,36 +131,114 @@ def test_minhash_bucket_cap(spark):
     assert not any(a != 0 and b < 100 for a, b in got), got
 
 
+def _long_doc_words(n_words):
+    return [f"w{i}" for i in range(n_words)]
+
+
+def _jaccard_rows(docs, threshold, **kw):
+    from pdf_knowledge_extractor_spark.operators import dedup
+
+    return sorted(
+        (r["doc1_id"], r["doc2_id"], r["inter"], r["sz1"], r["sz2"],
+         round(r["jaccard"], 9))
+        for r in dedup.ngram_jaccard_pairs(
+            docs, threshold=threshold, n=3, max_df=None, **kw
+        ).collect()
+    )
+
+
 def test_ngram_prefix_path_matches_direct(spark, small_corpus, monkeypatch):
     """Round 7: ngram_jaccard_pairs picks its physical plan by posting
     volume (direct self-join below _PREFIX_PATH_MIN_POSTS, the
     prefix-pair candidate path above). Small fixtures always take the
     direct path, so pin the prefix path's exactness explicitly by
     forcing it onto the same corpus and comparing full rows — the
-    prefix machinery (2-subset keys + small-doc side channel +
-    string-array intersection verify) must reproduce the direct
-    join's output byte-for-byte at several thresholds."""
+    prefix machinery (2-subset and single keys + string-array
+    intersection verify) must reproduce the direct join's output
+    byte-for-byte at several thresholds.
+
+    The second input crosses the 256-element 2-subset bound at t=0.5:
+    a 600-shingle doc (302-element prefix) emits single keys only, its
+    near-duplicate too, a 300-shingle prefix of both (Jaccard exactly
+    0.5 with each) emits both shapes, and a 250-shingle prefix of that
+    one 2-subsets only."""
     from pdf_knowledge_extractor_spark.operators import dedup
 
-    def rows(threshold):
+    w = _long_doc_words(602)
+    near = list(w)
+    near[450] = "changed"
+    long_docs = spark.createDataFrame(
+        [(1, " ".join(w)), (2, " ".join(near)), (3, " ".join(w[:302])),
+         (4, " ".join(w[:252]))],
+        "doc_id long, content string",
+    )
+    inputs = (("small_corpus", small_corpus), ("long docs", long_docs))
+    for name, docs in inputs:
+        for t in (0.5, 0.8):
+            direct = _jaccard_rows(docs, t, text_col="content")
+            monkeypatch.setattr(dedup, "_PREFIX_PATH_MIN_POSTS", 0)
+            prefix = _jaccard_rows(docs, t, text_col="content")
+            monkeypatch.setattr(dedup, "_PREFIX_PATH_MIN_POSTS", 1_000_000)
+            assert direct, f"{name} produced no pairs at t={t}"
+            assert prefix == direct, (
+                f"prefix path diverged from direct on {name} at t={t}"
+            )
+
+
+def test_ngram_prefix_keys_linear_past_bound(spark, monkeypatch):
+    """A 20,000-shingle doc at t=0.8 has a 4,002-element prefix, past
+    the 256-element 2-subset bound: it emits that prefix as single
+    keys — at most 4,002 key rows, where its 2-subsets would be
+    C(4002, 2) ≈ 8.0M — and the pairs still equal the direct path's."""
+    from pdf_knowledge_extractor_spark.operators import dedup
+    from pdf_knowledge_extractor_spark.operators.setjoin import (
+        _prefix_keys,
+    )
+
+    w = _long_doc_words(20_002)
+    near = list(w)
+    near[10_000] = "changed"
+    docs = spark.createDataFrame(
+        [(1, " ".join(w)), (2, " ".join(near)), (3, "a short other doc")],
+        "doc_id long, text string",
+    )
+    prefix = dedup._jaccard_prefix(dedup.shingle_posting(docs), 0.8)
+    keys = _prefix_keys(prefix, F.col("_single"), F.col("_subset"))
+    per_doc = {
+        r["doc_id"]: r["count"] for r in keys.groupBy("doc_id").count()
+        .collect()
+    }
+    assert per_doc[1] <= 4002 and per_doc[2] <= 4002, per_doc
+
+    direct = _jaccard_rows(docs, 0.8)
+    monkeypatch.setattr(dedup, "_PREFIX_PATH_MIN_POSTS", 0)
+    assert direct and _jaccard_rows(docs, 0.8) == direct
+
+
+def test_banded_sets_equal_flat_banded_rows(spark, small_corpus):
+    """dedup's array-signature front end and similarity's flat
+    min-aggregate front end band the same sets into the same rows."""
+    from pdf_knowledge_extractor_spark.operators.dedup import (
+        _banded_sets,
+        word_shingles,
+    )
+    from pdf_knowledge_extractor_spark.operators.similarity import (
+        _banded_rows,
+    )
+
+    sets = small_corpus.select(
+        "doc_id",
+        F.array_distinct(word_shingles(F.col("content"))).alias("_sh"),
+    )
+    long_form = sets.select("doc_id", F.explode("_sh").alias("term"))
+
+    def rows(df):
         return sorted(
-            (r["doc1_id"], r["doc2_id"], r["inter"], r["sz1"], r["sz2"],
-             round(r["jaccard"], 9))
-            for r in dedup.ngram_jaccard_pairs(
-                small_corpus, threshold=threshold, n=3,
-                id_col="doc_id", text_col="content", max_df=None,
-            ).collect()
+            (r["doc_id"], r["band"], r["band_hash"]) for r in df.collect()
         )
 
-    for t in (0.5, 0.8):
-        direct = rows(t)
-        monkeypatch.setattr(dedup, "_PREFIX_PATH_MIN_POSTS", 0)
-        prefix = rows(t)
-        monkeypatch.setattr(dedup, "_PREFIX_PATH_MIN_POSTS", 1_000_000)
-        assert direct, f"fixture produced no pairs at t={t}"
-        assert prefix == direct, (
-            f"prefix path diverged from direct at t={t}"
-        )
+    got = rows(_banded_sets(sets, 60, 12))
+    assert got and got == rows(_banded_rows(long_form, 60, 12))
 
 
 def test_minhash_hot_bucket_modes_exact(spark):
@@ -193,8 +271,7 @@ def test_minhash_jaccard_is_exact(spark):
 
 def test_simhash_rejects_unblockable_hamming(spark):
     """64 one-bit blocks cannot cover a distance of 64 by pigeonhole:
-    with bands defaulted the operator refuses instead of silently
-    missing pairs."""
+    the operator refuses instead of silently missing pairs."""
     docs = _hot_bucket_docs(spark)
     with pytest.raises(ValueError, match="max_hamming"):
         simhash_near_dup_pairs(docs, max_hamming=64)

@@ -124,7 +124,8 @@ def test_candidate_path_sort_free(spark, small_corpus):
     )
 
 
-def test_ngram_jaccard_sort_free(spark, small_corpus):
+def test_ngram_jaccard_sort_free(spark, small_corpus, monkeypatch):
+    from pdf_knowledge_extractor_spark.operators import dedup
     from pdf_knowledge_extractor_spark.operators.dedup import (
         ngram_jaccard_pairs,
     )
@@ -136,6 +137,43 @@ def test_ngram_jaccard_sort_free(spark, small_corpus):
     assert "SortMergeJoin" not in plan, (
         "posting self-join regressed to SMJ"
     )
+    # the prefix path, forced; its result is kept lazy (no checkpoint)
+    # so the candidate and verify plan stays inspectable
+    monkeypatch.setattr(dedup, "_PREFIX_PATH_MIN_POSTS", 0)
+    monkeypatch.setattr(dedup, "_finalize", lambda result, *cached: result)
+    pairs = ngram_jaccard_pairs(
+        small_corpus, threshold=0.5, id_col="doc_id", text_col="content"
+    )
+    plan = _plan(pairs)
+    assert "ShuffledHashJoin" in plan
+    assert "SortMergeJoin" not in plan, "prefix path regressed to SMJ"
+
+
+def test_unbounded_concepts_not_broadcast(spark, small_corpus):
+    """Without max_concepts the fused aggregate's winners and their
+    variants are unbounded relations, so it must not broadcast them;
+    under the pipeline's cap of 100 its broadcasts stay. Size-based
+    auto-broadcast is off while planning, so the plans show the
+    operator's own hints; the checkpointed mentions keep the mention
+    plan's joins out of the tree."""
+    from pdf_knowledge_extractor_spark.operators.concepts import (
+        aggregate_concepts_canonical,
+    )
+    from pdf_knowledge_extractor_spark.operators.mentions import all_mentions
+
+    mentions = all_mentions(
+        small_corpus, id_col="doc_id", text_col="content", lang_col="lang"
+    ).localCheckpoint()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        unbounded = _plan(aggregate_concepts_canonical(mentions, 1, None))
+        capped = _plan(aggregate_concepts_canonical(mentions, 2, 100))
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastExchange" not in unbounded
+    assert "BroadcastExchange" in capped
 
 
 def test_concepts_agg_bounded_memory_shape(spark, small_corpus):

@@ -9,11 +9,19 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+# the Python workers (UDF queries) must import the same tree; they
+# inherit PYTHONPATH from the JVM that get_spark starts below
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from pdf_knowledge_extractor_spark.session import get_spark  # noqa: E402
 from pdf_knowledge_extractor_spark.sources.readers import TABLES  # noqa: E402

@@ -17,8 +17,15 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+# the Python workers (UDF queries) must import the same tree; they
+# inherit PYTHONPATH from the JVM that get_spark starts below
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from pdf_knowledge_extractor_spark.corpus import generate_corpus  # noqa: E402
 from pdf_knowledge_extractor_spark.operators.ann import (  # noqa: E402
