@@ -102,16 +102,25 @@ def shingle_posting(docs: DataFrame, id_col: str = "doc_id",
 _PREFIX_PATH_MIN_POSTS = 1_000_000
 
 # a doc emits 2-subset prefix keys while its prefix has at most this
-# many elements — C(256, 2) = 32,640 key rows; past it, its prefix
-# elements become single keys, linear in the prefix length
-_SUBSET_PREFIX_MAX = 256
+# many elements — C(128, 2) = 8,128 key rows; past it, its prefix
+# elements become single keys, linear in the prefix length. Measured
+# with tools/bench_prefix_bound.py (4 vCPUs): on sf0.1 (prefixes
+# <= 51) 2-subsets cut the candidates 78x at t=0.8 and 2.8x at t=0.5
+# against single keys; on page-length docs (150-1,200 words) they cut
+# almost none, and the candidate step grows with the bound (t=0.5:
+# 2.6 s at 0, 4.1 s at 128, 4.9 s at 256, 15.9 s with no bound; 128
+# vs 256 over 3 fresh JVMs: 6.4 vs 7.6 s at t=0.5, 6.9 vs 7.8 s at
+# t=0.8). 128 is the lowest bound that keeps every sf0.1 doc on
+# 2-subsets.
+_SUBSET_PREFIX_MAX = 128
 
 
 def _jaccard_prefix(posts: DataFrame, threshold: float) -> DataFrame:
-    """(doc_id, key, rank, _single, _subset) prefix rows of distinct
-    (doc_id, shingle) postings for ``setjoin.prefix_pairs``: each doc's
-    first |X| - ceil(t·|X|) + 2 shingles in the global order (df asc,
-    shingle asc), key = xxhash64(shingle), and the key shapes it emits.
+    """(doc_id, _h, rank, _single, _subset) prefix rows of distinct
+    (doc_id, shingle) postings: each doc's first |X| - ceil(t·|X|) + 2
+    shingles in the global order (df asc, shingle asc),
+    _h = xxhash64(shingle), and the key shapes the doc emits
+    (``_jaccard_keys``).
 
     Completeness: a pair with J >= t shares I >= ceil(t·|X|) elements,
     so the q-th smallest shared element sits at position
@@ -153,10 +162,35 @@ def _jaccard_prefix(posts: DataFrame, threshold: float) -> DataFrame:
             plen(F.floor(sz / threshold + 1e-9)) > _SUBSET_PREFIX_MAX
         )
     return ranked.filter(F.col("rank") <= plen(sz)).select(
-        "doc_id", F.xxhash64("shingle").alias("key"), "rank",
+        "doc_id", F.xxhash64("shingle").alias("_h"), "rank",
         single.alias("_single"),
         (plen(sz) <= _SUBSET_PREFIX_MAX).alias("_subset"),
     )
+
+
+def _jaccard_keys(prefix: DataFrame) -> DataFrame:
+    """(doc_id, _k) keys of ``_jaccard_prefix`` rows for
+    ``setjoin.prefix_pairs``: _h of each element of a ``_single`` doc,
+    and xxhash64 of the rank-ordered _h of every two elements of a
+    ``_subset`` doc's prefix, so two docs sharing both elements emit
+    the same key. A hash collision, within or across the two shapes,
+    only adds a candidate."""
+    singles = prefix.filter("_single").select(
+        "doc_id", F.col("_h").alias("_k")
+    )
+    # a doc-keyed self-join of the short prefix lists; the rank
+    # inequality both dedups and orients the key
+    two = prefix.filter("_subset")
+    a = two.select("doc_id", F.col("_h").alias("_h1"),
+                   F.col("rank").alias("_r1"))
+    b = two.select("doc_id", F.col("_h").alias("_h2"),
+                   F.col("rank").alias("_r2"))
+    subsets = (
+        a.join(b.transform(hinted), "doc_id")
+        .filter(F.col("_r1") < F.col("_r2"))
+        .select("doc_id", F.xxhash64("_h1", "_h2").alias("_k"))
+    )
+    return singles.unionByName(subsets)
 
 
 def ngram_jaccard_pairs(
@@ -172,12 +206,12 @@ def ngram_jaccard_pairs(
     shingles.
 
     Physical shape (round 7): prefix candidates (Bayardo WWW'07 / Xiao
-    PPJoin, extended to 2-subset keys; ``_jaccard_prefix``) + exact
-    set-intersection verify, replacing the full posting self-join +
-    per-pair count aggregation — at the 50k-doc driver table a
-    128M-row join feeding a 114M-group exchange, nearly all of it for
-    pairs sharing a single boilerplate shingle that the threshold then
-    rejects. Join keys are xxhash64 of the shingles — a collision can
+    PPJoin, extended to 2-subset keys; ``_jaccard_prefix``,
+    ``_jaccard_keys``) + exact set-intersection verify, replacing the
+    full posting self-join + per-pair count aggregation — at the
+    50k-doc driver table a 128M-row join feeding a 114M-group exchange,
+    nearly all of it for pairs sharing a single boilerplate shingle
+    that the threshold then rejects. Join keys are xxhash64 of the shingles — a collision can
     only ADD a candidate, and the verify intersects the docs' actual
     sorted shingle-string arrays, so every emitted (inter, jaccard) is
     exact and the output is identical to the full self-join's.
@@ -229,12 +263,9 @@ def ngram_jaccard_pairs(
     # cached: both sides of the key join read the single and the
     # 2-subset keys, and each read would re-run the ranking window
     prefix = _jaccard_prefix(posts, threshold).persist()
-    candidates = prefix_pairs(
-        prefix, singles=F.col("_single"), subsets=F.col("_subset")
-    )
     # cached: the verify reads the candidates three times (the pairs
     # and the doc ids that bound each side's shingle arrays)
-    candidates = candidates.persist()
+    candidates = prefix_pairs(_jaccard_keys(prefix)).persist()
     return _finalize(
         _verify_jaccard(candidates, threshold, posts=posts), candidates,
         prefix,

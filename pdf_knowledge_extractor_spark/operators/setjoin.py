@@ -15,8 +15,8 @@ this module owns the candidate step:
   A hot bucket's member list is still gathered whole; a cap bounds
   the pairs, not that list;
 - ``prefix_pairs``: prefix filtering (Bayardo et al., WWW'07) — ONE
-  join of the single-element and/or 2-subset keys of ranked prefix
-  rows;
+  self-join of the (doc_id, key) rows a front end builds from its
+  prefixes;
 - ``distinct_pairs``: one exchange on doc1_id dedups a pair stream.
 """
 
@@ -120,48 +120,12 @@ def distinct_pairs(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _prefix_keys(prefix: DataFrame, singles: Column | bool,
-                 subsets: Column | bool) -> DataFrame:
-    """(doc_id, _k) keys of prefix rows: the key of a single element,
-    and xxhash64 of the rank-ordered keys of two prefix elements of one
-    doc for a 2-subset, so two docs sharing both elements emit the same
-    key. One long join key, so the key join probes a long-keyed hash
-    map; a hash collision, within or across the shapes, only adds a
-    candidate."""
-    def having(flag):
-        return prefix if flag is True else prefix.filter(flag)
-
-    keys = None
-    if singles is not False:
-        keys = having(singles).select("doc_id", F.col("key").alias("_k"))
-    if subsets is not False:
-        # a doc-keyed self-join of the short prefix lists; the rank
-        # inequality both dedups and orients the key
-        two = having(subsets)
-        a = two.select("doc_id", F.col("key").alias("_k1"),
-                       F.col("rank").alias("_r1"))
-        b = two.select("doc_id", F.col("key").alias("_k2"),
-                       F.col("rank").alias("_r2"))
-        pairs = (
-            a.join(b.transform(hinted), "doc_id")
-            .filter(F.col("_r1") < F.col("_r2"))
-            .select("doc_id", F.xxhash64("_k1", "_k2").alias("_k"))
-        )
-        keys = pairs if keys is None else keys.unionByName(pairs)
-    return keys
-
-
-def prefix_pairs(prefix: DataFrame, singles: Column | bool = True,
-                 subsets: Column | bool = False) -> DataFrame:
+def prefix_pairs(keys: DataFrame) -> DataFrame:
     """Distinct (doc1_id, doc2_id) candidates, doc1 < doc2, from ONE
-    join of the keys of (doc_id, key, rank) prefix rows: each element
-    (``singles``) and/or each 2-subset (``subsets``; C(p, 2) keys for
-    a p-element prefix) of a doc's prefix. Either flag may be a
-    per-document boolean column, so a front end can bound the
-    quadratic shape per document; ``rank`` is read only for subsets.
-    Keys may be hashes: a collision only adds a candidate, and the
-    callers verify exactly."""
-    keys = _prefix_keys(prefix, singles, subsets)
+    self-join of (doc_id, _k) prefix keys: two docs pair when they
+    emit a common key. The front end decides what a key is (a prefix
+    element, or a 2-subset of one); a hashed key is fine, since a
+    collision only adds a candidate and the callers verify exactly."""
     a = keys.select(F.col("doc_id").alias("doc1_id"), "_k")
     b = keys.select(F.col("doc_id").alias("doc2_id"), "_k")
     return distinct_pairs(

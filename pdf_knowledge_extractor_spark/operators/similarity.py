@@ -11,8 +11,8 @@ semantic_analyzer.py:353-354).
 Scale design:
 - exact path: long-form self-join on term — sum(w_a * w_b) per pair.
   Right at small scale and for oracle checking; O(sum df^2) at 100 TB.
-- prefix path: Bayardo prefix filtering — exact output; the rare-term
-  prefixes are single keys of ``setjoin.prefix_pairs``.
+- prefix path: Bayardo prefix filtering — exact output; the terms of
+  the rare-term prefixes are the keys of ``setjoin.prefix_pairs``.
 - scale path (default): MinHash banding over each doc's term set
   (``_banded_rows``, then ``setjoin``'s band-bucket kernel).
 The prefix and banded candidates are re-scored with the exact dot
@@ -182,7 +182,7 @@ def prefix_cosine_pairs(
     cannot push any pair's dot product to t — so only the rare-term
     prefix participates in the candidate join; candidates that share a
     term in BOTH prefixes are re-scored exactly over the full term
-    lists (``setjoin.prefix_pairs``, single keys). Cost drops from
+    lists (``setjoin.prefix_pairs`` on the terms). Cost drops from
     Σ df² to Σ prefix_df², which removes the hot common terms from the
     quadratic join at 100 TB scale.
 
@@ -202,12 +202,10 @@ def prefix_cosine_pairs(
         ),
     )
     # row is in the prefix while the mass at-or-after it can still
-    # reach the threshold: 1 - cum_before >= t^2; keyed by
-    # xxhash64(term) — a collision only adds a candidate, and the
-    # rescore is exact
+    # reach the threshold: 1 - cum_before >= t^2
     prefix = with_cum.filter(
         (1.0 - F.col("_cum_before")) >= (threshold * threshold - eps)
-    ).select("doc_id", F.xxhash64("term").alias("key"))
+    ).select("doc_id", F.col("term").alias("_k"))
     return _rescore_candidates(prefix_pairs(prefix), tfidf, threshold)
 
 

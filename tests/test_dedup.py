@@ -157,19 +157,20 @@ def test_ngram_prefix_path_matches_direct(spark, small_corpus, monkeypatch):
     intersection verify) must reproduce the direct join's output
     byte-for-byte at several thresholds.
 
-    The second input crosses the 256-element 2-subset bound at t=0.5:
+    The second input crosses the 128-element 2-subset bound at t=0.5:
     a 600-shingle doc (302-element prefix) emits single keys only, its
-    near-duplicate too, a 300-shingle prefix of both (Jaccard exactly
-    0.5 with each) emits both shapes, and a 250-shingle prefix of that
-    one 2-subsets only."""
+    near-duplicate and a 300-shingle prefix of both (Jaccard exactly
+    0.5 with each) too, a 150-shingle prefix of that one both shapes,
+    and a 125-shingle prefix of that one 2-subsets only."""
     from pdf_knowledge_extractor_spark.operators import dedup
 
+    assert dedup._SUBSET_PREFIX_MAX == 128
     w = _long_doc_words(602)
     near = list(w)
     near[450] = "changed"
     long_docs = spark.createDataFrame(
         [(1, " ".join(w)), (2, " ".join(near)), (3, " ".join(w[:302])),
-         (4, " ".join(w[:252]))],
+         (4, " ".join(w[:152])), (5, " ".join(w[:127]))],
         "doc_id long, content string",
     )
     inputs = (("small_corpus", small_corpus), ("long docs", long_docs))
@@ -187,13 +188,10 @@ def test_ngram_prefix_path_matches_direct(spark, small_corpus, monkeypatch):
 
 def test_ngram_prefix_keys_linear_past_bound(spark, monkeypatch):
     """A 20,000-shingle doc at t=0.8 has a 4,002-element prefix, past
-    the 256-element 2-subset bound: it emits that prefix as single
+    the 128-element 2-subset bound: it emits that prefix as single
     keys — at most 4,002 key rows, where its 2-subsets would be
     C(4002, 2) ≈ 8.0M — and the pairs still equal the direct path's."""
     from pdf_knowledge_extractor_spark.operators import dedup
-    from pdf_knowledge_extractor_spark.operators.setjoin import (
-        _prefix_keys,
-    )
 
     w = _long_doc_words(20_002)
     near = list(w)
@@ -203,7 +201,7 @@ def test_ngram_prefix_keys_linear_past_bound(spark, monkeypatch):
         "doc_id long, text string",
     )
     prefix = dedup._jaccard_prefix(dedup.shingle_posting(docs), 0.8)
-    keys = _prefix_keys(prefix, F.col("_single"), F.col("_subset"))
+    keys = dedup._jaccard_keys(prefix)
     per_doc = {
         r["doc_id"]: r["count"] for r in keys.groupBy("doc_id").count()
         .collect()

@@ -137,14 +137,22 @@ def test_ngram_jaccard_sort_free(spark, small_corpus, monkeypatch):
     assert "SortMergeJoin" not in plan, (
         "posting self-join regressed to SMJ"
     )
-    # the prefix path, forced; its result is kept lazy (no checkpoint)
-    # so the candidate and verify plan stays inspectable
+    # the prefix path, forced; its lazy result's plan is read before
+    # _finalize checkpoints it (the checkpoint's plan shows no join)
+    # and releases the operator's caches
+    plans = []
+    finalize = dedup._finalize
+
+    def planned(result, *cached):
+        plans.append(_plan(result))
+        return finalize(result, *cached)
+
     monkeypatch.setattr(dedup, "_PREFIX_PATH_MIN_POSTS", 0)
-    monkeypatch.setattr(dedup, "_finalize", lambda result, *cached: result)
-    pairs = ngram_jaccard_pairs(
+    monkeypatch.setattr(dedup, "_finalize", planned)
+    ngram_jaccard_pairs(
         small_corpus, threshold=0.5, id_col="doc_id", text_col="content"
     )
-    plan = _plan(pairs)
+    plan, = plans
     assert "ShuffledHashJoin" in plan
     assert "SortMergeJoin" not in plan, "prefix path regressed to SMJ"
 
