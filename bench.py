@@ -119,29 +119,9 @@ def _env():
     corpus_rows = int(
         os.environ.get("PKE_BENCH_CORPUS_ROWS", str(int(500_000 * sf)))
     )
-    profile = os.environ.get("PKE_BENCH_PROFILE", "production")
     repeats = int(os.environ.get("PKE_BENCH_REPEATS", "3"))
     pipe_repeats = int(os.environ.get("PKE_BENCH_PIPELINE_REPEATS", "2"))
-    return sf_dir, cpus, sf, corpus_rows, profile, repeats, pipe_repeats
-
-
-def _session(cpus: int, profile: str):
-    # PRODUCTION confs by default (the engine's own session defaults:
-    # AQE on, whole-stage codegen on) — what a real cluster would run,
-    # where janino compile cost amortizes over 100x more data per
-    # stage. PKE_BENCH_PROFILE=tuned re-enables the local-only
-    # NO_CODEGEN/AQE-off profile for comparison; the measured delta per
-    # profile lives in BENCH/BASELINE.md.
-    extra_conf = (
-        {
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.codegen.wholeStage": "false",
-            "spark.sql.codegen.factoryMode": "NO_CODEGEN",
-        }
-        if profile == "tuned"
-        else {}
-    )
-    return get_spark("pke-bench", cpus=cpus, extra_conf=extra_conf)
+    return sf_dir, cpus, sf, corpus_rows, repeats, pipe_repeats
 
 
 def _warmup(spark, sf_dir: str) -> None:
@@ -164,9 +144,11 @@ class _Bench:
     any single row in a fresh JVM."""
 
     def __init__(self):
-        (self.sf_dir, self.cpus, self.sf, self.corpus_rows, self.profile,
-         self.repeats, self.pipe_repeats) = _env()
-        self.spark = _session(self.cpus, self.profile)
+        (self.sf_dir, self.cpus, self.sf, self.corpus_rows, self.repeats,
+         self.pipe_repeats) = _env()
+        # the engine's own session defaults (AQE on, whole-stage codegen
+        # on): what a real cluster runs
+        self.spark = get_spark("pke-bench", cpus=self.cpus)
         _warmup(self.spark, self.sf_dir)
         self.qs = entry_queries.get_queries()
         self.timings: dict[str, float] = {}
@@ -283,7 +265,10 @@ class _Bench:
         # the full 50k corpus (the flat-weight content defeats the
         # prefix bound; that is why minhash banding is the default
         # scale path). Bench it on a 10k-doc slice so the row tracks
-        # regressions without dominating the suite.
+        # regressions without dominating the suite. The slice is
+        # selected and cached before the row: the corpus is generated
+        # lazily, so selecting its ids inside the row re-ran the
+        # generator in every repeat.
         from pyspark.sql import functions as F
 
         from pdf_knowledge_extractor_spark.operators.similarity import (
@@ -298,12 +283,14 @@ class _Bench:
                 .limit(prefix_docs)
             ),
             "doc_id",
-        )
+        ).persist()
+        sub.count()
         self.measure(
             f"sim_prefix_corpus_{prefix_docs // 1000}k",
             lambda: prefix_cosine_pairs(sub, threshold=0.7).count(),
             self.repeats,
         )
+        sub.unpersist()
 
     def row_kg_pipeline_clustered(self):
         # the CLUSTERED pipeline end-to-end (VERDICT r3 item 2): real
@@ -365,7 +352,7 @@ def run_fresh_sessions() -> None:
     """--fresh-session-per-row orchestrator: one subprocess JVM per
     row, same output schema as the shared path plus
     "fresh_session": true."""
-    sf_dir, cpus, sf, corpus_rows, profile, repeats, pipe_repeats = _env()
+    sf_dir, cpus, sf, corpus_rows, repeats, pipe_repeats = _env()
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     host_census: dict[str, dict] = {}
@@ -406,7 +393,7 @@ def run_fresh_sessions() -> None:
         ),
         "clustered_triples": extras.get("clustered_triples"),
         "cpus": cpus,
-        "profile": profile,
+        "profile": "production",
     }))
 
 
@@ -456,7 +443,7 @@ def main() -> None:
                 ),
                 "clustered_triples": b.state.get("clustered_triples"),
                 "cpus": b.cpus,
-                "profile": b.profile,
+                "profile": "production",
             }
         )
     )

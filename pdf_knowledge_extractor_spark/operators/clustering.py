@@ -39,16 +39,11 @@ def cluster_documents(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.evaluation import ClusteringEvaluator
 
-    sc0 = vectors.sparkSession.sparkContext
     # persist BEFORE the size count so the count job also materializes
     # the kmeans input cache (the r6 order counted first and persisted
-    # after — one full wasted to_ml_vectors pass), and label it so the
-    # clustered-path job attribution has no anonymous count/collect
-    # rows (VERDICT r6 item 3)
+    # after — one full wasted to_ml_vectors pass)
     vectors = vectors.persist()
-    sc0.setJobDescription("pke: to_ml_vectors materialize + count")
     n = vectors.count()
-    sc0.setJobDescription(None)
     if n < 4:
         if unpersist_input:
             vectors.unpersist()
@@ -61,24 +56,13 @@ def cluster_documents(
         predictionCol="cluster_id", featuresCol="features", metricName="silhouette"
     )
 
-    sc = vectors.sparkSession.sparkContext
-
     def fit(kk: int, score_it: bool = True):
         km = KMeans(
             k=kk, seed=seed, featuresCol="features", predictionCol="cluster_id"
         )
-        # job-description markers so per-job wall time is attributable
-        # post-hoc from the status store — the KMeans fit and the
-        # silhouette evaluation are the two driver-blocking ML actions
-        # in the clustered path
-        sc.setJobDescription(f"pke: kmeans fit k={kk}")
         model = km.fit(vectors)
         preds = model.transform(vectors)
-        score = float("nan")
-        if score_it:
-            sc.setJobDescription(f"pke: silhouette k={kk}")
-            score = evaluator.evaluate(preds)
-        sc.setJobDescription(None)
+        score = evaluator.evaluate(preds) if score_it else float("nan")
         return preds, score
 
     if k is not None:
@@ -294,30 +278,4 @@ def cluster_coherence_centroid(
             )
             .alias("coherence_score"),
         )
-    )
-
-
-def cluster_coherence_from_pairs(
-    assignments: DataFrame, similarity_pairs: DataFrame
-) -> DataFrame:
-    """Scale-path APPROXIMATION of cluster_coherence that reuses the
-    already-materialized J1 pair table instead of a fresh
-    within-cluster join: averages only pairs >= the similarity
-    threshold, so it is upward-biased for clusters with qualifying
-    pairs and 0.0 for clusters without (vs the reference's true mean
-    over all positive cosines). Use when the exact within-cluster
-    join is too expensive and a threshold-restricted coherence is an
-    acceptable, DOCUMENTED deviation (PipelineConfig.coherence_mode="pairs")."""
-    a = assignments.select(
-        F.col("doc_id").alias("doc1_id"), F.col("cluster_id").alias("c1")
-    )
-    b = assignments.select(
-        F.col("doc_id").alias("doc2_id"), F.col("cluster_id").alias("c2")
-    )
-    return (
-        similarity_pairs.join(a, "doc1_id")
-        .join(b, "doc2_id")
-        .filter(F.col("c1") == F.col("c2"))
-        .groupBy(F.col("c1").alias("cluster_id"))
-        .agg(F.avg("similarity_score").alias("coherence_score"))
     )

@@ -1,5 +1,4 @@
-"""Connected components via iterative joins (G2) — the
-canonicalization primitive.
+"""Connected components via iterative joins (G2).
 
 The reference computes component counts with networkx
 (semantic_analyzer.py:177); at scale we run min-label propagation as a
@@ -14,14 +13,15 @@ until a fixed point. Each iteration is one shuffle on hash(node);
 the lineage so plans stay bounded. Deterministic: labels are min node
 ids under string ordering.
 
-Used for alias canonicalization: build an edge set linking alias
-mention variants (case/underscore variants of the same symbol), run
-components, and the component label becomes the canonical entity id.
+Concept alias canonicalization does not need it: its alias graph links
+each text to one normalized key, so every component is a star and a
+groupBy on the key (``concepts.canonical_merge``) is the whole
+computation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -35,9 +35,9 @@ def connected_components(
 ) -> DataFrame | tuple[DataFrame, dict]:
     """-> (node, component) where component = min node id in the
     component (string min). With ``return_stats``, also returns
-    {"iterations": n, "converged": bool} — convergence in
-    O(graph diameter) rounds; unconverged callers should escalate to
-    connected_components_twophase (O(log² n) rounds)."""
+    {"iterations": n, "converged": bool} — convergence takes
+    O(graph diameter) rounds, so a long chain needs a budget of about
+    its length."""
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -88,192 +88,3 @@ def connected_components(
         return labels, {"iterations": iterations, "converged": converged}
     return labels
 
-
-def connected_components_twophase(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 20,
-    checkpoint_every: int = 2,
-    return_stats: bool = False,
-) -> DataFrame | tuple[DataFrame, dict]:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public algorithm). Same output contract as
-    connected_components: (node, component = min node id, string min).
-
-    Why it exists: plain min-label propagation converges in
-    O(graph diameter) shuffle rounds — fine for star-shaped alias
-    graphs (diameter <= 2), but a length-L chain needs L rounds. The
-    star operations contract paths roughly geometrically
-    (O(log^2 n) rounds on adversarial graphs), so this is the variant
-    to reach for when components may be long chains at 100x scale.
-
-    large-star: for each node u, connect every strictly-larger
-    neighbor to min(N(u) ∪ {u}).
-    small-star: connect every neighbor <= u (and u) to the minimum.
-    Fixpoint when the edge multiset stops changing; the surviving
-    (node -> root) edges ARE the component mapping. Nodes whose only
-    edges are self-loops are labeled as singletons (component = node),
-    matching connected_components' output contract. With
-    ``return_stats``, also returns {"iterations": n, "converged": bool}
-    counting large+small star rounds.
-    """
-    # every endpoint, INCLUDING nodes that only appear in self-loops —
-    # the star iteration drops self-loops, so these get singleton
-    # labels re-attached at the end (connected_components keeps them
-    # via its symmetric edge set; same contract here)
-    all_nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct()
-    )
-    # canonical symmetric edge list (a, b), no self loops
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
-    e_count = e.count()
-
-    def star(cur: DataFrame, large: bool) -> DataFrame:
-        # m(u) = min(N(u) ∪ {u}) per center node u
-        nbr_min = cur.groupBy("a").agg(
-            F.least(F.min("b"), F.first("a")).alias("m")
-        )
-        j = cur.join(nbr_min, "a")
-        if large:
-            # large-star: {(v, m(u)) : v ∈ N(u), v > u}
-            new = j.filter(F.col("b") > F.col("a")).select(
-                F.col("b").alias("x"), F.col("m").alias("y")
-            )
-        else:
-            # small-star: {(v, m(u)) : v ∈ N(u), v < u} ∪ {(u, m(u))}
-            new = j.filter(F.col("b") < F.col("a")).select(
-                F.col("b").alias("x"), F.col("m").alias("y")
-            ).unionByName(
-                nbr_min.select(F.col("a").alias("x"), F.col("m").alias("y"))
-            )
-        new = new.filter(F.col("x") != F.col("y"))
-        return (
-            new.unionByName(
-                new.select(F.col("y").alias("x"), F.col("x").alias("y"))
-            )
-            .select(F.col("x").alias("a"), F.col("y").alias("b"))
-            .distinct()
-        )
-
-    converged = False
-    iterations = 0
-    for i in range(max_iterations):
-        iterations = i + 1
-        nxt = star(star(e, large=True), large=False)
-        if (i + 1) % checkpoint_every == 0:
-            nxt = nxt.localCheckpoint()
-        nxt = nxt.persist()
-        nxt_count = nxt.count()
-        unchanged = nxt_count == e_count and (
-            nxt.exceptAll(e).limit(1).count() == 0
-        )
-        e.unpersist()
-        e, e_count = nxt, nxt_count
-        if unchanged:
-            converged = True
-            break
-    # at the fixpoint the edge set is a union of stars rooted at each
-    # component's minimum node: label = min neighbor (root keeps
-    # itself); edge-less nodes (self-loop-only) become singletons
-    star_labels = e.groupBy(F.col("a").alias("node")).agg(
-        F.least(F.min("b"), F.first("a")).alias("component")
-    )
-    labels = (
-        all_nodes.join(star_labels, "node", "left")
-        .select(
-            "node", F.coalesce("component", F.col("node")).alias("component")
-        )
-    )
-    if return_stats:
-        return labels, {"iterations": iterations, "converged": converged}
-    return labels
-
-
-def cc_alias_canonical(
-    texts: DataFrame,
-    text_col: str = "text",
-    max_iterations: int = 10,
-    method: str = "auto",
-) -> DataFrame:
-    """Alias canonicalization THROUGH connected components (the north
-    rule's canonicalization stage): build a bipartite alias graph
-    text <-> norm-node (norm = lowercase, [-_.\\s] stripped), run
-    components, then pick the lexicographically smallest TEXT per
-    component as canonical. Identical output to the norm-groupBy for
-    single-hop aliases, and additionally collapses chained aliases
-    (text A shares norm X with B, B shares norm Y with C through a
-    second rule) transitively.
-
-    ``method``:
-    - "propagation": min-label propagation — one shuffle per round,
-      converges in O(component diameter) rounds. Right when alias
-      components are star/shallow (the common case: every variant maps
-      to the same norm node, diameter <= 2).
-    - "twophase": alternating large-star/small-star (Kiveris SoCC'14)
-      — heavier rounds, O(log² n) of them. Right when alias CHAINS can
-      be long at 100x scale (a 2L-hop chain needs ~L propagation
-      rounds but only ~log² rounds here; see test_components).
-    - "auto" (default): propagation within the ``max_iterations``
-      budget; if it has not converged (deep chain detected), restart
-      with the star method instead of silently returning partial
-      labels.
-
-    Returns (text, canonical).
-    """
-    t = texts.select(F.col(text_col).alias("text")).distinct()
-    norm = F.regexp_replace(F.lower(F.col("text")), r"[-_.\s]+", "")
-    edges = t.select(
-        F.col("text").alias("src"),
-        F.concat(F.lit(" norm:"), norm).alias("dst"),
-    )
-    if method == "twophase":
-        labels = connected_components_twophase(edges)
-    elif method == "auto":
-        labels, stats = connected_components(
-            edges, max_iterations=max_iterations, return_stats=True
-        )
-        if not stats["converged"]:
-            labels = connected_components_twophase(edges)
-    else:
-        labels = connected_components(edges, max_iterations=max_iterations)
-    text_labels = labels.join(t, labels["node"] == t["text"]).select(
-        "text", "component"
-    )
-    canon = text_labels.groupBy("component").agg(
-        F.min("text").alias("canonical")
-    )
-    return text_labels.join(canon, "component").select("text", "canonical")
-
-
-def canonicalize_aliases(
-    concepts: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Collapse alias variants of the same entity: two concept texts
-    alias each other when their normalized form (lowercase,
-    [-_.\\s] stripped) matches. Returns (text, canonical) — canonical =
-    min text per alias group. A groupBy on the normalized key is the
-    degenerate (single-hop) case of components, so no iteration is
-    needed for this alias rule; chained aliases go through
-    connected_components."""
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"[-_.\s]+", "")
-    return (
-        concepts.select(F.col(text_col).alias("text"))
-        .distinct()
-        .withColumn("_norm", norm)
-        .withColumn(
-            "canonical", F.min("text").over(Window.partitionBy("_norm"))
-        )
-        .drop("_norm")
-    )

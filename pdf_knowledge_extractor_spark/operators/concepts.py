@@ -322,35 +322,20 @@ def canonical_merge(
     concepts: DataFrame,
     min_frequency: int = 2,
     max_concepts: int | None = 100,
-    use_cc: bool = False,
 ) -> DataFrame:
     """Alias canonicalization (north-rule stage): collapse concept
     texts whose normalized form (lowercase, [-_.\\s] stripped) matches
     — e.g. DataLoader / Data_Loader / data_loader — onto the
     lexicographically smallest variant, merging frequency (sum),
     importance (frequency-weighted mean) and document_ids (union).
-    The single-hop alias rule is a groupBy; chained alias graphs go
-    through operators.components.connected_components.
+    Every alias component is a star around its normalized form, so
+    the collapse is one window over that key.
 
     Apply BEFORE the min-frequency / top-k cuts so alias variants pool
     their evidence.
     """
-    if use_cc:
-        # run the alias collapse through connected components (the
-        # generic canonicalization machinery; collapses chained
-        # aliases transitively). Per concept_type to mirror the
-        # groupBy semantics.
-        from pdf_knowledge_extractor_spark.operators.components import (
-            cc_alias_canonical,
-        )
-
-        mapping = cc_alias_canonical(concepts.select("text"))
-        with_canon = concepts.join(mapping, "text")
-    else:
-        w = Window.partitionBy(_canon_norm(F.col("text")), "concept_type")
-        with_canon = concepts.withColumn(
-            "canonical", F.min("text").over(w)
-        )
+    w = Window.partitionBy(_canon_norm(F.col("text")), "concept_type")
+    with_canon = concepts.withColumn("canonical", F.min("text").over(w))
     merged = (
         with_canon
         .groupBy(F.col("canonical").alias("text"), "concept_type")

@@ -68,15 +68,25 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
 
 
 def word_shingles(col, n: int = 3):
-    """Array of word n-gram shingles over normalized text."""
+    """Array of word n-gram shingles over normalized text.
+
+    The word array is bound to a lambda variable (a transform over a
+    one-element array) before the per-shingle transform reads it.
+    Referenced as an expression inside that transform, it would be
+    re-evaluated for every shingle (interpreted higher-order functions
+    have no common-subexpression elimination), making a document's cost
+    quadratic in its length."""
+
+    def shingles(words):
+        cnt = F.greatest(F.size(words) - (n - 1), F.lit(0))
+        idx = F.sequence(F.lit(1), F.greatest(cnt, F.lit(1)))
+        shingle = F.transform(
+            idx, lambda i: F.concat_ws(" ", F.slice(words, i, n))
+        )
+        return F.when(cnt > 0, shingle).otherwise(F.array())
+
     words = F.split(normalized_text(col), " ")
-    m = F.size(words)
-    cnt = F.greatest(m - (n - 1), F.lit(0))
-    idx = F.sequence(F.lit(1), F.greatest(cnt, F.lit(1)))
-    shingle = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(words, i, n))
-    )
-    return F.when(cnt > 0, shingle).otherwise(F.array())
+    return F.transform(F.array(words), shingles)[0]
 
 
 def shingle_posting(docs: DataFrame, id_col: str = "doc_id",

@@ -5,7 +5,10 @@ claude_integration.py:299-376, resume sets at extractor.py:72-101,
 analysis cache at semantic_analyzer.py:773-803) as idempotent,
 fingerprint-keyed stage tables — the Spark-native shape: each stage
 writes its output once per input fingerprint; a restart reads the
-completed stage back instead of recomputing; the lineage table records
+completed stage back instead of recomputing it, and builds the later
+stages from what it read (``run_pipeline_checkpointed`` walks the
+pipeline's stages with ``CheckpointManager.stage`` as the step, so a
+stored stage's build never runs); the lineage table records
 (stage, fingerprint, rows, wall time, per-partition row counts) and
 the metrics table accumulates counters.
 
@@ -15,7 +18,6 @@ directories stand in here (atomicity via staging-dir rename).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -160,17 +162,26 @@ def run_pipeline_checkpointed(
     text_col: str = "text",
     lang_col: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Checkpoint-resumable variant of plans.pipeline.run_pipeline:
-    every major relation is a restorable stage keyed by the source
-    fingerprint (which includes the sha256 content invariant). A
-    restart after any stage reuses all completed stages and produces
-    byte-identical triples."""
+    """Checkpoint-resumable variant of plans.pipeline.run_pipeline.
+
+    Walks the pipeline's stages (``pipeline.STAGES``: documents,
+    concepts, similarities, edges, triples) with
+    ``CheckpointManager.stage`` as the step, keyed by the source
+    fingerprint (which includes the sha256 content invariant). A stage
+    with a completed checkpoint is read back and not built, and every
+    later stage is built from what was read back, so a resume runs
+    only the work of the missing stages: on a complete checkpoint it
+    runs the fingerprint, the stage read-backs and the triples ``rows``
+    metric. A restart after any stage produces the same triples.
+
+    Returns the stored ``source`` and the five stages, plus
+    ``_checkpoint`` (the manager, for its lineage and metrics)."""
     import dataclasses
-    import datetime
 
     from pdf_knowledge_extractor_spark.plans.pipeline import (
+        STAGES,
         PipelineConfig,
-        run_pipeline,
+        _StageWalk,
     )
 
     cfg = cfg or PipelineConfig()
@@ -211,19 +222,19 @@ def run_pipeline_checkpointed(
         lambda: docs.withColumn("_sha256", F.sha2(F.col(text_col), 256)),
     )
 
-    res = run_pipeline(
-        spark, src.drop("_sha256"), cfg, id_col=id_col, text_col=text_col,
-        lang_col=lang_col,
-    )
+    def store(name, build):
+        return cp.stage(name, fp, build,
+                        partition_by=["pred"] if name == "triples" else None)
+
+    walk = _StageWalk(spark, src.drop("_sha256"), cfg, id_col, text_col,
+                      lang_col, store=store)
     out: dict[str, DataFrame] = {"source": src}
-    for name in ("documents", "concepts", "similarities", "edges"):
-        out[name] = cp.stage(name, fp, lambda n=name: res[n])
-    out["triples"] = cp.stage("triples", fp, lambda: res["triples"],
-                              partition_by=["pred"])
+    out.update((name, getattr(walk, name)) for name in STAGES)
     cp.record_metric("triples", "rows", out["triples"].count())
-    # banding-cap census into the metrics table: capped runs must be
-    # distinguishable from full-recall runs in the durable record
-    for k, v in (res.get("similarity_stats") or {}).items():
+    # banding-cap census into the metrics table when similarities were
+    # built: capped runs must be distinguishable from full-recall runs
+    # in the durable record
+    for k, v in (walk.sim_stats or {}).items():
         if isinstance(v, (int, float)):
             cp.record_metric("similarities", f"banding_{k}", v)
     out["_checkpoint"] = cp

@@ -55,7 +55,7 @@ def main() -> None:
     ap.add_argument("--cluster-k", type=int, default=None,
                     help="pin KMeans k (skips the silhouette search)")
     ap.add_argument("--coherence", default="exact",
-                    choices=["exact", "centroid", "pairs"],
+                    choices=["exact", "centroid"],
                     help="cluster coherence mode (centroid = O(nnz) "
                          "scale path)")
     ap.add_argument("--cpus", type=int, default=None,

@@ -120,3 +120,76 @@ def test_unpinned_created_at_stable_across_resume(spark, small_corpus,
     }
     assert len(created1) == 1
     assert created1 == created2
+
+
+def _jobs(spark, group, fn):
+    """Run ``fn`` under a job group; -> (its result, Spark jobs run)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_complete_resume_reads_stages_only(spark, small_corpus, tmp_path):
+    """A resume on a complete checkpoint builds nothing: its jobs are
+    the fingerprint, the read-backs of the stored stages and the
+    triples ``rows`` metric (11 at most; re-running the pipeline under
+    the stored stages cost 67 on 200 generated rows)."""
+    ckpt = str(tmp_path / "ckpt_complete")
+    cfg = PipelineConfig(similarity_strategy="exact",
+                         created_at="2026-01-01T00:00:00")
+
+    def run():
+        return run_pipeline_checkpointed(
+            spark, small_corpus, ckpt, cfg, id_col="doc_id",
+            text_col="content", lang_col="lang",
+        )
+
+    t1 = _triple_set(run()["triples"])
+    spark.catalog.clearCache()
+    res, jobs = _jobs(spark, "pke-test-complete-resume", run)
+    assert jobs <= 11, jobs
+    assert _triple_set(res["triples"]) == t1
+
+
+def test_partial_resume_reads_stored_concepts(spark, small_corpus, tmp_path,
+                                              monkeypatch):
+    """With similarities, edges and triples deleted, a resume builds
+    only those three from the stored documents and concepts: the
+    concept aggregation is patched to raise, and the resume still
+    gives the first run's triples."""
+    import os
+
+    from pdf_knowledge_extractor_spark.plans import pipeline
+
+    ckpt = str(tmp_path / "ckpt_partial")
+    cfg = PipelineConfig(similarity_strategy="exact",
+                         created_at="2026-01-01T00:00:00")
+
+    def run():
+        return run_pipeline_checkpointed(
+            spark, small_corpus, ckpt, cfg, id_col="doc_id",
+            text_col="content", lang_col="lang",
+        )
+
+    t1 = _triple_set(run()["triples"])
+    for d in os.listdir(ckpt):
+        if d.split("__")[0] in ("similarities", "edges", "triples"):
+            shutil.rmtree(os.path.join(ckpt, d))
+
+    def no_concepts(*_a, **_k):
+        raise AssertionError("the stored concepts stage was rebuilt")
+
+    monkeypatch.setattr(pipeline, "aggregate_concepts_canonical",
+                        no_concepts)
+    spark.catalog.clearCache()
+    res = run()
+    assert _triple_set(res["triples"]) == t1
+    stages = {
+        r["stage"] for r in res["_checkpoint"].lineage().collect()
+        if r["run_id"] == res["_checkpoint"].run_id
+    }
+    assert stages == {"similarities", "edges", "triples"}

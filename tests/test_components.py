@@ -1,9 +1,8 @@
-"""Connected components (iterative joins) + alias canonicalization."""
+"""Connected components (iterative joins)."""
 
 from __future__ import annotations
 
 from pdf_knowledge_extractor_spark.operators.components import (
-    canonicalize_aliases,
     connected_components,
 )
 
@@ -32,60 +31,26 @@ def test_connected_components_long_chain_converges(spark):
     assert comps == {"n000"}
 
 
-def test_canonicalize_aliases(spark):
-    df = spark.createDataFrame(
-        [("DataLoader",), ("data_loader",), ("Data-Loader",), ("Other",)],
-        "text string",
-    )
-    rows = {r["text"]: r["canonical"] for r in canonicalize_aliases(df).collect()}
-    assert rows["DataLoader"] == rows["data_loader"] == rows["Data-Loader"]
-    assert rows["Other"] == "Other"
+def _union_find(pairs):
+    """Plain-Python oracle: node -> min node id of its component."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
 
 
-def test_cc_alias_canonical_single_hop(spark):
-    from pdf_knowledge_extractor_spark.operators.components import (
-        cc_alias_canonical,
-    )
-
-    df = spark.createDataFrame(
-        [("dataloader",), ("data_loader",), ("data-loader",), ("other",)],
-        "text string",
-    )
-    m = {r["text"]: r["canonical"] for r in cc_alias_canonical(df).collect()}
-    # '_' < '-'? no: '-' (0x2d) < '_' (0x5f) -> canonical is 'data-loader'
-    assert m["dataloader"] == m["data_loader"] == m["data-loader"]
-    assert m["other"] == "other"
-
-
-def test_cc_canonical_merge_equivalent_on_disjoint_groups(spark, small_corpus):
-    from pdf_knowledge_extractor_spark.operators.concepts import (
-        aggregate_concepts,
-        canonical_merge,
-    )
-    from pdf_knowledge_extractor_spark.operators.mentions import (
-        keyword_mentions,
-    )
-
-    m = keyword_mentions(small_corpus, "doc_id", "content")
-    raw = aggregate_concepts(m, min_frequency=1, max_concepts=None)
-    a = canonical_merge(raw, 1, None, use_cc=False)
-    b = canonical_merge(raw, 1, None, use_cc=True)
-    ka = {(r["text"], r["concept_type"]): r["frequency"] for r in a.collect()}
-    kb = {(r["text"], r["concept_type"]): r["frequency"] for r in b.collect()}
-    # single mention type -> per-type and pooled grouping coincide
-    assert ka == kb
-
-
-def test_twophase_matches_label_propagation(spark):
-    """Large-star/small-star (Kiveris SoCC'14) must produce the same
-    partition AND the same min-id labels as plain min-label
-    propagation — checked on a long chain (the shape that defeats
-    O(diameter) propagation), a star, a cycle, and a random graph."""
+def test_connected_components_matches_union_find(spark):
+    """Min-id labels equal a union-find oracle's on a chain, a star, a
+    cycle and a random graph."""
     import random
-
-    from pdf_knowledge_extractor_spark.operators.components import (
-        connected_components_twophase,
-    )
 
     rng = random.Random(7)
     cases = {
@@ -100,98 +65,39 @@ def test_twophase_matches_label_propagation(spark):
     for name, pairs in cases.items():
         pairs = [(a, b) for a, b in pairs if a != b]
         edges = spark.createDataFrame(pairs, "src string, dst string")
-        base = {
+        got = {
             r["node"]: r["component"]
             for r in connected_components(edges, max_iterations=30).collect()
         }
-        two = {
-            r["node"]: r["component"]
-            for r in connected_components_twophase(edges).collect()
-        }
-        assert two == base, f"{name}: {two} != {base}"
+        assert got == _union_find(pairs), name
 
 
-def test_twophase_selfloop_singletons_match_propagation(spark):
-    """Nodes whose only edges are self-loops must get singleton labels
-    from BOTH variants (the twophase star iteration drops self-loops,
-    so they are re-attached from the endpoint set)."""
-    from pdf_knowledge_extractor_spark.operators.components import (
-        connected_components_twophase,
-    )
-
+def test_connected_components_selfloop_singletons(spark):
+    """A node whose only edge is a self-loop is its own component."""
     edges = spark.createDataFrame(
         [("a", "b"), ("s", "s"), ("t", "t")], "src string, dst string"
     )
-    base = {
+    got = {
         r["node"]: r["component"]
         for r in connected_components(edges).collect()
     }
-    two = {
-        r["node"]: r["component"]
-        for r in connected_components_twophase(edges).collect()
-    }
-    assert base == {"a": "a", "b": "a", "s": "s", "t": "t"}
-    assert two == base
+    assert got == {"a": "a", "b": "a", "s": "s", "t": "t"}
 
 
-def test_twophase_beats_propagation_on_long_chains(spark):
-    """The round-count argument for the star method: a 50-link chain
-    needs ~50 propagation rounds but <= 7 large/small-star rounds
-    (including the final no-change confirmation round) — the geometric
-    path contraction that makes twophase the 100x-scale variant for
-    chained aliases."""
-    from pdf_knowledge_extractor_spark.operators.components import (
-        connected_components_twophase,
-    )
-
+def test_connected_components_reports_convergence(spark):
+    """Propagation needs about one round per chain link: a 50-link
+    chain converges within a budget of 60 rounds and reports that it
+    did not within 10."""
     n = 50
     edges = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n)],
         "src string, dst string",
     )
-    prop, pstats = connected_components(
+    full, stats = connected_components(
         edges, max_iterations=60, return_stats=True
     )
-    two, tstats = connected_components_twophase(edges, return_stats=True)
-    assert pstats["converged"] and tstats["converged"]
-    assert {r["component"] for r in prop.collect()} == {"n000"}
-    assert {r["component"] for r in two.collect()} == {"n000"}
-    assert tstats["iterations"] <= 7 < pstats["iterations"], (
-        pstats, tstats,
-    )
-
-
-def test_cc_alias_canonical_auto_escalates_when_budget_too_small(spark):
-    """method='auto' must return COMPLETE canonicalization even when
-    the propagation round budget is insufficient — it escalates to the
-    star method instead of silently returning partial labels. (With
-    the single separator-stripping rule every alias component is a
-    star around its norm node, so depth comes from the budget, not the
-    graph; the long-chain round-count advantage is covered by
-    test_twophase_beats_propagation_on_long_chains.)"""
-    from pdf_knowledge_extractor_spark.operators.components import (
-        cc_alias_canonical,
-    )
-
-    texts = []
-    for i in range(20):
-        texts.append(f"seg{i:02d}-seg{i + 1:02d}")
-        texts.append(f"seg{i:02d}_seg{i + 1:02d}")
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    full = {
-        r["text"]: r["canonical"]
-        for r in cc_alias_canonical(df, max_iterations=40).collect()
-    }
-    # budget 1 cannot converge (a star needs >= 2 rounds incl. the
-    # no-change confirmation) -> auto restarts with twophase
-    auto = {
-        r["text"]: r["canonical"]
-        for r in cc_alias_canonical(df, max_iterations=1).collect()
-    }
-    two = {
-        r["text"]: r["canonical"]
-        for r in cc_alias_canonical(df, method="twophase").collect()
-    }
-    assert auto == full == two
-    # pairwise aliases collapse: '-' (0x2d) < '_' (0x5f)
-    assert full["seg00_seg01"] == "seg00-seg01"
+    assert stats["converged"] and stats["iterations"] > 10
+    assert {r["component"] for r in full.collect()} == {"n000"}
+    _, short = connected_components(edges, max_iterations=10,
+                                    return_stats=True)
+    assert short == {"iterations": 10, "converged": False}

@@ -273,3 +273,41 @@ def test_simhash_rejects_unblockable_hamming(spark):
     docs = _hot_bucket_docs(spark)
     with pytest.raises(ValueError, match="max_hamming"):
         simhash_near_dup_pairs(docs, max_hamming=64)
+
+
+def test_word_shingles_equal_inline_word_expression(spark):
+    """word_shingles binds the word array once per row; its shingles
+    equal the expression that re-split the text for every shingle, on a
+    1,500-word document, a 2-word one (under n) and an empty one."""
+    from pdf_knowledge_extractor_spark.operators.dedup import (
+        normalized_text,
+        word_shingles,
+    )
+
+    def inline(col, n=3):
+        words = F.split(normalized_text(col), " ")
+        cnt = F.greatest(F.size(words) - (n - 1), F.lit(0))
+        idx = F.sequence(F.lit(1), F.greatest(cnt, F.lit(1)))
+        shingle = F.transform(
+            idx, lambda i: F.concat_ws(" ", F.slice(words, i, n))
+        )
+        return F.when(cnt > 0, shingle).otherwise(F.array())
+
+    long_text = " ".join(
+        f"Word{i % 37}, x_{i % 11}." for i in range(750)
+    )
+    docs = spark.createDataFrame(
+        [(1, long_text), (2, "two words"), (3, "")],
+        "doc_id long, text string",
+    )
+    got = {
+        r["doc_id"]: (r["new"], r["old"])
+        for r in docs.select(
+            "doc_id",
+            word_shingles(F.col("text")).alias("new"),
+            inline(F.col("text")).alias("old"),
+        ).collect()
+    }
+    assert len(got[1][1]) >= 1_200
+    for doc_id, (new, old) in got.items():
+        assert new == old, doc_id

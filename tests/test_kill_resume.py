@@ -1,10 +1,15 @@
 """Hard-kill resume (VERDICT r3 item 6, SURVEY §5 test #4): SIGKILL
 the checkpointed pipeline's whole process group mid-run (a real crash
 — no atexit, no cooperative shutdown), restart it, and require
-byte-identical triples vs a clean uninterrupted run, with the
-pre-kill stages REUSED (not recomputed). Proves the staging-dir
-rename protocol: a killed half-written `.tmp-<run_id>` directory can
-never be mistaken for a completed stage."""
+byte-identical triples vs a clean uninterrupted run. Proves the
+staging-dir rename protocol: a killed half-written `.tmp-<run_id>`
+directory can never be mistaken for a completed stage.
+
+The mtime check proves only that the resume did not rewrite the
+stages completed before the kill (`source`, `concepts`): their
+directories keep their modification time. It cannot see whether
+their builds ran again; test_checkpoint_resume's
+test_partial_resume_reads_stored_concepts shows they do not."""
 
 from __future__ import annotations
 

@@ -173,3 +173,29 @@ def test_snapshot_stamp_duplicate_sensitive(spark):
     assert sdup_a != sdup_b
     # order independence preserved
     assert snapshot_created_at(frame(list(reversed(base)))) == s0
+
+
+def test_pipeline_jobs_carry_stage_labels(spark, small_corpus):
+    """Every Spark job ``run_pipeline`` runs (shipped config) is
+    labelled ``pke: <stage>`` for one of ``STAGES``, and the stages
+    that run jobs in memory (documents, concepts, similarities and the
+    snapshot stamp in triples) all appear."""
+    from pdf_knowledge_extractor_spark.plans.pipeline import STAGES
+
+    sc = spark.sparkContext
+    group = "pke-test-stage-labels"
+    sc.setJobGroup(group, group)
+    try:
+        run_pipeline(spark, small_corpus, PipelineConfig(),
+                     id_col="doc_id", text_col="content", lang_col="lang")
+    finally:
+        sc.setJobGroup("", "")
+    store = sc._jsc.sc().statusStore()
+    labels = []
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        desc = store.job(job_id).description()
+        labels.append(desc.get() if desc.isDefined() else None)
+    assert labels
+    assert set(labels) <= {f"pke: {s}" for s in STAGES}, labels
+    assert {"pke: documents", "pke: concepts", "pke: similarities",
+            "pke: triples"} <= set(labels)
