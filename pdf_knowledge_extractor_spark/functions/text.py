@@ -29,11 +29,6 @@ def clean_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
-def strip_control_chars(col: Column) -> Column:
-    """Drop C0/C1 control characters except \\t \\n \\r."""
-    return F.regexp_replace(col, r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f-\x9f]", "")
-
-
 def word_count(col: Column) -> Column:
     """len(text.split()) — whitespace-delimited word count."""
     return F.size(F.split(F.trim(col), r"\s+")) - F.when(

@@ -27,6 +27,7 @@ and a resume reads a stored stage back instead of building it.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from functools import cached_property
 
@@ -331,6 +332,17 @@ _CLUSTER_DIMS = 1 << 14
 STAGES = ("documents", "concepts", "similarities", "edges", "triples")
 
 
+@contextmanager
+def label_jobs(spark: SparkSession, name: str):
+    """Label the Spark jobs run inside the block ``pke: <name>``."""
+    sc = spark.sparkContext
+    sc.setJobDescription(f"pke: {name}")
+    try:
+        yield
+    finally:
+        sc.setJobDescription(None)
+
+
 def run_pipeline(
     spark: SparkSession,
     docs: DataFrame,
@@ -364,15 +376,18 @@ def run_pipeline(
 class _StageWalk:
     """``run_pipeline``'s DAG as its ``STAGES``, built in order.
 
-    Every stage goes through one step, ``_stage(name, build)``: it
-    labels the stage's Spark jobs ``pke: <name>`` and returns
-    ``build()``, or, when ``store`` is given, ``store(name, build)`` —
-    ``CheckpointManager.stage``, which reads a stored stage back
-    instead of calling ``build``. Every later stage consumes what the
-    step returned. The intermediates that only builds read (mentions,
-    tf-idf with the signature head census, the corpus count, the
-    cluster assignments) are cached properties: computed once, and only
-    when a stage that is built needs them.
+    Every stage goes through one step, ``_stage(name, build, write)``:
+    it labels the stage's Spark jobs ``pke: <name>`` and returns
+    ``build()``, or, when ``store`` is given, ``store(name, thunk,
+    write)`` — ``CheckpointManager.stage``, which reads a stored stage
+    back instead of calling the thunk. The thunk returns the build and
+    the stage's counters (``_metrics``); ``write`` is the stage's file
+    layout (``triples.write_triples`` for the triples, plain parquet
+    for the rest). Every later stage consumes what the step returned.
+    The intermediates that only builds read (mentions, tf-idf with the
+    signature head census, the corpus count, the cluster assignments)
+    are cached properties: computed once, and only when a stage that is
+    built needs them.
 
     In memory (no ``store``) the documents are cached and counted (the
     count fills the cache and is tf-idf's N), tf-idf is cached and
@@ -395,15 +410,23 @@ class _StageWalk:
         self.concepts = self._stage("concepts", self._concepts)
         self.similarities = self._stage("similarities", self._similarities)
         self.edges = self._stage("edges", self._edges)
-        self.triples = self._stage("triples", self._triples)
+        self.triples = self._stage("triples", self._triples,
+                                   T3.write_triples)
 
-    def _stage(self, name: str, build) -> DataFrame:
-        sc = self.spark.sparkContext
-        sc.setJobDescription(f"pke: {name}")
-        try:
-            return build() if self.store is None else self.store(name, build)
-        finally:
-            sc.setJobDescription(None)
+    def _stage(self, name: str, build, write=None) -> DataFrame:
+        with label_jobs(self.spark, name):
+            if self.store is None:
+                return build()
+            return self.store(name, lambda: (build(), self._metrics(name)),
+                              write)
+
+    def _metrics(self, name: str) -> dict:
+        """A built stage's counters, for its checkpoint record: the
+        similarities stage's numeric banding census, so a capped run is
+        told from a full-recall run in the durable record."""
+        stats = self.sim_stats if name == "similarities" else None
+        return {f"banding_{k}": v for k, v in (stats or {}).items()
+                if isinstance(v, (int, float))}
 
     # -- builds, one per stage ----------------------------------------
     def _documents(self) -> DataFrame:

@@ -57,7 +57,7 @@ def edge_triples(edges: DataFrame) -> DataFrame:
     )
 
 
-def snapshot_created_at(docs: DataFrame, id_col: str = "doc_id") -> str:
+def snapshot_created_at(docs: DataFrame) -> str:
     """Deterministic dct:created default (VERDICT r4 item 7): the
     reference stamps export wall time (data_analysis.py:1136), which
     makes two builds of IDENTICAL input differ byte-wise unless the
@@ -75,31 +75,16 @@ def snapshot_created_at(docs: DataFrame, id_col: str = "doc_id") -> str:
     removing an EVEN number of duplicate docs left the stamp unchanged
     (ADVICE r5 #3). count catches cardinality changes, and the sum
     catches equal-cardinality multiplicity swaps (one dup of A + one
-    of B -> two dups of A) that both xor and count miss.
-
-    Falls back to hashing ``id_col`` only when the frame carries no
-    ``content_sha256`` — with a loud warning, since an id-derived
-    stamp is content-insensitive.
+    of B -> two dups of A) that both xor and count miss. ``docs``
+    carries the per-doc ``content_sha256`` (the enriched documents).
 
     Callers wanting real export-time provenance pass an explicit ISO
     string (PipelineConfig.created_at); the rendered date is a
     fingerprint, not a wall-clock claim, and provenance-grade exports
     should pin."""
     import datetime as _dt
-    import logging as _logging
 
-    if "content_sha256" in docs.columns:
-        col = F.col("content_sha256")
-    else:
-        _logging.getLogger(__name__).warning(
-            "snapshot_created_at: frame has no content_sha256 — "
-            "falling back to a %s-derived stamp, which is INSENSITIVE "
-            "to content changes; pass created_at explicitly or keep "
-            "the fingerprint column for a content-derived stamp",
-            id_col,
-        )
-        col = F.col(id_col).cast("string")
-    h64 = F.xxhash64(col)
+    h64 = F.xxhash64(F.col("content_sha256"))
     row = docs.agg(
         F.bit_xor(h64).alias("x"),
         F.count(h64).alias("n"),
@@ -135,7 +120,7 @@ def document_property_triples(enriched_docs: DataFrame,
     byte-identical by default. dc:title = the document id, as in
     _create_document_rdf (data_analysis.py:1118-1119)."""
     if created_at is None:
-        created_at = snapshot_created_at(enriched_docs, id_col)
+        created_at = snapshot_created_at(enriched_docs)
     # single scan: build an array of (pred, obj, weight) structs and
     # explode — one stage instead of seven unioned scans
     d = enriched_docs

@@ -48,5 +48,11 @@ def test_run_kg_checkpointed(spark, tmp_path, monkeypatch, capsys):
 
     payload = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert payload["triples"] > 0
-    # the created_at marker persisted with the checkpoint (round-3 fix)
-    assert any(f.startswith("_created_at__") for f in os.listdir(ck))
+    # every stage directory holds its record
+    from pdf_knowledge_extractor_spark.plans.pipeline import STAGES
+    from pdf_knowledge_extractor_spark.sources.checkpoint import RECORD
+
+    stage_dirs = [d for d in os.listdir(ck) if "__" in d]
+    assert {d.split("__")[0] for d in stage_dirs} == {"source", *STAGES}
+    for d in stage_dirs:
+        assert os.path.exists(os.path.join(ck, d, RECORD)), d
