@@ -195,7 +195,9 @@ def aggregate_concepts_canonical(
        exchange), then the alias-canonical window and the merged
        (frequency, importance) ranking that picks the winners. The
        heavy mention stream crosses ONE exchange carrying
-       (text, type, count, sum) — no doc ids, no object aggs.
+       (text, type, count, sum) — no doc ids, no object aggs. With
+       ``materialize`` and a cap, the winners are checkpointed once
+       for pass 2's three readers.
     2. LIST pass — ``document_ids`` are collected ONLY for the
        winners' alias variants: a broadcast semi-join filters the
        mention stream to those (~max_concepts · alias-fanout) texts,
@@ -246,6 +248,10 @@ def aggregate_concepts_canonical(
     # the winners and their variants are small only under a cap; an
     # unbounded relation is never broadcast
     small = F.broadcast if max_concepts else (lambda df: df)
+    if materialize and max_concepts:
+        # <= max_concepts rows. Not createDataFrame(collect()): a
+        # local list re-enters through a Python RDD scan
+        winners = winners.localCheckpoint(eager=True)
 
     # ---- pass 2: capped lists for the winners' variants only --------
     variants = with_canon.join(
@@ -298,21 +304,14 @@ def aggregate_concepts_canonical(
         .withColumn("n_documents", F.size("document_ids"))
     )
     if materialize:
-        # eager mode (the pipeline's): materialize the
-        # (<= max_concepts)-row result via an eager localCheckpoint
-        # and RELEASE the variant-stats cache immediately. The
-        # checkpoint does two jobs at once: with_canon (millions of
-        # rows at scale) stops pressuring executor storage for the
-        # rest of the session (the shared-session sim rows regressed
-        # ~20% before this release), and the result's LINEAGE is
-        # truncated — this plan embeds the full mention×corpus
-        # subtree twice (stats pass + list pass), and every
-        # downstream graph/triple construction re-ANALYZED it on the
-        # driver (measured ~12s of driver-side plan time per
-        # pipeline run before truncation; guide §3.3: materialise an
-        # intermediate to cut planning cost). The checkpointed
-        # relation is <= max_concepts rows, so the storage is
-        # negligible and needs no release registry.
+        # eager mode (the pipeline's): checkpoint the
+        # (<= max_concepts)-row result and release the variant-stats
+        # cache at once. with_canon (millions of rows at scale) then
+        # stops pressuring executor storage (the shared-session sim
+        # rows regressed ~20% before the release), and the truncated
+        # lineage keeps every downstream consumer from re-analyzing
+        # this plan, which holds the mention x corpus subtree twice
+        # (~12 s of driver plan time per run before; guide §3.3).
         out = out.localCheckpoint(eager=True)
         with_canon.unpersist()
     return out

@@ -11,8 +11,12 @@ re-expresses them Spark-first:
   expressions (importance 0.4 + 0.1 * n_words, mirroring the
   reference's 0.4 + 0.1*len rule at semantic_analyzer.py:699).
 - code entity mentions (the graft's per-``lang`` detectors: imports,
-  definitions, CamelCase symbols): Arrow-batched pandas UDF with
-  vectorized ``Series.str.findall`` — never row-at-a-time Python.
+  definitions, CamelCase symbols): ``regexp_extract_all`` column
+  expressions on the JVM, the lang's pattern picked per row by a CASE.
+  The patterns keep Python ``re`` semantics (the golden reference's);
+  ``_JAVA_CLASSES`` spells out the classes where java.util.regex
+  differs.
+  No Python worker runs.
 
 Entity importance mirrors the reference's per-type table
 (semantic_analyzer.py:636-645: PERSON .8, ORG .7, GPE .6, MONEY .5,
@@ -21,10 +25,10 @@ DATE .4, default .3) re-mapped to code entity types.
 
 from __future__ import annotations
 
-import pandas as pd
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pdf_knowledge_extractor_spark.functions.text import (
     keyword_tokens_nostop,
@@ -35,18 +39,7 @@ ENTITY_IMPORTANCE = {
     "module": 0.8,      # imported module / package
     "definition": 0.7,  # def/class/func/type definition
     "symbol": 0.6,      # CamelCase / dotted symbol reference
-    "reference": 0.5,   # cross-repo reference
 }
-
-MENTION_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("text", T.StringType()),
-            T.StructField("concept_type", T.StringType()),
-            T.StructField("importance", T.DoubleType()),
-        ]
-    )
-)
 
 _IMPORT_PATTERNS = {
     # lang -> regex whose group 1 is the imported module
@@ -59,48 +52,49 @@ _DEF_PATTERNS = {
     "python": r"(?:^|\n)\s*(?:def|class)\s+([A-Za-z_]\w*)",
     "go": r"(?:^|\n)\s*(?:func|type)\s+(?:\(\s*\w+\s+\*?\w+\s*\)\s*)?([A-Za-z_]\w*)",
     "java": r"(?:class|interface|enum)\s+([A-Za-z_]\w*)",
+    # two groups; a match fills exactly one
     "js": r"(?:function|class)\s+([A-Za-z_]\w*)|const\s+([A-Za-z_]\w*)\s*=",
 }
 _SYMBOL_PATTERN = r"\b([A-Z][a-z0-9]+(?:[A-Z][a-z0-9]+)+)\b"  # CamelCase
 
+# The patterns above are written, and pinned by tests, in Python ``re``
+# semantics, where \w is str.isalnum() or "_" and \s is str.isspace().
+# java.util.regex reads \w, \s and \b as ASCII, so each is spelled out:
+# \p{L}\p{N} is Python's alnum set (equal up to the two runtimes'
+# Unicode versions), and Python's whitespace is Unicode White_Space
+# plus the \x1c-\x1f separators.
+_W = r"[\p{L}\p{N}_]"
+_JAVA_CLASSES = {r"\w": _W, r"\s": r"[\p{IsWhite_Space}\x1c-\x1f]",
+                 r"\b": f"(?:(?<={_W})(?!{_W})|(?<!{_W})(?={_W}))"}
 
-@F.pandas_udf(MENTION_SCHEMA)
-def _code_entities(content: pd.Series, lang: pd.Series) -> pd.Series:
-    """Vectorized per-lang code entity detection (imports, defs,
-    CamelCase symbols)."""
-    out = []
-    # vectorize by grouping rows per language value within the batch
-    frame = pd.DataFrame({"content": content.fillna(""), "lang": lang.fillna("")})
-    results = [None] * len(frame)
-    for lg, grp in frame.groupby("lang", sort=False):
-        imp_pat = _IMPORT_PATTERNS.get(lg)
-        def_pat = _DEF_PATTERNS.get(lg)
-        imports = (
-            grp["content"].str.findall(imp_pat)
-            if imp_pat
-            else pd.Series([[]] * len(grp), index=grp.index)
-        )
-        defs = (
-            grp["content"].str.findall(def_pat)
-            if def_pat
-            else pd.Series([[]] * len(grp), index=grp.index)
-        )
-        symbols = grp["content"].str.findall(_SYMBOL_PATTERN)
-        for idx in grp.index:
-            ments = []
-            for m in imports.at[idx]:
-                name = m if isinstance(m, str) else next((g for g in m if g), "")
-                if name:
-                    ments.append((name, "module", ENTITY_IMPORTANCE["module"]))
-            for m in defs.at[idx]:
-                name = m if isinstance(m, str) else next((g for g in m if g), "")
-                if name:
-                    ments.append((name, "definition", ENTITY_IMPORTANCE["definition"]))
-            for s in symbols.at[idx]:
-                ments.append((s, "symbol", ENTITY_IMPORTANCE["symbol"]))
-            results[frame.index.get_loc(idx)] = ments
-    out = pd.Series(results)
-    return out
+
+def _names(content: F.Column, pattern: str) -> F.Column:
+    """Every match's name (its non-empty group), in match order."""
+    java = pattern
+    for py, cls in _JAVA_CLASSES.items():
+        java = java.replace(py, cls)
+    groups = [F.regexp_extract_all(content, F.lit(java), F.lit(g))
+              for g in range(1, re.compile(pattern).groups + 1)]
+    # an unmatched group extracts as "": keep the group that matched
+    return groups[0] if len(groups) == 1 else F.zip_with(
+        *groups, lambda a, b: F.when(a == "", b).otherwise(a))
+
+
+def _per_lang(content: F.Column, lang: F.Column, patterns: dict) -> F.Column:
+    """Names by the row's lang pattern; none for another or a null lang."""
+    out = None
+    for lg, pattern in patterns.items():
+        when = F.when if out is None else out.when
+        out = when(lang == lg, _names(content, pattern))
+    return out.otherwise(F.array().cast("array<string>"))
+
+
+def _tagged(names: F.Column, concept_type: str) -> F.Column:
+    return F.transform(names, lambda name: F.struct(
+        name.alias("text"),
+        F.lit(concept_type).alias("concept_type"),
+        F.lit(ENTITY_IMPORTANCE[concept_type]).alias("importance"),
+    ))
 
 
 def keyword_mentions(docs: DataFrame, id_col: str = "doc_id",
@@ -143,11 +137,16 @@ def phrase_mentions(docs: DataFrame, id_col: str = "doc_id",
 def entity_mentions(docs: DataFrame, id_col: str = "doc_id",
                     text_col: str = "content",
                     lang_col: str = "lang") -> DataFrame:
-    """Code entity mention stream via the Arrow-batched detector."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_code_entities(F.col(text_col), F.col(lang_col))).alias("m"),
-    ).select("doc_id", "m.text", "m.concept_type", "m.importance")
+    """Code entity mention stream: imports and definitions by the
+    row's lang, then CamelCase symbols on every row. A null content
+    gives no mentions."""
+    content, lang = F.col(text_col), F.col(lang_col)
+    mentions = F.concat(
+        _tagged(_per_lang(content, lang, _IMPORT_PATTERNS), "module"),
+        _tagged(_per_lang(content, lang, _DEF_PATTERNS), "definition"),
+        _tagged(_names(content, _SYMBOL_PATTERN), "symbol"),
+    )
+    return docs.select(F.col(id_col).alias("doc_id"), F.inline(mentions))
 
 
 def all_mentions(docs: DataFrame, id_col: str = "doc_id",

@@ -385,15 +385,16 @@ class _StageWalk:
     layout (``triples.write_triples`` for the triples, plain parquet
     for the rest). Every later stage consumes what the step returned.
     The intermediates that only builds read (mentions, tf-idf with the
-    signature head census, the corpus count, the cluster assignments)
+    signature head census, the corpus scalars, the cluster assignments)
     are cached properties: computed once, and only when a stage that is
     built needs them.
 
-    In memory (no ``store``) the documents are cached and counted (the
-    count fills the cache and is tf-idf's N), tf-idf is cached and
-    materialized in the job that folds the head census, the concepts
-    are materialized, and the similarities are cached lazily. A stored
-    stage is materialized by its write instead."""
+    In memory (no ``store``) the documents are cached, and the job that
+    fills the cache aggregates the corpus scalars (tf-idf's N and the
+    unpinned ``dct:created`` stamp), so the triples run no job. tf-idf
+    is cached and materialized in the job that folds the head census,
+    the concepts are materialized, and the similarities are cached
+    lazily. A stored stage is materialized by its write instead."""
 
     def __init__(self, spark, docs, cfg, id_col, text_col, lang_col,
                  store=None):
@@ -452,13 +453,13 @@ class _StageWalk:
         enriched = enrich_documents(spread_input(docs), self.id_col,
                                     self.text_col)
         if self.store is None:
-            # N = corpus size, counted over ENRICHED so this one job
-            # also fills the enrich cache. Counting raw `docs` re-ran
-            # the full source expression tree a second time (29 s of
-            # a 179 s 300k run). The scalar spares tf-idf a broadcast
+            # the corpus scalars, aggregated over ENRICHED so this one
+            # job also fills the enrich cache. Counting raw `docs`
+            # re-ran the full source expression tree a second time
+            # (29 s of a 179 s 300k run). N spares tf-idf a broadcast
             # subquery that would recompute tokenize+tf.
             enriched = enriched.persist()
-            self.n_docs = enriched.count()
+            self.corpus = enriched.agg(*T3.snapshot_aggregates()).first()
         return enriched
 
     def _concepts(self) -> DataFrame:
@@ -504,7 +505,7 @@ class _StageWalk:
                 signature_probe_max_frac=(
                     cfg.similarity_signature_probe_max_frac
                 ),
-                n_docs=self.n_docs,  # skips the stop-list's own count
+                n_docs=self.corpus["n"],  # skips the stop-list's own count
                 signature_heads=self.signature_heads,
             )
         else:
@@ -534,7 +535,9 @@ class _StageWalk:
             T3.edge_triples(self.edges),
             T3.document_property_triples(
                 self.documents, id_col=self.id_col,
-                created_at=self.cfg.created_at,
+                created_at=(T3.snapshot_stamp(self.corpus)
+                            if self.cfg.created_at is None
+                            else self.cfg.created_at),
             ),
             T3.concept_property_triples(self.concepts),
             T3.concept_definition_triples(
@@ -551,8 +554,9 @@ class _StageWalk:
 
     # -- intermediates, computed on first use --------------------------
     @cached_property
-    def n_docs(self) -> int:
-        return self.documents.count()
+    def corpus(self):
+        """One row: N (``n``) and the ``dct:created`` fingerprint."""
+        return self.documents.agg(*T3.snapshot_aggregates()).first()
 
     @cached_property
     def mentions(self) -> DataFrame:
@@ -578,7 +582,7 @@ class _StageWalk:
                                        self.text_col)
         tfidf = tfidf_longform(
             kw_mentions.select("doc_id", F.col("text")),
-            n_docs=self.n_docs,
+            n_docs=self.corpus["n"],
             normalize=True,
         ).persist()
         # materialize the cache (downstream broadcasts must hit it)

@@ -58,41 +58,40 @@ def edge_triples(edges: DataFrame) -> DataFrame:
 
 
 def snapshot_created_at(docs: DataFrame) -> str:
-    """Deterministic dct:created default (VERDICT r4 item 7): the
-    reference stamps export wall time (data_analysis.py:1136), which
-    makes two builds of IDENTICAL input differ byte-wise unless the
-    caller remembers to pin a timestamp. Default instead to a sentinel
-    derived from the input snapshot itself, rendered as an ISO-8601
-    UTC timestamp (epoch seconds in [0, 2^31)). Same input -> same
-    stamp, any content change -> (almost surely) a different stamp,
-    and build-twice determinism holds with all defaults.
+    """Deterministic dct:created default for ``docs`` (the enriched
+    documents, which carry ``content_sha256``). The reference stamps
+    export wall time (data_analysis.py:1136), so two builds of
+    identical input differ unless the caller pins a timestamp (VERDICT
+    r4 item 7). This stamp is an ISO-8601 UTC rendering (epoch seconds
+    in [0, 2^31)) of a fingerprint of the input instead: same input,
+    same stamp; changed input, (almost surely) another stamp. It is
+    not a wall-clock claim, and provenance-grade exports pin
+    ``PipelineConfig.created_at``."""
+    return snapshot_stamp(docs.agg(*snapshot_aggregates()).first())
 
-    The fingerprint mixes THREE order-independent aggregates of the
-    per-doc content hashes — bit_xor, count, and a wrapping 64-bit sum
-    (the modular sum of hashes; ANSI-overflow-safe because each hash
-    is pre-reduced mod 2^32) — because bit_xor alone is blind to
-    multiplicity: identical contents cancel pairwise, so adding or
-    removing an EVEN number of duplicate docs left the stamp unchanged
-    (ADVICE r5 #3). count catches cardinality changes, and the sum
-    catches equal-cardinality multiplicity swaps (one dup of A + one
-    of B -> two dups of A) that both xor and count miss. ``docs``
-    carries the per-doc ``content_sha256`` (the enriched documents).
 
-    Callers wanting real export-time provenance pass an explicit ISO
-    string (PipelineConfig.created_at); the rendered date is a
-    fingerprint, not a wall-clock claim, and provenance-grade exports
-    should pin."""
-    import datetime as _dt
-
+def snapshot_aggregates() -> list:
+    """The fingerprint: three order-independent aggregates of the
+    per-doc content hashes, ``x`` (bit_xor), ``n`` (count, which is
+    the row count: xxhash64 is never null) and ``s`` (a wrapping sum).
+    bit_xor alone cancels identical contents pairwise, so adding an
+    even number of duplicates went unseen (ADVICE r5 #3); the count
+    catches cardinality changes, the sum equal-cardinality
+    multiplicity swaps (a dup of A and one of B -> two of A)."""
     h64 = F.xxhash64(F.col("content_sha256"))
-    row = docs.agg(
+    return [
         F.bit_xor(h64).alias("x"),
         F.count(h64).alias("n"),
-        # wrapping sum: pre-reduce each hash to 32 bits so the 64-bit
-        # accumulator cannot overflow under ANSI until ~2^32 rows,
-        # then fold back to 32 bits
+        # pre-reduced to 32 bits, the 64-bit accumulator cannot
+        # overflow under ANSI until ~2^32 rows
         (F.sum(F.pmod(h64, F.lit(1 << 32))) % F.lit(1 << 32)).alias("s"),
-    ).first()
+    ]
+
+
+def snapshot_stamp(row) -> str:
+    """The ISO stamp of a row of :func:`snapshot_aggregates`."""
+    import datetime as _dt
+
     mixed = (
         (int(row["x"] or 0) & 0xFFFFFFFFFFFFFFFF)
         ^ (int(row["n"] or 0) * 0x9E3779B97F4A7C15)
@@ -115,10 +114,9 @@ def document_property_triples(enriched_docs: DataFrame,
     datetime.now().isoformat() at export time, data_analysis.py:1136).
     Pass a fixed ISO string for explicit provenance (the driver
     contract does); None derives a deterministic snapshot sentinel
-    (:func:`snapshot_created_at` — one tiny agg job, reading the
-    enrich cache in the pipeline), so two builds of the same input are
-    byte-identical by default. dc:title = the document id, as in
-    _create_document_rdf (data_analysis.py:1118-1119)."""
+    (:func:`snapshot_created_at`, one agg job), so two builds of the
+    same input are byte-identical by default. dc:title = the document
+    id, as in _create_document_rdf (data_analysis.py:1118-1119)."""
     if created_at is None:
         created_at = snapshot_created_at(enriched_docs)
     # single scan: build an array of (pred, obj, weight) structs and

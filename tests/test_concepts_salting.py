@@ -114,14 +114,44 @@ def test_context_sentences_collected(spark):
 def test_canonical_aggregate_equals_composition(spark, small_corpus):
     """aggregate_concepts_canonical is the fused form of
     canonical_merge(aggregate_concepts(m, 1, None), f, k): same rows,
-    importance equal to 9 places (summation order differs)."""
+    importance equal to 9 places (summation order differs), whether
+    the winners and the result are checkpointed (materialize) or
+    not."""
     mentions = all_mentions(
         small_corpus, id_col="doc_id", text_col="content", lang_col="lang"
     ).persist()
     raw = aggregate_concepts(mentions, min_frequency=1, max_concepts=None)
     for f, k, n_rows in ((2, 100, 100), (1, None, 8264), (2, 10, 10)):
-        fused = _norm(aggregate_concepts_canonical(mentions, f, k))
         composed = _norm(canonical_merge(raw, f, k))
-        assert len(fused) == n_rows, (f, k, len(fused))
-        assert fused == composed, (f, k)
+        for materialize in (False, True):
+            fused = _norm(aggregate_concepts_canonical(
+                mentions, f, k, materialize=materialize))
+            assert len(fused) == n_rows, (f, k, materialize, len(fused))
+            assert fused == composed, (f, k, materialize)
     mentions.unpersist()
+
+
+def test_pipeline_concepts_stage_jobs(spark, small_corpus):
+    """The concepts stage of ``run_pipeline`` (shipped config) computes
+    its winners once: checkpointed before the list pass, not re-ranked
+    by each of its three readers."""
+    from pdf_knowledge_extractor_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    sc = spark.sparkContext
+    group = "pke-test-concepts-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        run_pipeline(spark, small_corpus, PipelineConfig(),
+                     id_col="doc_id", text_col="content", lang_col="lang")
+    finally:
+        sc.setJobGroup("", "")
+    store = sc._jsc.sc().statusStore()
+    descs = [store.job(j).description()
+             for j in sc.statusTracker().getJobIdsForGroup(group)]
+    jobs = sum(d.isDefined() and d.get() == "pke: concepts" for d in descs)
+    # 21 here; 33 when each reader re-ran the ranking and the code
+    # entities were a pandas UDF
+    assert 0 < jobs <= 21, jobs

@@ -178,8 +178,9 @@ def test_snapshot_stamp_duplicate_sensitive(spark):
 def test_pipeline_jobs_carry_stage_labels(spark, small_corpus):
     """Every Spark job ``run_pipeline`` runs (shipped config) is
     labelled ``pke: <stage>`` for one of ``STAGES``, and the stages
-    that run jobs in memory (documents, concepts, similarities and the
-    snapshot stamp in triples) all appear."""
+    that run jobs in memory (documents, concepts, similarities) all
+    appear. The triples run none: the snapshot stamp is aggregated in
+    the documents stage's job."""
     from pdf_knowledge_extractor_spark.plans.pipeline import STAGES
 
     sc = spark.sparkContext
@@ -197,5 +198,6 @@ def test_pipeline_jobs_carry_stage_labels(spark, small_corpus):
         labels.append(desc.get() if desc.isDefined() else None)
     assert labels
     assert set(labels) <= {f"pke: {s}" for s in STAGES}, labels
-    assert {"pke: documents", "pke: concepts", "pke: similarities",
-            "pke: triples"} <= set(labels)
+    assert {"pke: documents", "pke: concepts",
+            "pke: similarities"} <= set(labels)
+    assert "pke: triples" not in labels

@@ -1,9 +1,10 @@
 """Physical-plan audits (north rule: no per-row Python in the hot
 path; filters reach the parquet scan).
 
-- No BatchEvalPython (row-at-a-time Python UDF) anywhere in the
-  pipeline plan; Python appears only as ArrowEvalPython / MapInPandas
-  (vectorized) for the code-entity detector and media stubs.
+- No Python at all in the default pipeline plans (no EvalPython, no
+  InPandas node: the code-entity detector is JVM regexes); elsewhere
+  Python appears only as ArrowEvalPython / MapInPandas (vectorized),
+  never BatchEvalPython.
 - Predicate pushdown: a filtered scan of the documents table shows
   PushedFilters at the FileScan.
 - Broadcast: the small-dimension join picks BroadcastHashJoin.
@@ -31,9 +32,8 @@ def test_no_row_python_in_pipeline(spark, small_corpus):
     for name in ("documents", "mentions", "concepts", "similarities",
                  "triples"):
         plan = _plan(res[name])
-        assert "BatchEvalPython" not in plan, (
-            f"row-at-a-time Python UDF in {name} plan"
-        )
+        for node in ("EvalPython", "InPandas"):
+            assert node not in plan, f"Python ({node}) in {name} plan"
 
 
 def test_no_row_python_lsh_and_clusters(spark, small_corpus):
