@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdf_knowledge_extractor_spark.operators.ann import _finalize
+
 DEFAULT_SALTS = 16
 MAX_DOC_IDS_PER_CONCEPT = 10_000  # bound list size; counts stay exact
 
@@ -197,7 +199,8 @@ def aggregate_concepts_canonical(
        heavy mention stream crosses ONE exchange carrying
        (text, type, count, sum) — no doc ids, no object aggs. With
        ``materialize`` and a cap, the winners are checkpointed once
-       for pass 2's three readers.
+       for pass 2's three readers (``ann._finalize``, like the
+       result: ``release_checkpointed_results`` frees both).
     2. LIST pass — ``document_ids`` are collected ONLY for the
        winners' alias variants: a broadcast semi-join filters the
        mention stream to those (~max_concepts · alias-fanout) texts,
@@ -251,7 +254,7 @@ def aggregate_concepts_canonical(
     if materialize and max_concepts:
         # <= max_concepts rows. Not createDataFrame(collect()): a
         # local list re-enters through a Python RDD scan
-        winners = winners.localCheckpoint(eager=True)
+        winners = _finalize(winners)
 
     # ---- pass 2: capped lists for the winners' variants only --------
     variants = with_canon.join(
@@ -312,8 +315,7 @@ def aggregate_concepts_canonical(
         # lineage keeps every downstream consumer from re-analyzing
         # this plan, which holds the mention x corpus subtree twice
         # (~12 s of driver plan time per run before; guide §3.3).
-        out = out.localCheckpoint(eager=True)
-        with_canon.unpersist()
+        out = _finalize(out, with_canon)
     return out
 
 

@@ -5,11 +5,10 @@ The reference extracts three mention streams per document
 keywords (:653-674), and POS-pattern phrases (:676-701). This engine
 re-expresses them Spark-first:
 
-- keyword mentions: pure column expressions (explode of the token
-  array; stopword removal by array_except against a literal array).
-- phrase mentions: consecutive-bigram composition, pure column
-  expressions (importance 0.4 + 0.1 * n_words, mirroring the
-  reference's 0.4 + 0.1*len rule at semantic_analyzer.py:699).
+- keyword and phrase mentions from one token array per document
+  (``keyword_tokens_nostop``): the phrases are its consecutive pairs
+  (importance 0.4 + 0.1 * n_words, the reference's 0.4 + 0.1*len rule
+  at semantic_analyzer.py:699); pure column expressions.
 - code entity mentions (the graft's per-``lang`` detectors: imports,
   definitions, CamelCase symbols): ``regexp_extract_all`` column
   expressions on the JVM, the lang's pattern picked per row by a CASE.
@@ -31,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_knowledge_extractor_spark.functions.text import (
+    PY_WORD,
     keyword_tokens_nostop,
 )
 
@@ -58,12 +58,10 @@ _DEF_PATTERNS = {
 _SYMBOL_PATTERN = r"\b([A-Z][a-z0-9]+(?:[A-Z][a-z0-9]+)+)\b"  # CamelCase
 
 # The patterns above are written, and pinned by tests, in Python ``re``
-# semantics, where \w is str.isalnum() or "_" and \s is str.isspace().
-# java.util.regex reads \w, \s and \b as ASCII, so each is spelled out:
-# \p{L}\p{N} is Python's alnum set (equal up to the two runtimes'
-# Unicode versions), and Python's whitespace is Unicode White_Space
-# plus the \x1c-\x1f separators.
-_W = r"[\p{L}\p{N}_]"
+# semantics; java.util.regex differs on \w, \s and \b, so each is
+# spelled out (Python's whitespace is Unicode White_Space plus the
+# \x1c-\x1f separators).
+_W = PY_WORD
 _JAVA_CLASSES = {r"\w": _W, r"\s": r"[\p{IsWhite_Space}\x1c-\x1f]",
                  r"\b": f"(?:(?<={_W})(?!{_W})|(?<!{_W})(?={_W}))"}
 
@@ -89,49 +87,33 @@ def _per_lang(content: F.Column, lang: F.Column, patterns: dict) -> F.Column:
     return out.otherwise(F.array().cast("array<string>"))
 
 
-def _tagged(names: F.Column, concept_type: str) -> F.Column:
+def _tagged(names: F.Column, concept_type: str,
+            importance: float) -> F.Column:
     return F.transform(names, lambda name: F.struct(
         name.alias("text"),
         F.lit(concept_type).alias("concept_type"),
-        F.lit(ENTITY_IMPORTANCE[concept_type]).alias("importance"),
+        F.lit(importance).alias("importance"),
+    ))
+
+
+def _entities(content: F.Column, lang: F.Column) -> F.Column:
+    return F.concat(*(
+        _tagged(names, kind, ENTITY_IMPORTANCE[kind]) for names, kind in (
+            (_per_lang(content, lang, _IMPORT_PATTERNS), "module"),
+            (_per_lang(content, lang, _DEF_PATTERNS), "definition"),
+            (_names(content, _SYMBOL_PATTERN), "symbol"),
+        )
     ))
 
 
 def keyword_mentions(docs: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
     """Per-doc keyword mention stream: (doc_id, text, concept_type,
-    importance). importance = 0.5 flat pre-TFIDF (re-scored by the
-    concept aggregation / tfidf stage). Context sentences are attached
-    after aggregation, per concept (concepts.with_concept_contexts)."""
-    return (
-        # NOT spread here: tokenization is light enough that a
-        # round-robin text shuffle costs more than it parallelizes
-        # (measured at sf0.1); heavy projections (shingling, enrich)
-        # spread at their own entry points instead
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(keyword_tokens_nostop(F.col(text_col))).alias("text"),
-        )
-        .withColumn("concept_type", F.lit("keyword"))
-        .withColumn("importance", F.lit(0.5))
-    )
-
-
-def phrase_mentions(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """Consecutive-token bigram phrases; importance = 0.4 + 0.1*2."""
+    importance), importance 0.5 flat pre-TFIDF (re-scored by the concept
+    aggregation / tfidf stage); contexts come after aggregation."""
     toks = keyword_tokens_nostop(F.col(text_col))
-    n = F.size(toks)
-    pairs = F.zip_with(
-        F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), F.explode(pairs).alias("text"))
-        .withColumn("concept_type", F.lit("phrase"))
-        .withColumn("importance", F.lit(0.4 + 0.1 * 2))
-    )
+    return docs.select(F.col(id_col).alias("doc_id"),
+                       F.inline(_tagged(toks, "keyword", 0.5)))
 
 
 def entity_mentions(docs: DataFrame, id_col: str = "doc_id",
@@ -140,22 +122,27 @@ def entity_mentions(docs: DataFrame, id_col: str = "doc_id",
     """Code entity mention stream: imports and definitions by the
     row's lang, then CamelCase symbols on every row. A null content
     gives no mentions."""
-    content, lang = F.col(text_col), F.col(lang_col)
-    mentions = F.concat(
-        _tagged(_per_lang(content, lang, _IMPORT_PATTERNS), "module"),
-        _tagged(_per_lang(content, lang, _DEF_PATTERNS), "definition"),
-        _tagged(_names(content, _SYMBOL_PATTERN), "symbol"),
-    )
-    return docs.select(F.col(id_col).alias("doc_id"), F.inline(mentions))
+    return docs.select(F.col(id_col).alias("doc_id"),
+                       F.inline(_entities(F.col(text_col), F.col(lang_col))))
 
 
 def all_mentions(docs: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text",
                  lang_col: str | None = None) -> DataFrame:
-    """Union of the mention streams (semantic_analyzer.py:399-406)."""
-    out = keyword_mentions(docs, id_col, text_col).unionByName(
-        phrase_mentions(docs, id_col, text_col)
-    )
+    """Each row's mention streams (semantic_analyzer.py:399-406) from
+    one token array: keywords, phrases (its consecutive pairs) and,
+    with ``lang_col``, code entities, through one ``inline``."""
+    # the tokens are projected below the Generate, so the regex runs
+    # once per row. NOT spread: tokenizing is light enough that a
+    # round-robin text shuffle costs more than it parallelizes (sf0.1)
+    toks = F.col("_toks")
+    n_pairs = F.greatest(F.size(toks) - 1, F.lit(0))
+    pairs = F.zip_with(F.slice(toks, 1, n_pairs), F.slice(toks, 2, n_pairs),
+                       lambda a, b: F.concat_ws(" ", a, b))
+    streams = [_tagged(toks, "keyword", 0.5),
+               _tagged(pairs, "phrase", 0.4 + 0.1 * 2)]
     if lang_col is not None and lang_col in docs.columns:
-        out = out.unionByName(entity_mentions(docs, id_col, text_col, lang_col))
-    return out
+        streams.append(_entities(F.col(text_col), F.col(lang_col)))
+    return docs.withColumn(
+        "_toks", keyword_tokens_nostop(F.col(text_col))
+    ).select(F.col(id_col).alias("doc_id"), F.inline(F.concat(*streams)))

@@ -39,15 +39,13 @@ from pdf_knowledge_extractor_spark.functions.text import (
     char_count,
     sha256,
 )
+from pdf_knowledge_extractor_spark.operators.ann import _finalize
 from pdf_knowledge_extractor_spark.operators.concepts import (
     aggregate_concepts_canonical,
     with_concept_contexts,
 )
 from pdf_knowledge_extractor_spark.operators.graph import build_graph
-from pdf_knowledge_extractor_spark.operators.mentions import (
-    all_mentions,
-    keyword_mentions,
-)
+from pdf_knowledge_extractor_spark.operators.mentions import all_mentions
 from pdf_knowledge_extractor_spark.operators.related import (
     entity_relationships,
 )
@@ -391,10 +389,12 @@ class _StageWalk:
 
     In memory (no ``store``) the documents are cached, and the job that
     fills the cache aggregates the corpus scalars (tf-idf's N and the
-    unpinned ``dct:created`` stamp), so the triples run no job. tf-idf
-    is cached and materialized in the job that folds the head census,
-    the concepts are materialized, and the similarities are cached
-    lazily. A stored stage is materialized by its write instead."""
+    unpinned ``dct:created`` stamp), so the triples run no job. The
+    built-in mention stream is cached for its three readers (the
+    concepts' two passes and tf-idf), tf-idf is cached and materialized
+    in the job that folds the head census, the concepts are
+    materialized, and the similarities are cached lazily. A stored
+    stage is materialized by its write instead."""
 
     def __init__(self, spark, docs, cfg, id_col, text_col, lang_col,
                  store=None):
@@ -464,10 +464,9 @@ class _StageWalk:
 
     def _concepts(self) -> DataFrame:
         cfg = self.cfg
-        # alias canonicalization before the cuts, in the fused form of
-        # canonical_merge(aggregate_concepts(mentions, 1, None)); the
-        # operator's materialize=True checkpoints the winners and
-        # releases its variant-stats cache right away
+        # alias canonicalization before the cuts, the fused form of
+        # canonical_merge(aggregate_concepts(mentions, 1, None));
+        # materialize=True checkpoints and releases as it goes
         concepts = aggregate_concepts_canonical(
             self.mentions,
             min_frequency=cfg.min_concept_frequency,
@@ -479,10 +478,10 @@ class _StageWalk:
             # eager checkpoint: tiny (<= max_concepts rows), and the
             # truncated lineage keeps every later consumer from
             # re-analyzing the context join's plan on the driver
-            concepts = with_concept_contexts(
+            concepts = _finalize(with_concept_contexts(
                 concepts, self.documents, id_col=self.id_col,
                 text_col=self.text_col,
-            ).localCheckpoint(eager=True)
+            ))
         return concepts
 
     def _similarities(self) -> DataFrame:
@@ -559,12 +558,18 @@ class _StageWalk:
         return self.documents.agg(*T3.snapshot_aggregates()).first()
 
     @cached_property
-    def mentions(self) -> DataFrame:
-        mentions = all_mentions(
+    def builtin_mentions(self) -> DataFrame:
+        """``all_mentions``, persisted: both concept passes and tf-idf
+        (its keyword rows) read it, so each document is tokenized once."""
+        return all_mentions(
             self.documents, id_col=self.id_col, text_col=self.text_col,
             lang_col=self.lang_col,
-        )
-        # named feature extractors (§2.9 hooks) add mention streams
+        ).persist()
+
+    @cached_property
+    def mentions(self) -> DataFrame:
+        mentions = self.builtin_mentions
+        # named feature extractors (§2.9 hooks) add concept-only streams
         extractor_hooks = self.cfg.extra.get("feature_extractors") or []
         if extractor_hooks:
             from pdf_knowledge_extractor_spark.hooks import detector_mentions
@@ -578,10 +583,10 @@ class _StageWalk:
 
     @cached_property
     def tfidf(self) -> DataFrame:
-        kw_mentions = keyword_mentions(self.documents, self.id_col,
-                                       self.text_col)
+        keywords = self.builtin_mentions.filter(
+            F.col("concept_type") == "keyword")
         tfidf = tfidf_longform(
-            kw_mentions.select("doc_id", F.col("text")),
+            keywords.select("doc_id", "text"),
             n_docs=self.corpus["n"],
             normalize=True,
         ).persist()

@@ -50,29 +50,27 @@ def keyword_tokens(text: str) -> list[str]:
     return [t for t in KEYWORD_RE.findall(text.lower()) if t not in STOP_WORDS]
 
 
-def mentions_for_doc(doc_id: str, text: str, lang: str | None):
-    """(text, concept_type, importance) mention stream for one doc."""
+def mentions_for_doc(doc_id: str, text: str | None, lang: str | None):
+    """(text, concept_type, importance) mention stream for one doc:
+    keywords, their consecutive pairs as phrases, imports and
+    definitions by the doc's lang, and CamelCase symbols on every doc
+    (a null lang included). A null text gives no mentions."""
+    if text is None:
+        return []
     out = []
     toks = keyword_tokens(text)
     out += [(t, "keyword", 0.5) for t in toks]
     out += [
         (f"{a} {b}", "phrase", 0.6) for a, b in zip(toks, toks[1:])
     ]
-    if lang:
-        ipat = IMPORT_RES.get(lang)
-        dpat = DEF_RES.get(lang)
-        if ipat:
-            for m in ipat.findall(text):
-                name = m if isinstance(m, str) else next((g for g in m if g), "")
-                if name:
-                    out.append((name, "module", ENTITY_IMPORTANCE["module"]))
-        if dpat:
-            for m in dpat.findall(text):
-                name = m if isinstance(m, str) else next((g for g in m if g), "")
-                if name:
-                    out.append((name, "definition", ENTITY_IMPORTANCE["definition"]))
-        for s in SYMBOL_RE.findall(text):
-            out.append((s, "symbol", ENTITY_IMPORTANCE["symbol"]))
+    for patterns, kind in ((IMPORT_RES, "module"), (DEF_RES, "definition")):
+        pattern = patterns.get(lang)
+        for m in pattern.findall(text) if pattern else []:
+            name = m if isinstance(m, str) else next((g for g in m if g), "")
+            if name:
+                out.append((name, kind, ENTITY_IMPORTANCE[kind]))
+    for s in SYMBOL_RE.findall(text):
+        out.append((s, "symbol", ENTITY_IMPORTANCE["symbol"]))
     return out
 
 

@@ -42,16 +42,17 @@ def test_hot_entity_present_and_exact(spark, small_corpus):
     concepts = aggregate_concepts(mentions, min_frequency=2, max_concepts=None)
     hot = concepts.filter(F.col("text") == "commonutil").collect()
     assert hot, "hot module mention must aggregate"
-    # ~30% of 200 docs import the hot module (mentioned via import +
-    # symbol ref); exact count must match a direct distinct-count
-    direct = (
-        mentions.filter(F.lower("text") == "commonutil")
-        .select("doc_id")
-        .distinct()
-        .count()
+    # ~30% of 200 docs mention the hot module (import, symbol ref,
+    # keyword); each type's exact count must match a direct
+    # distinct-count of that type
+    hot_mentions = mentions.filter(F.lower("text") == "commonutil")
+    direct = dict(
+        hot_mentions.groupBy("concept_type")
+        .agg(F.countDistinct("doc_id")).collect()
     )
-    assert hot[0]["n_documents"] == direct
-    assert 0.15 < direct / 200 < 0.45
+    assert {r["concept_type"]: r["n_documents"] for r in hot} == direct
+    n_docs = hot_mentions.select("doc_id").distinct().count()
+    assert 0.15 < n_docs / 200 < 0.45
 
 
 def test_canonical_merge_collapses_aliases(spark, small_corpus):
@@ -132,9 +133,10 @@ def test_canonical_aggregate_equals_composition(spark, small_corpus):
 
 
 def test_pipeline_concepts_stage_jobs(spark, small_corpus):
-    """The concepts stage of ``run_pipeline`` (shipped config) computes
-    its winners once: checkpointed before the list pass, not re-ranked
-    by each of its three readers."""
+    """The concepts stage of ``run_pipeline`` (shipped config) derives
+    its mentions once, cached for both passes, and computes its winners
+    once: checkpointed before the list pass, not re-ranked by each of
+    its three readers."""
     from pdf_knowledge_extractor_spark.plans.pipeline import (
         PipelineConfig,
         run_pipeline,
@@ -152,6 +154,41 @@ def test_pipeline_concepts_stage_jobs(spark, small_corpus):
     descs = [store.job(j).description()
              for j in sc.statusTracker().getJobIdsForGroup(group)]
     jobs = sum(d.isDefined() and d.get() == "pke: concepts" for d in descs)
-    # 21 here; 33 when each reader re-ran the ranking and the code
-    # entities were a pandas UDF
-    assert 0 < jobs <= 21, jobs
+    # 19 here; 21 when each concept pass derived the mention streams
+    # from the text again, 33 when each reader also re-ran the ranking
+    # and the code entities were a pandas UDF
+    assert 0 < jobs <= 19, jobs
+
+
+def test_pipeline_releases_its_checkpoints(spark, small_corpus):
+    """Dropping a run's results, ``clearCache()`` and
+    ``release_checkpointed_results()`` leave none of its storage: the
+    concepts stage's eager checkpoints (winners, result, contexts) are
+    registered like every other operator's."""
+    import gc
+
+    from pdf_knowledge_extractor_spark.operators.ann import (
+        release_checkpointed_results,
+    )
+    from pdf_knowledge_extractor_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    def persistent_rdds() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    def cleanup():
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        spark.catalog.clearCache()
+        return release_checkpointed_results()
+
+    cleanup()
+    before = persistent_rdds()
+    res = run_pipeline(spark, small_corpus, PipelineConfig(),
+                       id_col="doc_id", text_col="content", lang_col="lang")
+    res["triples"].count()
+    del res
+    assert cleanup() == 4  # the concepts stage's 3 and the similarities
+    assert not persistent_rdds() - before

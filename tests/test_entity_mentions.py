@@ -1,19 +1,17 @@
-"""The code-entity detector runs as JVM regexes and must give, per
-document, the same mentions as Python ``re.findall`` with the golden
-reference's patterns: Python's Unicode ``\\w``, ``\\s`` and ``\\b``
-included."""
+"""The mention stream (keywords, phrases and code entities, the
+entities as JVM regexes) must give, per document, the golden
+reference's ``mentions_for_doc``: Python ``re.findall`` with its
+patterns, Python's Unicode ``\\w``, ``\\s`` and ``\\b`` included."""
 
 from __future__ import annotations
 
 from collections import Counter
 
-from pdf_knowledge_extractor_spark.operators.mentions import entity_mentions
-from tests.golden_reference import (
-    DEF_RES,
-    ENTITY_IMPORTANCE,
-    IMPORT_RES,
-    SYMBOL_RE,
+from pdf_knowledge_extractor_spark.operators.mentions import (
+    all_mentions,
+    entity_mentions,
 )
+from tests.golden_reference import mentions_for_doc
 
 EDGE_ROWS = [
     ("null_lang", "import os\nclass FooBar:\n    pass  # SomeName", None),
@@ -37,35 +35,37 @@ EDGE_ROWS = [
              "public class MyTest implements FooBar {}\ninterface Café {}",
      "java"),
     ("other_lang", "import sys\nfn main() {}\nFooBar", "rust"),
+    ("no_tokens", "a b cd 42 the", None),
+    ("one_token", "to Spark, 7", "python"),
+    ("two_tokens", "Spark shuffle", "go"),
 ]
 
 
-def _expected(text, lang) -> Counter:
-    """The detector's contract in Python ``re``: imports and definitions
-    by the row's lang, CamelCase symbols on every row (null lang
-    included), nothing for a null content."""
-    if text is None:
-        return Counter()
-    out = []
-    for patterns, kind in ((IMPORT_RES, "module"), (DEF_RES, "definition")):
-        pattern = patterns.get(lang)
-        for m in pattern.findall(text) if pattern else []:
-            name = m if isinstance(m, str) else next(g for g in m if g)
-            out.append((name, kind, ENTITY_IMPORTANCE[kind]))
-    out += [(s, "symbol", ENTITY_IMPORTANCE["symbol"])
-            for s in SYMBOL_RE.findall(text)]
-    return Counter(out)
+def _counted(rows) -> Counter:
+    # the golden phrase importance is 0.6, the engine's 0.4 + 0.1 * 2
+    return Counter((r[0], r[1], round(r[2], 9)) for r in rows)
 
 
-def _detected(docs) -> dict:
-    got = {r["doc_id"]: Counter() for r in docs.select("doc_id").collect()}
-    for r in entity_mentions(docs).collect():
-        got[r["doc_id"]][(r["text"], r["concept_type"], r["importance"])] += 1
-    return got
+def _expected(rows) -> dict:
+    return {doc_id: _counted(mentions_for_doc(doc_id, text, lang))
+            for doc_id, text, lang in rows}
+
+
+def _detected(docs, mentions=all_mentions) -> dict:
+    got = {r["doc_id"]: [] for r in docs.select("doc_id").collect()}
+    for r in mentions(docs, text_col="content", lang_col="lang").collect():
+        got[r["doc_id"]].append((r["text"], r["concept_type"],
+                                 r["importance"]))
+    return {doc_id: _counted(rows) for doc_id, rows in got.items()}
+
+
+def _entities(counts: Counter) -> Counter:
+    return Counter({m: n for m, n in counts.items()
+                    if m[1] not in ("keyword", "phrase")})
 
 
 def test_entity_detector_equals_python_re(spark):
-    want = {doc_id: _expected(text, lang) for doc_id, text, lang in EDGE_ROWS}
+    want = _expected(EDGE_ROWS)
     # the fixture reaches the classes where java.util.regex differs
     assert want["non_ascii"][("café", "module", 0.8)] == 1
     assert want["non_ascii"][("naïve", "definition", 0.7)] == 1
@@ -73,19 +73,26 @@ def test_entity_detector_equals_python_re(spark):
     assert want["nbsp"][("separated", "module", 0.8)] == 1
     assert want["js"][("yZ", "definition", 0.7)] == 1
     assert want["go_receiver"][("Handle", "definition", 0.7)] == 1
-    # a null lang gives symbols only
-    assert want["null_lang"] == Counter({("FooBar", "symbol", 0.6): 1,
-                                         ("SomeName", "symbol", 0.6): 1})
+    # a null lang gives symbols only among the entities
+    assert _entities(want["null_lang"]) == Counter(
+        {("FooBar", "symbol", 0.6): 1, ("SomeName", "symbol", 0.6): 1})
+    # the phrase edge: 0, 1 and 2 keyword tokens give 0, 0 and 1 phrase
+    assert want["no_tokens"] == Counter()
+    assert want["one_token"] == Counter({("spark", "keyword", 0.5): 1})
+    assert want["two_tokens"] == Counter({
+        ("spark", "keyword", 0.5): 1, ("shuffle", "keyword", 0.5): 1,
+        ("spark shuffle", "phrase", 0.6): 1})
     docs = spark.createDataFrame(
         EDGE_ROWS, "doc_id string, content string, lang string"
     )
-    assert _detected(docs) == want
+    got = _detected(docs)
+    assert got == want
+    assert _detected(docs, entity_mentions) == {
+        doc_id: _entities(counts) for doc_id, counts in got.items()}
 
 
 def test_entity_detector_equals_python_re_on_corpus(spark, small_corpus):
     got = _detected(small_corpus)
     assert sum(map(len, got.values())) > 0
-    assert got == {
-        r["doc_id"]: _expected(r["content"], r["lang"])
-        for r in small_corpus.select("doc_id", "content", "lang").collect()
-    }
+    assert got == _expected(
+        small_corpus.select("doc_id", "content", "lang").collect())

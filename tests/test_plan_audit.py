@@ -8,6 +8,8 @@ path; filters reach the parquet scan).
 - Predicate pushdown: a filtered scan of the documents table shows
   PushedFilters at the FileScan.
 - Broadcast: the small-dimension join picks BroadcastHashJoin.
+- Tokenize once: the cached mention stream holds the pipeline's one
+  keyword regex, and tf-idf reads that cache.
 """
 
 from __future__ import annotations
@@ -300,3 +302,42 @@ def test_join_hint_gate_reverts_to_catalyst(spark, small_corpus, monkeypatch):
     assert set(got) == set(base)
     for k in got:
         assert abs(got[k] - base[k]) < 1e-9
+
+
+def _own_nodes(plan):
+    """A physical plan's nodes, through the adaptive wrappers, but not
+    into the cached plan below an InMemoryTableScan."""
+    cls = plan.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _own_nodes(plan.executedPlan())
+        return
+    if cls.endswith("QueryStageExec"):
+        yield from _own_nodes(plan.plan())
+        return
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _own_nodes(kids.apply(i))
+
+
+def _cached_build(df) -> list[str]:
+    """The node strings of the plan that fills ``df``'s cache."""
+    cached = df._jdf.queryExecution().withCachedData()
+    assert cached.nodeName() == "InMemoryRelation", "not cached"
+    return [n.simpleString(10_000) for n in _own_nodes(cached.cachedPlan())]
+
+
+def test_pipeline_tokenizes_once(spark, small_corpus):
+    """The shipped-config pipeline runs the keyword regex once per
+    document: one node of the cached mention stream evaluates it (the
+    phrases are pairs of the same token array), and tf-idf reads that
+    cache's keyword rows with no tokenizer of its own."""
+    res = run_pipeline(spark, small_corpus, PipelineConfig(),
+                       id_col="doc_id", text_col="content", lang_col="lang")
+    keyword_regex = "regexp_extract_all(lower(content"
+    mentions = _cached_build(res["mentions"])
+    assert sum(n.count(keyword_regex) for n in mentions) == 1, mentions
+    tfidf = _cached_build(res["tfidf"])
+    assert not [n for n in tfidf if "regexp_extract_all" in n]
+    assert [n for n in tfidf if n.startswith("InMemoryTableScan")
+            and "(concept_type" in n and "= keyword)" in n]
